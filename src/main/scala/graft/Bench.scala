@@ -38,6 +38,18 @@ object Bench {
     else { df.agg(aggs.head, aggs.tail: _*).collect(); () }
   }
 
+  /** The bench session: `local[cpus]`, one shuffle partition per core,
+    * UTC, AQE on. [[PlanDump]] builds the same shape, so dumped plans are
+    * the plans the bench times. */
+  def session(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -69,13 +81,7 @@ object Bench {
           f"[bench] load still ${loadNow}%.2f after ${loadWaitedSec}s — " +
             "running anyway; numbers carry the honest load fields")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     def loadAvg: Double = loadNow
     val loadStart = loadAvg

@@ -1,26 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: write `explain("formatted")` for named registered queries to
   * files (`<outdir>/<name>_<suffix>.txt`) — the optimization-round plan
   * evidence. Usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|ALL>
-  * Bench-identical session shape so the dumped plans match what the bench
-  * times. Queries whose builder executes eagerly (checkpointed builds) run
-  * their build during the dump; use a small SF. */
+  * The session is [[Bench.session]] (`SPARK_GRAFT_CPUS` cores, default 4),
+  * so the dumped plans match what the bench times. Queries whose builder
+  * executes eagerly (checkpointed builds, streaming drains) run their build
+  * during the dump; use a small SF. A query whose build fails is reported
+  * and skipped. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val outDir = Paths.get(args(1))
     val suffix = args(2)
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
     val names: Seq[String] =
       if (args(3) == "ALL") graft.queries.Registry.all.map(_.name).sorted

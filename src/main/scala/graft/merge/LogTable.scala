@@ -2,6 +2,7 @@ package graft.merge
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -10,9 +11,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
 
-/** COMMIT-LOG TABLE — the transactional form of [[ParquetTable]], i.e. the
-  * "commit log / Delta-Iceberg metadata design" every scoped-out composition
-  * in that class points at, built from first principles:
+/** COMMIT-LOG TABLE — the repo's one table format: the Delta/Iceberg
+  * metadata design (immutable data files + an append-only manifest log),
+  * built from first principles. Every managed table — the medallion's
+  * Silver and Gold layers included — is one of these:
   *
   *   - DATA FILES are immutable, uuid-named, written once under
   *     `root/files/` and SHARED across versions — a version never copies
@@ -39,8 +41,9 @@ import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
   *     DERIVED data: racing writers produce identical content, so the
   *     same create-exclusive simply ignores the loser.
   *
-  * What the log buys over the directory-swap table — every composition the
-  * rename design had to reject now just works:
+  * What the log buys over a directory-swap table (rewrite into a staging
+  * directory, rename it over the live one) — every composition that design
+  * would have to reject just works:
   *
   *   - **bucketed × time travel**: a partition-scoped merge commits
   *     remove(touched buckets' files) + add(replacements), so any
@@ -97,6 +100,16 @@ object LogTable {
     * `_change_type`): 'insert' | 'delete'. */
   val ChangeTypeCol = "_change_type"
 
+  /** Entries of `dir`, materialized before the directory stream closes: an
+    * unclosed `Files.list` holds its descriptor until finalization, and
+    * [[LogTable.currentVersion]] lists the log on every commit and read. */
+  private[merge] def listDir(dir: Path): Vector[Path] =
+    Using.resource(Files.list(dir))(_.iterator().asScala.toVector)
+
+  /** Every path under `dir` (pre-order), same closing discipline. */
+  private[merge] def walkDir(dir: Path): Vector[Path] =
+    Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
+
   /** PHYSICAL column name row ids are materialized under when a
     * `dataChange = false` rewrite (OPTIMIZE) rewrites tracked files — the
     * Delta `row_id` materialized-column pattern. Invisible to plain reads
@@ -148,12 +161,10 @@ object LogTable {
     * commit always embeds one). None = never written. This is what lets
     * SQL/batch readers open a log table without declaring a schema. */
   def readSchema(path: String): Option[StructType] = {
-    import scala.jdk.CollectionConverters._
     val logDir = Paths.get(path, "_log")
     if (!Files.exists(logDir)) return None
     val mapper = new ObjectMapper()
-    val names = Files.list(logDir).iterator().asScala
-      .map(_.getFileName.toString).toSeq
+    val names = listDir(logDir).map(_.getFileName.toString)
     val V = """(\d{20})\.json""".r
     val Cp = """(\d{20})\.checkpoint\.json""".r
     val versions = names.collect { case V(d) => d.toLong }.sorted
@@ -304,13 +315,13 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   /** Version numbers present in the log, ascending (vacuum may have pruned
     * a prefix). Empty before the first commit. */
   def history(): Seq[Long] =
-    Files.list(logDir).iterator().asScala.map(_.getFileName.toString)
-      .collect { case VName(d) => d.toLong }.toSeq.sorted
+    LogTable.listDir(logDir).map(_.getFileName.toString)
+      .collect { case VName(d) => d.toLong }.sorted
 
   /** Versions at which a checkpoint exists, ascending. */
   def checkpointVersions(): Seq[Long] =
-    Files.list(logDir).iterator().asScala.map(_.getFileName.toString)
-      .collect { case CpName(d) => d.toLong }.toSeq.sorted
+    LogTable.listDir(logDir).map(_.getFileName.toString)
+      .collect { case CpName(d) => d.toLong }.sorted
 
   /** Newest committed version; 0 = never written. */
   def currentVersion: Long = history().lastOption.getOrElse(0L)
@@ -755,8 +766,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         try out.write.mode("overwrite").parquet(tmp.toString)
         finally mortonKeys.foreach(_ => pdf.unpersist())
       case Some((keys, n)) =>
-        // one file per touched bucket, rows sorted on the keys for
-        // row-group stats — the ParquetTable write discipline
+        // one shuffle keyed by bucket → one file per touched bucket (without
+        // it every task writes a sliver into every bucket); rows sorted on
+        // the keys so parquet records tight per-row-group min/max stats and
+        // keyed scans (merge probes, point lookups) skip whole row groups
+        // (PlanAuditSpec pins it)
         val pKeys = keys.map(k => physOf(as, k))
         val pBucket = pmod(xxhash64(pKeys.map(col).toIndexedSeq: _*), lit(n)).cast("int")
         pdf.withColumn(BucketCol, pBucket)
@@ -764,7 +778,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           .sortWithinPartitions((BucketCol +: pKeys).map(col).toIndexedSeq: _*)
           .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
     }
-    val staged: Seq[(Path, Int)] = Files.walk(tmp).iterator().asScala
+    val staged: Seq[(Path, Int)] = LogTable.walkDir(tmp)
       .filter(_.toString.endsWith(".parquet")).map { p =>
         val b = p.getParent.getFileName.toString match {
           case s if s.startsWith(s"$BucketCol=") =>
@@ -772,7 +786,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           case _ => -1
         }
         (p, b)
-      }.toSeq
+      }
     // staged-file key for the per-file aggregates below: the BASENAME ALONE
     // is ambiguous under bucketing (one task writing two buckets emits the
     // same part-NNNNN name in both bucket dirs), so key by dir/name
@@ -856,7 +870,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   }
 
   private def deleteRec(p: Path): Unit = if (Files.exists(p))
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    LogTable.walkDir(p).reverse.foreach(Files.deleteIfExists(_))
 
   private def dropFiles(entries: Seq[FileEntry]): Unit =
     entries.foreach(e => Files.deleteIfExists(filesDir.resolve(e.name)))
@@ -1228,39 +1242,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     committed
   }
 
-  /** MERGE: unbucketed = full rewrite of `f(live, batch)`; bucketed = the
-    * partition-scoped form — only buckets whose keys appear in the batch
-    * are re-derived and replaced in the manifest, untouched buckets keep
-    * their files byte-identical AND every version stays readable (the
-    * composition the rename design rejects). `f` must be keyed (rows never
-    * migrate buckets — the [[ParquetTable.merge]] contract). DV entries
-    * referencing replaced files simply stop matching (the rewrite
-    * materialized them). */
-  def merge(batch: DataFrame)(f: (DataFrame, DataFrame) => DataFrame): Unit =
-    bucketBy match {
-      case None => commitLoop(5) { snap =>
-        val cur = snap.map(m => readData(m.files, m.dv, m.schema)).getOrElse(emptyDf)
-        val fresh = writeFiles(withChecks(f(cur, batch), snap),
-          snap.map(_.schema).getOrElse(schema))
-        Some((fresh, Seq.empty, fresh))
-      }
-      case Some(_) => commitLoop(5) { snap =>
-        // the touched-bucket probe deliberately re-reads the batch PLAN
-        // rather than a persisted copy: it projects only the bucket keys,
-        // so the un-persisted form is a column-pruned scan — measured
-        // CHEAPER than paying a full-row cache materialization that the
-        // probe then reads unpruned (r13 sf1 A/B)
-        val touched = batch.select(bucketExpr.as(BucketCol))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val (hit, kept) = snap.map(_.files).getOrElse(Seq.empty)
-          .partition(e => touched.contains(e.bucket))
-        val dv = snap.map(_.dv).getOrElse(Seq.empty)
-        val as = snap.map(_.schema).getOrElse(schema)
-        val cur = if (hit.isEmpty) emptyDf(as) else readData(hit, dv, as)
-        val fresh = writeFiles(withChecks(f(cur, batch), snap), as)
-        Some((kept ++ fresh, dv, fresh))
-      }
-    }
+  /** MERGE: [[occMerge]] without a transaction id — unbucketed = full
+    * rewrite of `f(live, batch)`; bucketed = the partition-scoped form. */
+  def merge(batch: DataFrame)(f: (DataFrame, DataFrame) => DataFrame): Unit = {
+    occMerge(batch)(f); ()
+  }
 
   /** Merge-on-read DELETE as a NAMED COMMIT: the new version's delta
     * carries one more positions sidecar, so the delete is time-travelable
@@ -1280,7 +1266,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           else {
             val tmp = Files.createTempDirectory(rootPath, ".write-")
             live.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val part = Files.walk(tmp).iterator().asScala
+            val part = LogTable.walkDir(tmp)
               .find(_.toString.endsWith(".parquet")).get
             val name = s"dv-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
             Files.move(part, filesDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
@@ -1306,25 +1292,29 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   }
 
   /** OCC merge: the commit loop IS the protocol — staging runs lock-free
-    * against an immutable snapshot (which cannot vanish mid-stage, unlike
-    * the rename design), the manifest CAS serializes. Returns attempts.
+    * against an immutable snapshot (which cannot vanish mid-stage: files
+    * live until [[vacuum]]), the manifest CAS serializes. Returns attempts.
     *
     * With `txn = Some((appId, batchId))` the merge is an EXACTLY-ONCE
     * STREAMING SINK (the [[appendOnce]] handshake generalized to arbitrary
     * merges): the content rewrite and the txn watermark land in ONE
-    * commit, so a re-delivered foreachBatch id is a no-op (returns 0
-    * attempts-with-commit — the duplicate check runs inside the loop, so
-    * racing redundant deliveries resolve through the CAS). This is what a
-    * maintained-state sink (the s44 graph ingest) needs: append-only
-    * `appendOnce` cannot express a state REWRITE per batch.
+    * commit, so a re-delivered foreachBatch id is a no-op (no version is
+    * cut — the duplicate check runs inside the loop, so racing redundant
+    * deliveries resolve through the CAS). This is what a maintained-state
+    * sink (the s44 graph ingest) needs: append-only `appendOnce` cannot
+    * express a state REWRITE per batch.
     *
-    * BUCKETED tables get the partition-scoped form ([[merge]]'s): only
-    * buckets whose keys appear in `batch` are handed to `f` and replaced
-    * in the manifest; untouched buckets keep their files byte-identical.
-    * That makes a per-micro-batch maintained-state commit O(touched
-    * buckets + batch), not O(table) — the r11 s44 scale flag. `f` must be
-    * keyed (rows never migrate buckets — the [[ParquetTable.merge]]
-    * contract). */
+    * BUCKETED tables get the partition-scoped form: only buckets whose keys
+    * appear in `batch` are handed to `f` and replaced in the manifest;
+    * untouched buckets keep their files byte-identical AND every version
+    * stays readable. That makes a per-micro-batch commit O(touched
+    * buckets + batch), not O(table). A batch that touches no bucket (the
+    * empty micro-batch every availableNow drain ends with) cuts no version
+    * and runs no write job. `f` must be keyed on the bucket keys (every
+    * [[Merge]] flavor is): output rows landing in a bucket the batch did
+    * not touch would silently diverge from the unbucketed result, so the
+    * merge fails loudly instead. DV entries referencing replaced files
+    * simply stop matching (the rewrite materialized them). */
   def occMerge(batch: DataFrame, maxAttempts: Int = 5,
                txn: Option[(String, Long)] = None)
               (f: (DataFrame, DataFrame) => DataFrame): Int =
@@ -1339,17 +1329,29 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             snap.map(_.schema).getOrElse(schema))
           Some((fresh, Seq.empty, fresh))
         case Some(_) =>
-          // un-persisted on purpose — the probe is a column-pruned scan of
-          // the batch plan; see [[merge]]'s bucketed branch (r13 sf1 A/B)
+          // the touched-bucket probe deliberately re-reads the batch PLAN
+          // rather than a persisted copy: it projects only the bucket keys,
+          // so the un-persisted form is a column-pruned scan — measured
+          // CHEAPER than paying a full-row cache materialization that the
+          // probe then reads unpruned (r13 sf1 A/B)
           val touched = batch.select(bucketExpr.as(BucketCol))
             .distinct().collect().map(_.getInt(0)).toSet
-          val (hit, kept) = snap.map(_.files).getOrElse(Seq.empty)
-            .partition(e => touched.contains(e.bucket))
-          val dv = snap.map(_.dv).getOrElse(Seq.empty)
-          val as = snap.map(_.schema).getOrElse(schema)
-          val cur = if (hit.isEmpty) emptyDf(as) else readData(hit, dv, as)
-          val fresh = writeFiles(withChecks(f(cur, batch), snap), as)
-          Some((kept ++ fresh, dv, fresh))
+          if (touched.isEmpty) None // empty batch: nothing to rewrite
+          else {
+            val (hit, kept) = snap.map(_.files).getOrElse(Seq.empty)
+              .partition(e => touched.contains(e.bucket))
+            val dv = snap.map(_.dv).getOrElse(Seq.empty)
+            val as = snap.map(_.schema).getOrElse(schema)
+            val cur = if (hit.isEmpty) emptyDf(as) else readData(hit, dv, as)
+            val fresh = writeFiles(withChecks(f(cur, batch), snap), as)
+            val stray = fresh.map(_.bucket).toSet -- touched
+            if (stray.nonEmpty) dropFiles(fresh)
+            require(stray.isEmpty,
+              s"merge emitted rows outside the batch's buckets " +
+                s"(${stray.toSeq.sorted.mkString(",")}) — the merge function " +
+                "must be keyed on the table's bucket keys")
+            Some((kept ++ fresh, dv, fresh))
+          }
       }
     }
 
@@ -2034,11 +2036,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       (v, d.tsMs, op, d.dataChange, d.add.size, d.remove.size)
     }
 
+  /** Drop all but the newest `retainLast` versions, then every file no
+    * retained version references and every `.write-*` leftover. The live
+    * version always survives: `vacuum(0)` (Delta's `RETAIN 0`) empties the
+    * history exactly as `vacuum(1)` does. Returns the dropped versions. */
   def vacuum(retainLast: Int = 1): Seq[Long] = {
-    require(retainLast >= 1, "must retain at least the live version")
+    require(retainLast >= 0, s"retainLast must be >= 0, got $retainLast")
     val hs = history()
     if (hs.isEmpty) return Seq.empty
-    val (drop, keep) = hs.splitAt(math.max(0, hs.size - retainLast))
+    val (drop, keep) = hs.splitAt(math.max(0, hs.size - math.max(1, retainLast)))
     if (drop.nonEmpty) writeCheckpoint(snapshotAt(keep.head))
     val referenced: Set[String] = keep.flatMap { v =>
       val m = snapshotAt(v)
@@ -2047,11 +2053,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     drop.foreach(v => Files.deleteIfExists(manifestPath(v)))
     checkpointVersions().filter(_ < keep.head)
       .foreach(v => Files.deleteIfExists(checkpointPath(v)))
-    Files.list(filesDir).iterator().asScala.toSeq
+    LogTable.listDir(filesDir)
       .filterNot(p => referenced.contains(p.getFileName.toString))
       .foreach(Files.deleteIfExists(_))
     // crashed-write leftovers (temp dirs that never committed)
-    Files.list(rootPath).iterator().asScala.toSeq
+    LogTable.listDir(rootPath)
       .filter(_.getFileName.toString.startsWith(".write-"))
       .foreach(deleteRec)
     drop

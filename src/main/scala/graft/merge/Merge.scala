@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Conventions: `target` and `batch` share a schema; `keys` is the natural
   * key. Every function returns the new target content — persistence is the
-  * caller's job (see [[ParquetTable]] for rewrite-and-swap).
+  * caller's job: [[LogTable.merge]] commits `f(live, batch)` — bucket-scoped
+  * on a bucketed table.
   */
 object Merge {
 
@@ -97,7 +98,7 @@ object Merge {
     * matching batch row satisfies `guard` — and batch rows are never
     * inserted. Plan shape: one left-anti join on `keys` (+ guard), so the
     * same single-shuffle cost class as M1, and through
-    * [[ParquetTable.merge]] only the buckets holding requested keys are
+    * [[LogTable.merge]] only the buckets holding requested keys are
     * rewritten — O(touched partitions) erasure, which is the property that
     * makes per-user deletion affordable on a 100 TB table. Idempotent by
     * construction: re-applying the same deletion batch is a no-op. */
@@ -134,8 +135,8 @@ object Merge {
     * (one shuffle, broadcast when the batch is small), each joined row emits
     * up to two output rows via an exploded 2-struct array — the join is
     * never recomputed. Chained applications stack plans; callers applying
-    * many batches should materialize between (the ParquetTable/LogTable
-    * merge path does this by construction).
+    * many batches should materialize between (the [[LogTable]] merge path
+    * does this by construction).
     */
   def scd2(target: DataFrame, batch: DataFrame, keys: Seq[String],
            trackedCols: Seq[String], fromCol: String = "eff_from",

@@ -568,12 +568,10 @@ object Dedup {
       prev.select(col("doc_id"), col("cluster_id").as("prev_cluster"))
         .join(next, Seq("doc_id"))
         .filter(col("cluster_id") =!= col("prev_cluster")).count()
-    val debug = sys.env.contains("GRAFT_DEBUG_PROPAGATE")
     var prevSum = if (numericIds) labelSum(labels) else null
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val tRound = System.nanoTime()
       // (a) edge step: min label over self + neighbors
       val viaEdges = edges
         .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
@@ -597,8 +595,6 @@ object Dedup {
       labels.unpersist()
       labels = next
       i += 1
-      if (debug) System.err.println(
-        f"[propagate] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     edges.unpersist()
     if (!converged)
@@ -639,14 +635,6 @@ object Dedup {
                              newDocs: DataFrame, idCol: String,
                              maxIters: Int = 20,
                              reliableCheckpoint: Boolean = false): DataFrame = {
-    val debug = sys.env.contains("GRAFT_DEBUG_PROPAGATE")
-    def stage[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debug) System.err.println(
-        f"[incremental] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val prior = existingLabels.select(col("doc_id"), col("cluster_id"))
     val p = newPairs.persist()
     val endpoints = p.select(col("doc_a").as("doc_id"))
@@ -656,21 +644,21 @@ object Dedup {
     // affected region — broadcast-sized in any realistic batch
     val touched = prior.join(endpoints, Seq("doc_id"))
       .select(col("cluster_id")).distinct().persist()
-    stage("touched materialize")(touched.count())
+    touched.count()
     val affected = prior.join(broadcast(touched), Seq("cluster_id"))
       .select(col("doc_id"), col("cluster_id")).persist()
-    stage("affected materialize")(affected.count())
+    affected.count()
     val starEdges = affected.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
     val seed = affected
       .unionByName(newDocs.select(col(idCol).as("doc_id"), col(idCol).as("cluster_id")))
-    val active = stage("active propagate")(propagate(
+    val active = propagate(
       p.select(col("doc_a"), col("doc_b")).unionByName(starEdges),
-      seed, maxIters, reliableCheckpoint))
+      seed, maxIters, reliableCheckpoint)
     val untouchedPrior = prior.join(broadcast(touched), Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
     val out = untouchedPrior.unionByName(active).persist()
-    stage("out materialize")(out.count()) // before releasing intermediates
+    out.count() // before releasing intermediates
     active.unpersist(); affected.unpersist(); touched.unpersist(); p.unpersist()
     out
   }

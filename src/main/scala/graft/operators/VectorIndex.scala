@@ -27,8 +27,8 @@ import graft.functions.VectorFunctions
   * directory and atomically flip the `_gen` pointer — in-flight readers
   * finish on the generation they opened (snapshot isolation,
   * ServeDuringRetrainSpec); incremental maintenance appends new codes to
-  * the live generation's cell partitions (parquet append per partition —
-  * the [[graft.merge.ParquetTable]] bucketed-append shape). [[vacuum]] is
+  * the live generation's cell partitions (parquet append per partition,
+  * hive-partitioned by cell). [[vacuum]] is
   * the one IN-PLACE verb (per-cell swap inside the live generation) —
   * schedule it like any maintenance window, or retrain instead.
   *
@@ -214,9 +214,9 @@ final class VectorIndex(spark: SparkSession, root: String,
     else None
 
   /** Physically remove tombstoned codes: rewrite ONLY the cell partitions
-    * that contain deleted ids (staging write + per-partition dir swap — the
-    * [[graft.merge.ParquetTable]] bucketed-swap shape; untouched cells keep
-    * their files byte-identical), then drop the tombstone set. A cell whose
+    * that contain deleted ids (staging write + per-partition directory
+    * swap; untouched cells keep their files byte-identical), then drop the
+    * tombstone set. A cell whose
     * codes are all deleted simply loses its partition directory. Queries
     * before and after vacuum return identical results — vacuum changes the
     * COST of masking (anti-join per query → nothing), not the answer. */
@@ -260,8 +260,7 @@ final class VectorIndex(spark: SparkSession, root: String,
     * and the full re-encoded code set are staged beside the live index,
     * then cut over by directory rename: the previous generation's
     * meta/index/tombstones are RETIRED INTO `root/.v-<gen>` (rename only,
-    * no data copied — the [[graft.merge.ParquetTable]] version-store
-    * design), so the old version stays fully queryable via [[version]]
+    * no data copied), so the old version stays fully queryable via [[version]]
     * during and after the cutover, with its own tombstone set. Existing
     * tombstones are folded into the rebuild input (a retrain is also a
     * vacuum), so the new generation starts with an empty tombstone set.

@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * Delta keeps stats in the transaction log and Iceberg in manifest files).
   * Here the manifest is a small parquet table `<dir>/_file_stats` (leading
   * underscore → invisible to Spark's file index, same convention as
-  * `_SUCCESS` and [[graft.merge.ParquetTable]]'s `_gen` marker) holding one
-  * row per data file with min/max per stat column:
+  * `_SUCCESS`) holding one row per data file with min/max per stat column.
+  * (Managed tables keep the same stats per file IN their commit log
+  * instead — [[graft.merge.LogTable.readRange]]; this manifest serves plain
+  * parquet directories.)
   *
   *  - [[collectStats]] builds it with ONE distributed aggregation grouped by
   *    `input_file_name()` — no driver-side per-file loop; cost is a single
@@ -55,9 +57,8 @@ object DataSkipping {
   }
 
   /** File names are stored RELATIVE to the data directory (basename, not
-    * URI): the manifest then survives directory swaps, hardlink clones
-    * ([[graft.merge.ParquetTable.cloneTo]]), and machine moves — the same
-    * reason Delta's log records relative paths. */
+    * URI): the manifest then survives directory moves, hardlink copies and
+    * machine moves — the same reason Delta's log records relative paths. */
   private def baseName: Column =
     regexp_replace(input_file_name(), "^.*/", "")
 
@@ -87,22 +88,6 @@ object DataSkipping {
     * rewrite — the manifest describes a snapshot, not a live view. */
   def collectStats(spark: SparkSession, dir: String, statCols: Seq[String]): Unit =
     writeManifest(spark, dir, statsOver(spark.read.parquet(dir), statCols))
-
-  /** Incremental manifest maintenance for APPEND-only writes: stats are
-    * computed over `addedFiles` ONLY (names relative to `dir`) and unioned
-    * with the existing manifest — O(new data), never a table rescan; the
-    * Delta write-path behavior. */
-  def appendStats(spark: SparkSession, dir: String, statCols: Seq[String],
-                  addedFiles: Seq[String]): Unit = {
-    if (addedFiles.isEmpty) return
-    val fresh = statsOver(
-      spark.read.parquet(addedFiles.map(f => s"$dir/$f"): _*), statCols)
-    val old = manifest(spark, dir)
-    writeManifest(spark, dir,
-      old.map(_.unionByName(fresh)).getOrElse(fresh).localCheckpoint(true))
-    // localCheckpoint: the union reads the OLD manifest files, which
-    // writeManifest is about to delete — materialize before the swap
-  }
 
   private def manifest(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = java.nio.file.Paths.get(dir, ManifestDir)

@@ -8,7 +8,7 @@ import graft.functions.InterleaveBits
 /** Multi-dimensional data clustering for scan-time skipping (the
   * `OPTIMIZE ZORDER BY` analog).
   *
-  * A single-key sort ([[graft.merge.ParquetTable.writeTo]]'s merge-key sort)
+  * A single-key sort (a bucketed [[graft.merge.LogTable]]'s merge-key sort)
   * gives row-group pruning on the LEADING key only; queries filtering on a
   * second column scan everything. Z-ordering sorts by the Morton interleave
   * of both columns, so every row group covers a small rectangle of the

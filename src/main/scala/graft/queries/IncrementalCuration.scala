@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.merge.ParquetTable
+import graft.merge.LogTable
 import graft.operators.Dedup
 import graft.functions.TextFunctions
 
@@ -15,7 +15,7 @@ import graft.functions.TextFunctions
   * and refresh the final selection so it is bit-identical to running d49
   * from scratch over everything ingested.
   *
-  * What is stored (all [[graft.merge.ParquetTable]]s under one root —
+  * What is stored (all [[graft.merge.LogTable]]s under one root —
   * d18's persisted-substrate discipline, applied to exact curation):
   *   - `meta (doc_id, source)` — the ingested-id set; re-deliveries
   *     anti-join against it and NO-OP (the M1 insert-only-merge property,
@@ -49,7 +49,7 @@ import graft.functions.TextFunctions
 final class IncrementalCuration(spark: SparkSession, root: String) {
 
   private def table(name: String, ddl: String) =
-    new ParquetTable(spark, s"$root/$name", StructType.fromDDL(ddl))
+    new LogTable(spark, s"$root/$name", StructType.fromDDL(ddl))
 
   private val meta = table("meta", "doc_id bigint, source string")
   private val bg = table("bg", "doc_id bigint, pos int, w1 string, w2 string")
@@ -87,28 +87,21 @@ final class IncrementalCuration(spark: SparkSession, root: String) {
       // The six appends target DISJOINT tables and read only checkpointed
       // relations (fresh, bgF, cs) or the frozen bench side — independent
       // write jobs, so overlap them instead of paying six sequential
-      // job+commit floors (guide §2.6 "overlap independent jobs"; the
-      // Medallion wave-2 thread idiom, failures propagated explicitly).
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      def job(body: => Unit) = new Thread(() =>
-        try body catch { case t: Throwable => failure.compareAndSet(null, t) })
-      val wave = Seq(
-        job(meta.append(fresh.select(col("doc_id"), col("source")))),
-        job(bg.append(bgF)),
-        job(cbp.append(bgF.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))),
-        job(cpp.append(bgF.groupBy(col("w1")).agg(count(lit(1)).as("cp")))),
-        job(fp.append(fresh.select(col("doc_id"),
-          TextFunctions.fingerprintNative(col("text")).as("fp")))),
-        job(contam.append(fresh.select(col("doc_id"))
+      // job+commit floors (guide §2.6 "overlap independent jobs").
+      graft.ops.JobWave.run(Seq(
+        () => meta.append(fresh.select(col("doc_id"), col("source"))),
+        () => bg.append(bgF),
+        () => cbp.append(bgF.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))),
+        () => cpp.append(bgF.groupBy(col("w1")).agg(count(lit(1)).as("cp"))),
+        () => fp.append(fresh.select(col("doc_id"),
+          TextFunctions.fingerprintNative(col("text")).as("fp"))),
+        () => contam.append(fresh.select(col("doc_id"))
           .join(sizes, Seq("doc_id"), "left")
           .join(shared, Seq("doc_id"), "left")
           .select(col("doc_id"),
             when(coalesce(col("n_shingles"), lit(0L)) === 0, lit(0.0))
               .otherwise(coalesce(col("n_shared"), lit(0L)).cast("double") /
                 col("n_shingles")).as("contamination")))))
-      wave.foreach(_.start())
-      wave.foreach(_.join())
-      if (failure.get() != null) throw failure.get()
     }
     n
   }

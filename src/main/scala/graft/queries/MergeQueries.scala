@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.merge.Merge
+import graft.merge.{LogTable, Merge}
 import graft.ops.Relational
 import graft.sources.Tables
 
@@ -173,8 +173,8 @@ object MergeQueries {
            |ORDER BY l_returnflag, l_linestatus""".stripMargin),
     "M5 explicit-column-list upsert (ref Gold/06-gold.py:31-80)")
 
-  /** Time travel over the versioned [[graft.merge.ParquetTable]] — the
-    * lakehouse `VERSION AS OF` capability as a verified row. A real table is
+  /** Time travel over a [[graft.merge.LogTable]] — the lakehouse
+    * `VERSION AS OF` capability as a verified row. A real table is
     * written through three version cuts (overwrite, M1 insert-only merge, M4
     * SCD1 merge — each the verbatim semantics of q08/q09), then EVERY
     * readable version is read back via `readVersion` and summarized. The
@@ -182,17 +182,17 @@ object MergeQueries {
     * proves the version store returns each HISTORICAL state exactly — not
     * the current one, not a mix.
     *
-    * Scale: versions are rename-retired (no data copied); the per-version
-    * summary is one agg each over a partition-parallel parquet scan. The
-    * driver fold is over `history()` — bounded by retention, O(versions). */
+    * Scale: a version references immutable files (no data copied); the
+    * per-version summary is one agg each over a partition-parallel parquet
+    * scan. The driver fold is over `history()` — bounded by retention,
+    * O(versions). */
   val tt = QueryDef(
     "q49_time_travel",
     (spark, dir) => {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q49-tt-").toString
-      val t = new graft.merge.ParquetTable(spark, s"$root/orders_v", o.schema,
-        keepVersions = 4)
+      val t = new LogTable(spark, s"$root/orders_v", o.schema)
       val target = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
       val batch1 = o.filter(col("o_totalprice") > 150000)
       val batch2 = o.filter(col("o_orderstatus") === "F")
@@ -229,13 +229,13 @@ object MergeQueries {
            |  UNION ALL
            |  SELECT 3, count(*), round(sum(o_totalprice), 2) FROM v3)
            |SELECT version, n, sum_price FROM s ORDER BY version""".stripMargin),
-    "Lakehouse time travel: versioned rename-swap table, VERSION AS OF reads (Delta analog)")
+    "Lakehouse time travel: commit-log table, VERSION AS OF reads (Delta analog)")
 
   /** Change data feed over the same versioned table as q49, extended with a
     * delete-where cut (v4) so every `_change_type` appears: v1 overwrite,
     * v2 M1 insert-only (inserts), v3 M4 SCD1 (updates), v4 delete-where
-    * (deletes). [[graft.merge.ParquetTable.changes]] computes the per-pair
-    * keyed snapshot diff; the oracle recomputes each version state in CTEs
+    * (deletes). [[graft.ops.IncrementalView.keyedChanges]] computes the
+    * per-pair keyed snapshot diff; the oracle recomputes each version state in CTEs
     * (q49's, verified) and re-states the diff as NOT EXISTS / join pairs.
     * A hash match proves the feed reports EXACTLY the row-level delta of
     * every commit — images, types, and commit attribution.
@@ -249,12 +249,11 @@ object MergeQueries {
     * v2 M1 insert-only (inserts), v3 M4 SCD1 (updates, incl. the F→R status
     * change that MOVES rows across the q51 group key), v4 delete-where. */
   private[queries] def ordersVersioned(spark: org.apache.spark.sql.SparkSession, dir: String,
-                              prefix: String): graft.merge.ParquetTable = {
+                              prefix: String): LogTable = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
     val root = FixtureDirs.create(prefix).toString
-    val t = new graft.merge.ParquetTable(spark, s"$root/orders_v", o.schema,
-      keepVersions = 5)
+    val t = new LogTable(spark, s"$root/orders_v", o.schema)
     val target = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
     val batch1 = o.filter(col("o_totalprice") > 150000)
     val batch2 = o.filter(col("o_orderstatus") === "F")
@@ -271,7 +270,7 @@ object MergeQueries {
     "q50_change_data_feed",
     (spark, dir) => {
       val t = ordersVersioned(spark, dir, "q50-cdf-")
-      t.changes(1, 4, Seq("o_orderkey"))
+      graft.ops.IncrementalView.keyedChanges(t, 1, 4, Seq("o_orderkey"))
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           unix_micros(col("o_orderdate").cast("timestamp")).as("o_date_us"), // NTZ→LTZ exact under the session's UTC tz
           col("_change_type"), col("_commit_version"))
@@ -369,7 +368,7 @@ object MergeQueries {
       val prior = t.readVersion(1)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("sum_cents"))
-      val feed = t.changes(1, 4, Seq("o_orderkey"))
+      val feed = graft.ops.IncrementalView.keyedChanges(t, 1, 4, Seq("o_orderkey"))
         .withColumn("sum_cents", cents(col("o_totalprice")))
       graft.ops.IncrementalView.applyDelta(prior, feed,
           Seq("o_orderstatus"), Seq("sum_cents"))
@@ -441,8 +440,8 @@ object MergeQueries {
     * table is written with FOUR columns, evolved to add `o_orderpriority`,
     * and the post-evolution batch appends with the new column — the
     * pre-evolution files are never rewritten
-    * ([[graft.merge.ParquetTable.evolve]]; byte-identity pinned by
-    * SchemaEvolutionSpec). The evolved read NULL-FILLS old rows, and the
+    * ([[graft.merge.LogTable.evolve]], a metaData commit; byte-identity
+    * pinned by SchemaEvolutionSpec). The evolved read NULL-FILLS old rows, and the
     * aggregate groups them under a sentinel label, so the oracle (which
     * reconstructs the same split from the raw table) hash-matches ONLY if
     * null-fill returns exactly the pre-evolution rows — not dropped, not
@@ -455,14 +454,14 @@ object MergeQueries {
       val narrow = full.select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q53-evo-").resolve("orders_e").toString
-      val t = new graft.merge.ParquetTable(spark, root, narrow.schema)
+      val t = new LogTable(spark, root, narrow.schema)
       t.overwrite(narrow.filter(col("o_orderdate") < cut))
-      val t2 = t.evolve(narrow.schema.add("o_orderpriority",
+      t.evolve(narrow.schema.add("o_orderpriority",
         org.apache.spark.sql.types.StringType))
-      t2.append(full.select(col("o_orderkey"), col("o_orderstatus"),
+      t.append(full.select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
         .filter(col("o_orderdate") >= cut))
-      t2.read()
+      t.read()
         .groupBy(coalesce(col("o_orderpriority"), lit("PRE-EVOLUTION")).as("prio"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
         .orderBy(col("prio"))
@@ -474,7 +473,7 @@ object MergeQueries {
     "Schema evolution: additive column, old files untouched and read null-filled (mergeSchema analog)")
 
   /** Shallow clone + copy-on-write divergence as a verified row: the
-    * source table is cloned ([[graft.merge.ParquetTable.cloneTo]] — pure
+    * source table is cloned ([[graft.merge.LogTable.cloneTo]] — pure
     * hardlinks, zero bytes copied; CloneSpec pins the inode sharing), the
     * CLONE takes an SCD1 merge, and the row reports BOTH tables' summaries.
     * The oracle recomputes source = the original slice and clone = merge
@@ -488,7 +487,7 @@ object MergeQueries {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q54-clone-")
-      val t = new graft.merge.ParquetTable(spark, root.resolve("src").toString, o.schema)
+      val t = new LogTable(spark, root.resolve("src").toString, o.schema)
       t.overwrite(o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")))
       val c = t.cloneTo(root.resolve("dup").toString)
       val batch = o.filter(col("o_orderstatus") === "F")
@@ -521,26 +520,26 @@ object MergeQueries {
     * four keyed appends leave 4 small files per bucket — the streaming-
     * ingest pathology that kills scan throughput at 100 TB (file-open cost
     * dominates once files ≪ row-group size) — then
-    * [[graft.merge.ParquetTable.compact]] rewrites each oversized bucket to
-    * one file. The row `require`s the physical file count actually dropped,
-    * and the aggregate over the compacted table hash-matches the oracle
-    * over the raw union — content-preservation under the rewrite is the
-    * verified property (byte-identity of untouched buckets is pinned by
-    * MergePropertiesSpec). Cost model at scale: O(oversized buckets) — the
-    * bucket directories below the threshold are not even re-listed. */
+    * [[graft.merge.LogTable.compact]] rewrites the table to one file per
+    * bucket in a `dataChange = false` commit. The row `require`s the
+    * physical file count actually dropped, and the aggregate over the
+    * compacted table hash-matches the oracle over the raw union —
+    * content-preservation under the rewrite is the verified property.
+    * Cost model at scale: one rewrite of the live files, decided from the
+    * manifest alone (no directory listing). */
   val opt = QueryDef(
     "q55_compaction",
     (spark, dir) => {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val root = FixtureDirs.create("q55-opt-").resolve("orders_o").toString
-      val t = new graft.merge.ParquetTable(spark, root, o.schema,
+      val t = new LogTable(spark, root, o.schema,
         bucketBy = Some((Seq("o_orderkey"), 8)))
       (0 until 4).foreach { k =>
         t.append(o.filter(pmod(col("o_orderkey"), lit(4)) === k))
       }
       val before = t.read().inputFiles.length
-      t.compact(maxFilesPerBucket = 1)
+      t.compact()
       val after = t.read().inputFiles.length
       require(after < before,
         s"compaction reduced nothing ($before -> $after files)")
@@ -556,7 +555,7 @@ object MergeQueries {
     * MERGE arm (`WHEN MATCHED AND cond THEN DELETE`): erasure requests (the
     * orderkeys of one customer stratum) are merged into a BUCKETED table,
     * deleting matched orders only where the guard holds (pre-1995 rows —
-    * the conditional arm). Through [[graft.merge.ParquetTable.merge]] only
+    * the conditional arm). Through [[graft.merge.LogTable.merge]] only
     * buckets holding requested keys are rewritten — O(touched partitions)
     * erasure, the property that makes per-user deletion affordable at
     * 100 TB. The oracle re-states the erasure relationally
@@ -568,7 +567,7 @@ object MergeQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q56-del-").resolve("orders_d").toString
-      val t = new graft.merge.ParquetTable(spark, root, o.schema,
+      val t = new LogTable(spark, root, o.schema,
         bucketBy = Some((Seq("o_orderkey"), 8)))
       t.overwrite(o)
       val requests = o.filter(pmod(col("o_custkey"), lit(7)) === 3)
@@ -602,8 +601,7 @@ object MergeQueries {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q57-rst-").toString
-      val t = new graft.merge.ParquetTable(spark, s"$root/orders_r", o.schema,
-        keepVersions = 4)
+      val t = new LogTable(spark, s"$root/orders_r", o.schema)
       val target = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
       val batch1 = o.filter(col("o_totalprice") > 150000)
       val batch2 = o.filter(col("o_orderstatus") === "F")
@@ -646,27 +644,26 @@ object MergeQueries {
     "RESTORE: roll-forward to a prior version's content, history preserved (Delta RESTORE analog)")
 
   /** VACUUM (the Delta `VACUUM` analog) as a verified row: q49's
-    * three-version history, then `vacuum(retainLast = 1)` physically expires
-    * version 1 while keeping the newest retained version readable. The row
+    * three-version history, then `vacuum(retainLast = 2)` physically expires
+    * version 1 while keeping the newest older version readable. The row
     * emits the per-version summary of the POST-vacuum history — a hash match
     * pins both halves of the contract at once: the live state (v3) is
     * untouched by the GC, and the surviving retained version (v2) still
     * reads its exact historical state (not the current one, not a mix).
-    * The destructive half — version trees physically gone, reads of expired
-    * versions failing loudly, shallow-clone hardlinks unaffected — is
-    * VacuumSpec's.
+    * The destructive half — expired manifests and unreferenced files
+    * physically gone, reads of expired versions failing loudly,
+    * shallow-clone hardlinks unaffected — is VacuumSpec's.
     *
-    * Scale: VACUUM deletes whole rename-retired version trees — O(#files
-    * expired) filesystem metadata, zero data scanned or copied; on a real
-    * deployment the identical verb runs against the commit-log manifest. */
+    * Scale: VACUUM folds the retained manifests and deletes every file none
+    * of them references — O(#files) filesystem metadata, zero data scanned
+    * or copied. */
   val vac = QueryDef(
     "q62_vacuum",
     (spark, dir) => {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q62-vac-").toString
-      val t = new graft.merge.ParquetTable(spark, s"$root/orders_g", o.schema,
-        keepVersions = 4)
+      val t = new LogTable(spark, s"$root/orders_g", o.schema)
       val target = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
       val batch1 = o.filter(col("o_totalprice") > 150000)
       val batch2 = o.filter(col("o_orderstatus") === "F")
@@ -675,7 +672,7 @@ object MergeQueries {
       t.overwrite(target)                                                 // v1
       t.merge(batch1)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey"))) // v2
       t.merge(batch2)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))  // v3
-      val expired = t.vacuum(retainLast = 1)
+      val expired = t.vacuum(retainLast = 2)
       require(expired == Seq(1L),
         s"expected vacuum to expire exactly version 1, got ${expired.mkString(",")}")
       t.history().map { v =>
@@ -708,14 +705,14 @@ object MergeQueries {
 
   /** Deletion vectors (the Delta merge-on-read DELETE analog) as a verified
     * row. Two delete waves — a GDPR erasure stratum and a retention sweep —
-    * run as [[graft.merge.ParquetTable.deleteWhere]]: each writes only the
-    * POSITIONS of deleted rows into the `_dv` sidecar, and the row
-    * `require`s that the data-file set (paths AND sizes) is UNTOUCHED — the
-    * zero-write-amplification property that makes per-row deletes affordable
-    * at 100 TB, vs q56's copy-on-write rewrite of every touched bucket. The
-    * merge-on-read aggregate is then pinned equal to the post-
-    * [[graft.merge.ParquetTable.materializeDeletes]] aggregate (files now
-    * rewritten, sidecar gone), and BOTH equal the oracle's relational
+    * run as [[graft.merge.LogTable.deleteWhere]]: each commits only a
+    * sidecar of the POSITIONS of deleted rows, and the row `require`s that
+    * the live data-file set is UNTOUCHED — the zero-write-amplification
+    * property that makes per-row deletes affordable at 100 TB, vs q56's
+    * copy-on-write rewrite of every touched bucket. The merge-on-read
+    * aggregate is then pinned equal to the post-[[graft.merge.LogTable.compact]]
+    * aggregate (files rewritten, deletion vectors materialized), and BOTH
+    * equal the oracle's relational
     * restatement — so the hash match proves the sidecar anti-join and the
     * materializing rewrite implement the same DELETE, and the per-wave
     * deleted counts pin that wave 2 matched only rows still live after
@@ -734,32 +731,26 @@ object MergeQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q64-dv-").resolve("orders_dv").toString
-      val t = new graft.merge.ParquetTable(spark, root, o.schema)
+      val t = new LogTable(spark, root, o.schema)
       t.overwrite(o)
-      def dataFiles(): Map[String, Long] =
-        spark.read.parquet(s"$root/current").inputFiles.map { f =>
-          f -> java.nio.file.Files.size(java.nio.file.Paths.get(new java.net.URI(f)))
-        }.toMap
-      val before = dataFiles()
+      val before = t.liveFileNames()
       val cut = lit("1996-01-01").cast("timestamp")
       val n1 = t.deleteWhere(pmod(col("o_custkey"), lit(7)) === 3)      // GDPR stratum
       val n2 = t.deleteWhere(col("o_orderdate") < cut)                  // retention sweep
       require(n1 > 0 && n2 > 0, s"delete waves matched nothing (n1=$n1, n2=$n2)")
-      require(t.deletedPositions == n1 + n2,
-        s"sidecar holds ${t.deletedPositions} positions, expected ${n1 + n2}")
-      require(dataFiles() == before,
+      val hidden = t.readVersion(1).count() - t.read().count()
+      require(hidden == n1 + n2,
+        s"sidecars hide $hidden positions, expected ${n1 + n2}")
+      require(t.liveFileNames() == before,
         "merge-on-read broke: a DELETE changed the data-file set")
       def summarize(df: org.apache.spark.sql.DataFrame, phase: String) =
         df.groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
           .select(lit(phase).as("phase"), col("o_orderstatus"), col("n"), col("sum_price"))
-      // eager checkpoint: the merge-on-read plan must materialize BEFORE the
-      // swap retires the files it reads
-      val mor = summarize(t.read(), "mor").localCheckpoint(true)
-      t.materializeDeletes()
-      require(t.deletedPositions == 0, "materialize left sidecar entries behind")
-      require(dataFiles().keySet.intersect(before.keySet).isEmpty,
-        "materialize swapped no files")
+      val mor = summarize(t.read(), "mor")
+      require(t.compact() > 0, "compaction skipped a DV-carrying table")
+      require(t.liveFileNames().intersect(before).isEmpty,
+        "compaction rewrote no files")
       val waves = Seq(("wave1", "-", n1, 0.0), ("wave2", "-", n2, 0.0))
         .toDF("phase", "o_orderstatus", "n", "sum_price")
       waves.union(mor).union(summarize(t.read(), "materialized"))
@@ -790,21 +781,18 @@ object MergeQueries {
     "Deletion vectors: positions-only merge-on-read DELETE, zero data rewrite, deferred materialization (Delta DV analog)")
 
   /** Deletion vectors × time travel (the r9 verdict's composition ask) as a
-    * verified row. A DV delete on a VERSIONED table is a sub-version commit
-    * (named versions are overwrite boundaries, each cut as a fresh
-    * sidecar-free tree), so `VERSION AS OF v` is pinned at v's cut: after
-    * the delete, the pre-delete version RESURRECTS the deleted rows — read
-    * from the live tree's raw scan before the next cut, and from the
-    * retired `.v-1` tree (whose `_dv` sidecar rode along invisibly) after —
-    * while the live read keeps them deleted. The row `require`s the
-    * zero-write-amplification property (data files untouched by the
-    * delete) and that the OPTIMIZE cut (`overwrite(read())`) starts
-    * sidecar-free; the oracle restates all four phases relationally, so
-    * the hash pins live-vs-historical against the same DELETE predicate.
+    * verified row. A DV delete is a NAMED commit (v2) whose delta adds one
+    * positions sidecar, so `VERSION AS OF 1` RESURRECTS the deleted rows —
+    * both before and after the OPTIMIZE commit (v3) that rewrites the files
+    * and materializes the deletes — while the live read keeps them deleted.
+    * The row `require`s the zero-write-amplification property (data files
+    * untouched by the delete) and that the OPTIMIZE commit rewrote every
+    * file; the oracle restates all four phases relationally, so the hash
+    * pins live-vs-historical against the same DELETE predicate.
     *
     * Scale: identical cost story to q64 (positions-only delete, anti-join
-    * read) — time travel adds only the O(1) retirement rename; historical
-    * reads cost a plain scan of the retained tree. */
+    * read) — time travel costs nothing extra: a historical read is a plain
+    * scan of that version's files, which VACUUM alone removes. */
   val dvtt = QueryDef(
     "q64b_dv_time_travel",
     (spark, dir) => {
@@ -813,29 +801,26 @@ object MergeQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q64b-dvtt-").resolve("orders_dvtt").toString
-      val t = new graft.merge.ParquetTable(spark, root, o.schema, keepVersions = 2)
+      val t = new LogTable(spark, root, o.schema)
       t.overwrite(o)                                                  // v1
-      def dataFiles(): Map[String, Long] =
-        spark.read.parquet(s"$root/current").inputFiles.map { f =>
-          f -> java.nio.file.Files.size(java.nio.file.Paths.get(new java.net.URI(f)))
-        }.toMap
-      val before = dataFiles()
-      val n1 = t.deleteWhere(pmod(col("o_custkey"), lit(5)) === 2)    // GDPR stratum
+      val before = t.liveFileNames()
+      val n1 = t.deleteWhere(pmod(col("o_custkey"), lit(5)) === 2)    // v2: GDPR stratum
       require(n1 > 0, "delete matched nothing — the composition was never exercised")
-      require(dataFiles() == before,
+      require(t.liveFileNames() == before,
         "merge-on-read broke: the DV delete changed the data-file set")
       def summarize(df: org.apache.spark.sql.DataFrame, phase: String) =
         df.groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
           .select(lit(phase).as("phase"), col("o_orderstatus"), col("n"), col("sum_price"))
-      // eager checkpoints: both views must materialize BEFORE the OPTIMIZE
-      // cut retires the files they read
-      val liveMor = summarize(t.read(), "live_mor").localCheckpoint(true)
-      val v1Live = summarize(t.readVersion(1), "v1_live_tree").localCheckpoint(true)
-      t.overwrite(t.read())                                           // v2 (OPTIMIZE)
-      require(t.deletedPositions == 0, "the v2 cut must start sidecar-free")
-      require(t.history() == Seq(1L, 2L),
-        s"expected versions 1,2 readable, got ${t.history().mkString(",")}")
+      // summarized BEFORE the OPTIMIZE commit, read after it: snapshots are
+      // immutable files, so both views still serve their own versions
+      val liveMor = summarize(t.read(), "live_mor")
+      val v1Live = summarize(t.readVersion(1), "v1_live_tree")
+      require(t.compact() > 0, "OPTIMIZE skipped a DV-carrying table")  // v3
+      require(t.liveFileNames().intersect(before).isEmpty,
+        "OPTIMIZE must rewrite the DV-carrying files")
+      require(t.history() == Seq(1L, 2L, 3L),
+        s"expected versions 1,2,3 readable, got ${t.history().mkString(",")}")
       val counts = Seq(("deleted", "-", n1, 0.0))
         .toDF("phase", "o_orderstatus", "n", "sum_price")
       counts.union(liveMor).union(v1Live)
@@ -862,45 +847,48 @@ object MergeQueries {
     "Deletion vectors compose with time travel: pre-delete versions resurrect in historical reads, live read stays deleted (Delta DV-in-commit-log analog)")
 
   /** Optimistic concurrency (the Delta multi-writer commit protocol) as a
-    * verified row. Two writers stage merges against the SAME snapshot —
+    * verified row. Two writers derive merges from the SAME snapshot —
     * writer A an SCD1 upsert, writer B an insert-only merge — with the
-    * expensive distributed work (the staged rewrite) done lock-free. A's
-    * CAS commit lands; B's CAS then FAILS (the commit token moved), its
-    * staged tree is discarded, and B re-derives against A's committed state
-    * through [[graft.merge.ParquetTable.occMerge]] (one clean attempt —
-    * `require`d). The oracle restates the SERIAL schedule A-then-B, so the
-    * hash match proves the protocol is serializable: the lost-update anomaly
-    * (B's first staging, derived from the pre-A snapshot, would have erased
-    * A's updates) is exactly what the failed CAS discarded.
+    * expensive distributed work (the staged rewrite) done lock-free. The
+    * interleaving is FORCED: B's first merge invocation runs A's whole
+    * [[graft.merge.LogTable.occMerge]], so A's commit lands between B's
+    * snapshot read and B's CAS. B's CAS then FAILS (version 2 exists), its
+    * staged files are discarded, and B re-derives against A's committed
+    * state — exactly two attempts, `require`d. The oracle restates the
+    * SERIAL schedule A-then-B, so the hash match proves the protocol is
+    * serializable: the lost-update anomaly (B's first staging, derived
+    * from the pre-A snapshot, would have erased A's updates) is exactly
+    * what the failed CAS discarded.
     *
     * Scale: staging is a full distributed merge with no lock held; only the
-    * token compare + directory rename serializes. On a real deployment the
-    * CAS is the commit log's putIfAbsent of version N+1 (the Delta
-    * protocol); conflict cost is a re-stage, same as Delta's logical
-    * re-attempt. */
+    * create-exclusive of the next manifest serializes (the Delta
+    * putIfAbsent of version N+1); conflict cost is a re-stage, same as
+    * Delta's logical re-attempt. */
   val occ = QueryDef(
     "q66_occ_merge",
     (spark, dir) => {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
       val root = FixtureDirs.create("q66-occ-").resolve("orders_occ").toString
-      val t = new graft.merge.ParquetTable(spark, root, o.schema)
+      val t = new LogTable(spark, root, o.schema)
       t.overwrite(o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")))
       val batchA = o.filter(col("o_orderstatus") === "F")
         .withColumn("o_totalprice", round(col("o_totalprice") + 1000, 2))
         .withColumn("o_orderstatus", lit("R"))
       val batchB = o.filter(col("o_totalprice") > 150000)
-      // both writers stage against the same snapshot, lock-free
-      val sA = t.stageMerge(batchA)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))
-      val sB = t.stageMerge(batchB)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey")))
-      require(t.commitStaged(sA), "writer A's CAS must land on the clean table")
-      require(!t.commitStaged(sB),
-        "writer B's CAS must FAIL — its snapshot predates A's commit " +
-          "(committing it would lose A's updates)")
-      val attempts = t.occMerge(batchB)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey")))
-      require(attempts == 1, s"re-staged B saw contention ($attempts attempts)")
-      require(t.commitToken == 3L,
-        s"commit token must count exactly 3 commits, got ${t.commitToken}")
+      val aDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val attempts = t.occMerge(batchB) { (cur, b) =>
+        if (aDone.compareAndSet(false, true)) {
+          // writer A commits while B is staging against the same snapshot
+          val aAttempts = t.occMerge(batchA)((c, a) => Merge.scd1(c, a, Seq("o_orderkey")))
+          require(aAttempts == 1, s"writer A's CAS must land on the clean table ($aAttempts)")
+        }
+        Merge.insertOnly(cur, b, Seq("o_orderkey"))
+      }
+      require(attempts == 2,
+        s"writer B's first CAS must FAIL and its rebase land cleanly (got $attempts attempts)")
+      require(t.currentVersion == 3L,
+        s"the log must hold exactly 3 commits, got ${t.currentVersion}")
       t.read().groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
         .orderBy(col("o_orderstatus"))
@@ -921,14 +909,14 @@ object MergeQueries {
            |  WHERE NOT EXISTS (SELECT 1 FROM v2 t WHERE t.o_orderkey = b.o_orderkey))
            |SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS sum_price
            |FROM v3 GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
-    "Optimistic concurrency: lock-free staging, CAS commit, conflict rebase == serial schedule (Delta multi-writer protocol analog)")
+    "Optimistic concurrency: lock-free staging, manifest CAS, forced conflict rebase == serial schedule (Delta multi-writer protocol analog)")
 
   /** OCC under SAME-KEY contention (the r9 verdict's contended ask): two
     * writers upsert the SAME user keys with a recency guard, and the
     * interleaving is FORCED — writer A commits between writer B's snapshot
     * read and CAS (B's first merge invocation triggers A's full
-    * stage+commit), so B's first attempt deterministically loses (stale-CAS
-    * or vanished-snapshot, whichever lands first) and its rebase re-derives
+    * stage+commit), so B's first attempt deterministically loses the
+    * manifest CAS and its rebase re-derives
     * against A's committed rows. `require(attempts > 1)` pins that the
     * retry loop actually ran — the OccSpec analog q66 can't assert (its
     * re-stage starts clean).
@@ -961,7 +949,7 @@ object MergeQueries {
       val batchA = latest(ev.filter(col("event_id") > c0 && col("event_id") <= c1))
       val batchB = latest(ev.filter(col("event_id") > c1))
       val root = FixtureDirs.create("q66b-occ-").resolve("events_occ").toString
-      val t = new graft.merge.ParquetTable(spark, root, seed.schema)
+      val t = new LogTable(spark, root, seed.schema)
       t.overwrite(seed)
       val mergeFn = (cur: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =>
         Merge.cdcUpsert(cur, b, Seq("user_id"), "ord")
@@ -976,8 +964,8 @@ object MergeQueries {
       }
       require(attempts > 1,
         s"forced interleaving must make B's first attempt lose (got $attempts)")
-      require(t.commitToken == 3L,
-        s"expected seed + A + B commits, got token ${t.commitToken}")
+      require(t.currentVersion == 3L,
+        s"expected seed + A + B commits, got version ${t.currentVersion}")
       t.read()
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts_us"))
@@ -990,10 +978,9 @@ object MergeQueries {
             |ORDER BY user_id""".stripMargin),
     "OCC same-key contention: forced interleaving, attempts > 1, rebase result == global latest per key regardless of commit order (M3 recency guard)")
 
-  /** COMMIT-LOG TABLE lifecycle (q67) — [[graft.merge.LogTable]], the
-    * transactional form every [[graft.merge.ParquetTable]] scope-out points
-    * at, exercised END-TO-END on ONE table that composes everything the
-    * rename-swap design rejects: BUCKETED (8 buckets on the key) with FILE
+  /** COMMIT-LOG TABLE lifecycle (q67) — [[graft.merge.LogTable]]
+    * exercised END-TO-END on ONE table that composes everything a
+    * directory-swap table would have to reject: BUCKETED (8 buckets on the key) with FILE
     * STATS, through five commits — overwrite, partition-scoped merge
     * (untouched buckets' files shared across versions), a DV delete that
     * is a NAMED version (data files untouched — `require`d), then a

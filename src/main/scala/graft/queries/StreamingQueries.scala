@@ -197,13 +197,13 @@ object StreamingQueries {
 
   /** K2 — foreachBatch MERGE sink as a driver-verifiable query: stream the
     * events table in update mode, each micro-batch M5-upserted into a
-    * ParquetTable keyed by event_type; the final table equals the batch
+    * LogTable keyed by event_type; the final table equals the batch
     * aggregate (ref Upserter foreachBatch wiring, Silver/05-silver.py:85-97). */
   val s04 = QueryDef(
     "s04_stream_foreachbatch_merge",
     (spark, dir) => {
       val tableDir = Files.createTempDirectory("graft-fb-").toString
-      val table = new graft.merge.ParquetTable(spark, tableDir,
+      val table = new graft.merge.LogTable(spark, tableDir,
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_type string, n bigint, sum_value double"))
       val ckpt = newCkptDir()
@@ -607,7 +607,7 @@ object StreamingQueries {
     *
     * landing (two parquet sets) → bronze (file-stream append sink +
     * checkpoint, run 2 reads only the new set) → silver (streaming
-    * watermarked dedup → foreachBatch MERGE into bucketed [[ParquetTable]]s:
+    * watermarked dedup → foreachBatch MERGE into bucketed [[LogTable]]s:
     * events M1 insert-only on event_id, orders M3 CDC upsert with
     * updated_day recency guard) → gold (per-user summary recompute + M5
     * column-list upsert) — the `Medallion.runAll` wave order on the
@@ -625,7 +625,7 @@ object StreamingQueries {
   val s13 = QueryDef(
     "s13_medallion_replay",
     (spark, dir) => {
-      import graft.merge.{Merge, ParquetTable}
+      import graft.merge.{LogTable, Merge}
       import graft.ops.Relational
       import org.apache.spark.sql.types.StructType
       val evDdl = "event_id bigint, ts_us bigint, user_id bigint, value double"
@@ -670,13 +670,13 @@ object StreamingQueries {
         java.nio.file.Files.copy(setStore.resolve(set), dirP.resolve(name))
 
       val root = FixtureDirs.create("s13-tables-").toString
-      val silverEvents = new ParquetTable(spark, s"$root/silver_events",
+      val silverEvents = new LogTable(spark, s"$root/silver_events",
         StructType.fromDDL(evDdl), Some((Seq("event_id"), 8)))
-      val silverOrders = new ParquetTable(spark, s"$root/silver_orders",
+      val silverOrders = new LogTable(spark, s"$root/silver_orders",
         StructType.fromDDL(ordDdl), Some((Seq("o_orderkey"), 8)))
       val goldDdl = "user_id bigint, n_events bigint, sum_value double, " +
         "n_orders bigint, n_modified bigint, total_price double"
-      val goldTable = new ParquetTable(spark, s"$root/gold_summary",
+      val goldTable = new LogTable(spark, s"$root/gold_summary",
         StructType.fromDDL(goldDdl), Some((Seq("user_id"), 8)))
       val bronzeEv = FixtureDirs.create("s13-bronze-ev-").toString
       val bronzeOrd = FixtureDirs.create("s13-bronze-ord-").toString
@@ -790,7 +790,7 @@ object StreamingQueries {
   val s14 = QueryDef(
     "s14_stream_ingest_pipeline",
     (spark, dir) => {
-      import graft.merge.{Merge, ParquetTable}
+      import graft.merge.{LogTable, Merge}
       import graft.functions.TextFunctions
       import graft.operators.Dedup
       TextFunctions.registerNative(spark)
@@ -819,7 +819,7 @@ object StreamingQueries {
       }
 
       val root = FixtureDirs.create("s14-clean-").toString
-      val cleanTable = new ParquetTable(spark, s"$root/clean",
+      val cleanTable = new LogTable(spark, s"$root/clean",
         org.apache.spark.sql.types.StructType.fromDDL(
           "fp string, doc_id bigint, source string"))
       val stream = spark.readStream
@@ -1002,12 +1002,12 @@ object StreamingQueries {
     * final state directly, Spark only ever saw v1 + deltas.
     *
     * Scale: per-batch cost = delta agg + a group-key join against the
-    * |groups|-row aggregate table; state lives in the ParquetTable, not
+    * |groups|-row aggregate table; state lives in the LogTable, not
     * the stream (no watermark needed — the feed is append-only facts). */
   val s17 = QueryDef(
     "s17_stream_incremental_view",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import graft.ops.IncrementalView
       val cents = (c: org.apache.spark.sql.Column) =>
         round(c * 100, 0).cast("long")
@@ -1019,7 +1019,7 @@ object StreamingQueries {
       // extraction semantics on the correctness gate).
       val srcDir = FixtureDirs.cachedDir("s17-cdf-", dir) { d =>
         val t = MergeQueries.ordersVersioned(spark, dir, "s17-ivm-")
-        val feed = t.changes(1, 4, Seq("o_orderkey"))
+        val feed = IncrementalView.keyedChanges(t, 1, 4, Seq("o_orderkey"))
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
             col("_change_type"), col("_commit_version"))
         Seq(2L, 3L, 4L).foreach { v =>
@@ -1036,7 +1036,7 @@ object StreamingQueries {
           .parquet(d.resolve("_v1").toString)
       }
       // maintained view, seeded from the v1 aggregate (computed fresh)
-      val aggTable = new ParquetTable(spark, FixtureDirs.create("s17-agg-").toString,
+      val aggTable = new LogTable(spark, FixtureDirs.create("s17-agg-").toString,
         org.apache.spark.sql.types.StructType.fromDDL(
           "o_orderstatus string, n bigint, sum_cents bigint"))
       aggTable.overwrite(spark.read.parquet(srcDir.resolve("_v1").toString)
@@ -1185,16 +1185,17 @@ object StreamingQueries {
     * K2 foreachBatch sink): continuous appends are the small-file pathology
     * — one file per bucket PER MICRO-BATCH, so a day of 1-minute batches
     * leaves 1440 files/bucket and scan throughput dies at 100 TB. Each
-    * batch here appends then compacts any bucket over the file threshold;
-    * the drain-end `require` pins the bound (≤ threshold files per bucket,
-    * vs n_batches without compaction) and the oracle pins that repeated
-    * rewrite-under-ingest preserved content exactly. Cost stays
-    * O(oversized buckets) per batch — below-threshold buckets are not
-    * re-listed, the same property q55 verifies statically. */
+    * batch here appends, then compacts once the table holds more than the
+    * threshold's worth of files per bucket; the drain-end `require` pins the
+    * bound (≤ threshold × buckets files, vs n_batches × buckets without
+    * compaction) and the oracle pins that repeated
+    * rewrite-under-ingest preserved content exactly. The threshold check
+    * reads the manifest (no directory listing), and a compaction rewrites
+    * to one file per bucket, so its cost amortizes over `maxFiles` batches. */
   val s20 = QueryDef(
     "s20_stream_auto_compact",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val ev = graft.sources.Tables.eventsUs(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts_us"))
@@ -1216,11 +1217,12 @@ object StreamingQueries {
         }
       }
       val maxFiles = 2
+      val nBuckets = 8
       val root = FixtureDirs.create("s20-table-").resolve("events_t").toString
-      val table = new ParquetTable(spark, root,
+      val table = new LogTable(spark, root,
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_id bigint, user_id bigint, event_type string, value double, ts_us bigint"),
-        bucketBy = Some((Seq("user_id"), 8)))
+        bucketBy = Some((Seq("user_id"), nBuckets)))
       withStreamConf(spark) {
         val q = spark.readStream
           .schema("event_id bigint, user_id bigint, event_type string, value double, ts_us bigint")
@@ -1231,18 +1233,16 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
             table.append(batch)
-            table.compact(maxFilesPerBucket = maxFiles)
+            if (table.liveFileNames().size > maxFiles * nBuckets) table.compact()
             ()
           }
           .start()
         q.awaitTermination()
       }
-      val perBucket = table.read().inputFiles
-        .groupBy(f => f.split("/").takeRight(2).head).view.mapValues(_.length)
-      val worst = perBucket.values.max
-      require(worst <= maxFiles,
-        s"auto-compaction failed to bound bucket files: worst=$worst " +
-          s"(uncompacted would be $nBatches)")
+      val live = table.liveFileNames().size
+      require(live <= maxFiles * nBuckets,
+        s"auto-compaction failed to bound the table's files: $live " +
+          s"(uncompacted would be up to ${nBatches * nBuckets})")
       table.read().groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .orderBy(col("event_type"))
@@ -1266,7 +1266,7 @@ object StreamingQueries {
   val s21 = QueryDef(
     "s21_stream_quality_router",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       graft.functions.TopBigramFrac.registerNative(spark)
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
@@ -1289,8 +1289,8 @@ object StreamingQueries {
       val root = FixtureDirs.create("s21-router-").toString
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id bigint, n_words int")
-      val accept = new ParquetTable(spark, s"$root/accept", schema)
-      val reject = new ParquetTable(spark, s"$root/reject", schema)
+      val accept = new LogTable(spark, s"$root/accept", schema)
+      val reject = new LogTable(spark, s"$root/reject", schema)
       val stream = spark.readStream
         .schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
@@ -1299,16 +1299,17 @@ object StreamingQueries {
           .option("checkpointLocation", newCkptDir())
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val gated = batch
               .select(col("doc_id") +: TextQueries.gopherStatCols(col("text")): _*)
               .withColumn("keep", TextQueries.gopherKeep)
               .select(col("doc_id"), col("n_words"), col("keep"))
               .localCheckpoint(true) // two sinks: compute the gate once
-            // disjoint sinks over a checkpointed input: one wave, one floor
+            // disjoint sinks over a checkpointed input: one wave, one
+            // floor; batch-id appends make a retried wave exactly-once
             graft.ops.JobWave.run(Seq(
-              () => accept.append(gated.filter(col("keep")).drop("keep")),
-              () => reject.append(gated.filter(!col("keep")).drop("keep"))))
+              () => accept.appendOnce(gated.filter(col("keep")).drop("keep"), "s21", batchId),
+              () => reject.appendOnce(gated.filter(!col("keep")).drop("keep"), "s21", batchId)))
           }
           .start()
         q.awaitTermination()
@@ -1338,7 +1339,7 @@ object StreamingQueries {
   val s22 = QueryDef(
     "s22_stream_decontaminate",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import graft.operators.Dedup
       val byte = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10)
         .cast("int")
@@ -1365,7 +1366,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s22-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id bigint, n_shared bigint, status string"))
@@ -1431,7 +1432,7 @@ object StreamingQueries {
   val s23 = QueryDef(
     "s23_stream_dsir_gate",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
       val bigrams = TextQueries.bigramBuckets _
@@ -1460,7 +1461,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s23-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id bigint, score bigint, kept boolean"))
@@ -1530,7 +1531,7 @@ object StreamingQueries {
   val s24 = QueryDef(
     "s24_stream_pii_redact",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
       val srcDir = FixtureDirs.cachedDir("s24-docs-", dir) { d =>
@@ -1548,7 +1549,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s24-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id bigint, n_email int, n_phone int, n_ip int, redacted string"))
@@ -1588,7 +1589,7 @@ object StreamingQueries {
   val s25 = QueryDef(
     "s25_stream_data_card",
     (spark, dir) => {
-      import graft.merge.{Merge, ParquetTable}
+      import graft.merge.{LogTable, Merge}
       import graft.functions.TextFunctions
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("source"), col("lang"),
@@ -1609,13 +1610,13 @@ object StreamingQueries {
         }
       }
       val root = FixtureDirs.create("s25-card-").toString
-      val stats = new ParquetTable(spark, s"$root/stats",
+      val stats = new LogTable(spark, s"$root/stats",
         org.apache.spark.sql.types.StructType.fromDDL(
           "source string, n_docs bigint, total_tokens bigint, " +
           "total_chars bigint, n_quality_ok bigint"))
-      val fpSet = new ParquetTable(spark, s"$root/fps",
+      val fpSet = new LogTable(spark, s"$root/fps",
         org.apache.spark.sql.types.StructType.fromDDL("source string, fp string"))
-      val langSet = new ParquetTable(spark, s"$root/langs",
+      val langSet = new LogTable(spark, s"$root/langs",
         org.apache.spark.sql.types.StructType.fromDDL("source string, lang string"))
       val stream = spark.readStream
         .schema("doc_id bigint, text string, source string, lang string, n_chars bigint")
@@ -1625,7 +1626,7 @@ object StreamingQueries {
           .option("checkpointLocation", newCkptDir())
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val b = batch.select(col("source"), col("lang"), col("n_chars"),
                 md5(col("text")).as("fp"),
                 TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -1637,15 +1638,19 @@ object StreamingQueries {
               sum(col("n_chars")).as("_d_chars"),
               sum(when(col("quality") >= 0.5, 1L).otherwise(0L)).as("_d_quality"))
             // three DISJOINT state tables over one checkpointed input:
-            // run the writes as one wave (guide §2.6), not three floors
+            // run the writes as one wave (guide §2.6), not three floors.
+            // The stats fold is not idempotent, so it commits under the
+            // batch id (a retried wave re-applies no delta); the two set
+            // merges are idempotent by construction.
             graft.ops.JobWave.run(Seq(
-              () => stats.overwrite(
-                stats.read().join(deltas, Seq("source"), "full_outer")
+              () => stats.occMerge(deltas, txn = Some(("s25", batchId))) { (cur, d) =>
+                cur.join(d, Seq("source"), "full_outer")
                   .select(col("source"),
                     (coalesce(col("n_docs"), lit(0L)) + coalesce(col("_d_docs"), lit(0L))).as("n_docs"),
                     (coalesce(col("total_tokens"), lit(0L)) + coalesce(col("_d_tokens"), lit(0L))).as("total_tokens"),
                     (coalesce(col("total_chars"), lit(0L)) + coalesce(col("_d_chars"), lit(0L))).as("total_chars"),
-                    (coalesce(col("n_quality_ok"), lit(0L)) + coalesce(col("_d_quality"), lit(0L))).as("n_quality_ok"))),
+                    (coalesce(col("n_quality_ok"), lit(0L)) + coalesce(col("_d_quality"), lit(0L))).as("n_quality_ok"))
+              },
               () => fpSet.merge(b.select(col("source"), col("fp")).dropDuplicates())(
                 (cur, nb) => Merge.insertOnly(cur, nb, Seq("source", "fp"))),
               () => langSet.merge(b.select(col("source"), col("lang")).dropDuplicates())(
@@ -1684,7 +1689,7 @@ object StreamingQueries {
   val s26 = QueryDef(
     "s26_stream_recall_monitor",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import graft.functions.VectorFunctions
       import graft.operators.Similarity
       VectorFunctions.register(spark)
@@ -1701,7 +1706,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s26-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id bigint, n_hit bigint, recall_at_5 double"))
@@ -1751,7 +1756,7 @@ object StreamingQueries {
   val s27 = QueryDef(
     "s27_stream_drift_monitor",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import graft.functions.VectorFunctions
       VectorFunctions.register(spark)
       val emb = graft.sources.Tables.embeddings(spark, dir)
@@ -1766,7 +1771,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val state = new ParquetTable(spark,
+      val state = new LogTable(spark,
         s"${FixtureDirs.create("s27-state-")}/state",
         org.apache.spark.sql.types.StructType.fromDDL(
           "label int, dim int, sa bigint, sb bigint"))
@@ -1801,7 +1806,7 @@ object StreamingQueries {
   val s28 = QueryDef(
     "s28_stream_fluency_gate",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
       val (cb, cp) = TextQueries.lmCounts(docs) // frozen LM side input
@@ -1815,7 +1820,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s28-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id bigint, n_bigrams bigint, fluency double, fluent boolean"))
@@ -1849,7 +1854,7 @@ object StreamingQueries {
   val s29 = QueryDef(
     "s29_stream_fertility_monitor",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       graft.functions.TextFunctions.registerNative(spark)
       val docs = graft.sources.Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -1863,7 +1868,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val state = new ParquetTable(spark,
+      val state = new LogTable(spark,
         s"${FixtureDirs.create("s29-state-")}/state",
         org.apache.spark.sql.types.StructType.fromDDL(
           "source string, n_words bigint, n_tokens bigint, n_single bigint"))
@@ -1897,7 +1902,7 @@ object StreamingQueries {
   val s30 = QueryDef(
     "s30_stream_image_gate",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import spark.implicits._
       val srcDir = FixtureDirs.cachedDir("s30-media-", dir) { d =>
         val ids = graft.sources.Tables.documents(spark, dir)
@@ -1925,7 +1930,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s30-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "media_id bigint, width int, height int, n_pixels int, " +
@@ -1964,7 +1969,7 @@ object StreamingQueries {
   val s31 = QueryDef(
     "s31_stream_fuzzy_decon",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val byte = (id: org.apache.spark.sql.Column) =>
         conv(substring(md5(id.cast("string")), 1, 2), 16, 10).cast("int")
       val docs = graft.sources.Tables.documents(spark, dir)
@@ -1985,7 +1990,7 @@ object StreamingQueries {
           java.nio.file.Files.move(f, d.resolve(s"batch$i.parquet"))
         }
       }
-      val audit = new ParquetTable(spark,
+      val audit = new LogTable(spark,
         s"${FixtureDirs.create("s31-audit-")}/audit",
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id bigint, bench_id bigint, jaccard double"))
@@ -2108,13 +2113,15 @@ object StreamingQueries {
   /** Streaming GDPR erasure through deletion vectors — q64's verb under a
     * live request stream. Erasure requests (the `error` event topic stands
     * in for an account-deletion topic) drain through foreachBatch, and each
-    * micro-batch applies [[graft.merge.ParquetTable.deleteMatched]]: a keyed
-    * join writes only deleted POSITIONS to the sidecar — the row `require`s
-    * the data-file set is untouched across the whole drain. That is the
-    * 100 TB right-to-be-forgotten shape: request latency is O(matches) per
-    * batch (one keyed probe of the table, data-skipping prunable), the
-    * rewrite deferred to OPTIMIZE. Re-delivered requests are no-ops (the
-    * position scan is anti-joined against the sidecar — same idempotency
+    * micro-batch applies [[graft.merge.LogTable.deleteWhere]] over the
+    * batch's distinct requested keys (a request batch is small by
+    * construction — one row per erasure request): only deleted POSITIONS
+    * are committed as a sidecar — the row `require`s the data-file set is
+    * untouched across the whole drain. That is the 100 TB
+    * right-to-be-forgotten shape: request latency is O(matches) per batch
+    * (one keyed probe of the table), the rewrite deferred to OPTIMIZE.
+    * Re-delivered requests are no-ops (the position scan reads the
+    * merge-on-read view, so deleted rows never re-match — same idempotency
     * class as the checkpoint + idempotent-merge exactly-once story), so the
     * accumulated deleted count is batching-independent and oracle-exact. */
   val s33 = QueryDef(
@@ -2125,11 +2132,9 @@ object StreamingQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
       val root = Files.createTempDirectory("graft-dv-erasure-").toString
-      val t = new graft.merge.ParquetTable(spark, s"$root/orders", o.schema)
+      val t = new graft.merge.LogTable(spark, s"$root/orders", o.schema)
       t.overwrite(o)
-      def files(): Set[String] =
-        spark.read.parquet(s"$root/orders/current").inputFiles.toSet
-      val before = files()
+      val before = t.liveFileNames()
       val deleted = new AtomicLong()
       val ckpt = newCkptDir()
       withStreamConf(spark) {
@@ -2141,13 +2146,16 @@ object StreamingQueries {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            deleted.addAndGet(t.deleteMatched(batch, Seq("o_custkey"))); ()
+            val keys = batch.select(col("o_custkey")).distinct().as[Long].collect()
+            if (keys.nonEmpty)
+              deleted.addAndGet(t.deleteWhere(col("o_custkey").isin(keys.toIndexedSeq: _*)))
+            ()
           }
           .start()
         q.awaitTermination()
       }
       require(deleted.get() > 0, "erasure stream deleted nothing")
-      require(files() == before,
+      require(t.liveFileNames() == before,
         "merge-on-read broke: the erasure drain rewrote data files")
       val summary = t.read().groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
@@ -2182,7 +2190,7 @@ object StreamingQueries {
   val s34 = QueryDef(
     "s34_stream_expectations",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       val bronze = RelationalQueries.expectationsBronze(
         graft.sources.Tables.orders(spark, dir))
       val dateUs = graft.sources.Tables.tsToUs(spark, col("o_orderdate"),
@@ -2207,9 +2215,9 @@ object StreamingQueries {
         }
       }
       val root = FixtureDirs.create("s34-exp-").toString
-      val silver = new ParquetTable(spark, s"$root/silver",
+      val silver = new LogTable(spark, s"$root/silver",
         org.apache.spark.sql.types.StructType.fromDDL("o_orderkey bigint"))
-      val quar = new ParquetTable(spark, s"$root/quarantine",
+      val quar = new LogTable(spark, s"$root/quarantine",
         org.apache.spark.sql.types.StructType.fromDDL(
           "o_orderkey bigint, reason string"))
       val stream = spark.readStream
@@ -2221,7 +2229,7 @@ object StreamingQueries {
           .option("checkpointLocation", newCkptDir())
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val flagged = batch
               .join(cust, batch("o_custkey") === cust("c_custkey"), "left")
               .select(batch("o_orderkey").as("o_orderkey"),
@@ -2231,12 +2239,13 @@ object StreamingQueries {
                 when(!col("ok_fk"), lit("exp_custkey_exists")),
                 when(!col("ok_date"), lit("exp_orderdate_not_null"))))
               .localCheckpoint(true) // two sinks: evaluate the gate once
-            // disjoint sinks over a checkpointed input: one wave, one floor
+            // disjoint sinks over a checkpointed input: one wave, one
+            // floor; batch-id appends make a retried wave exactly-once
             graft.ops.JobWave.run(Seq(
-              () => silver.append(flagged.filter(col("ok_fk") && col("ok_date"))
-                .select(col("o_orderkey"))),
-              () => quar.append(flagged.filter(!(col("ok_fk") && col("ok_date")))
-                .select(col("o_orderkey"), col("reason")))))
+              () => silver.appendOnce(flagged.filter(col("ok_fk") && col("ok_date"))
+                .select(col("o_orderkey")), "s34", batchId),
+              () => quar.appendOnce(flagged.filter(!(col("ok_fk") && col("ok_date")))
+                .select(col("o_orderkey"), col("reason")), "s34", batchId)))
           }
           .start()
         q.awaitTermination()
@@ -2260,8 +2269,8 @@ object StreamingQueries {
 
   /** CONCURRENT STREAMING WRITERS through optimistic concurrency — two
     * independent availableNow streams (disjoint key ranges: even vs odd
-    * user_id) upsert the SAME table via [[graft.merge.ParquetTable
-    * .occMerge]] with q10's recency-guard CDC merge. Their micro-batches
+    * user_id) upsert the SAME table via [[graft.merge.LogTable.occMerge]]
+    * with q10's recency-guard CDC merge. Their micro-batches
     * interleave nondeterministically; OCC's stage → CAS → rebase loop
     * serializes the commits, and because the writers touch disjoint keys
     * and each writer's own batches commit in file order, the final table
@@ -2275,7 +2284,7 @@ object StreamingQueries {
   val s35 = QueryDef(
     "s35_stream_occ_upsert",
     (spark, dir) => {
-      import graft.merge.ParquetTable
+      import graft.merge.LogTable
       import graft.ops.Relational
       val ev = graft.sources.Tables.eventsUs(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -2311,7 +2320,7 @@ object StreamingQueries {
       val root = FixtureDirs.create("s35-occ-").resolve("events_occ").toString
       val maxAttemptsSeen = new java.util.concurrent.atomic.AtomicInteger(0)
       val seed = latest(ev.filter(col("event_id") <= c0))
-      val t = new ParquetTable(spark, root, seed.schema)
+      val t = new LogTable(spark, root, seed.schema)
       t.overwrite(seed)
       val ddl = "event_id bigint, user_id bigint, event_type string, " +
         "value double, ts_us bigint"
@@ -2338,8 +2347,8 @@ object StreamingQueries {
         qa.awaitTermination(); qb.awaitTermination()
       }
       System.err.println(s"[s35] max OCC attempts observed: ${maxAttemptsSeen.get}")
-      require(t.commitToken == 5L,
-        s"expected 1 seed + 4 racing commits, got token ${t.commitToken}")
+      require(t.currentVersion == 5L,
+        s"expected 1 seed + 4 racing commits, got version ${t.currentVersion}")
       t.read().orderBy(col("user_id"))
     },
     Some(s"""WITH $evCte,
@@ -2355,16 +2364,14 @@ object StreamingQueries {
 
   /** STREAMING MULTI-WRITER COMMIT-LOG TABLE (s37) — s35's racing-writers
     * scenario on [[graft.merge.LogTable]], with SAME-KEY contention: two
-    * availableNow streams upsert EVERY user (no key partitioning — s35
-    * had to split parities because the rename-swap OCC serializes in-JVM;
-    * the manifest CAS serializes across processes, so contended writers
-    * are the normal case). Each micro-batch occMerges a cdcUpsert guarded
+    * availableNow streams upsert EVERY user (no key partitioning, unlike
+    * s35's parity split: the manifest CAS serializes across processes, so
+    * contended writers are the normal case). Each micro-batch occMerges a cdcUpsert guarded
     * by q66b's globally-unique `ord = ts_us·10¹⁰ + event_id`, making the
     * final state the schedule-free global argmax per user — the oracle
     * needs no knowledge of batching, interleaving, or who won which CAS.
-    * Immutable snapshots mean a loser's staged read NEVER hits the
-    * vanished-file conflict path (the FAILED_READ_FILE noise s35/q66b
-    * tolerate); the only conflict signal is the lost CAS itself. */
+    * Immutable snapshots mean a loser's staged read never hits a vanished
+    * file; the only conflict signal is the lost CAS itself. */
   val s37 = QueryDef(
     "s37_stream_log_table_occ",
     (spark, dir) => {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.merge.{Merge, ParquetTable}
+import graft.merge.{LogTable, Merge}
 
 /** Gold layer — analytics-ready aggregates (ref `Gold/06-gold.py` and the
   * `gym_summary` view, `Setup/02-setup.py:244-256`). */
@@ -24,7 +24,7 @@ object Gold {
 
   /** M5 upsert of the summary (ref 06-gold.py:31-80): 5-key match, stat
     * columns refreshed on match (update-mode incremental-with-correction). */
-  def upsertSummary(table: ParquetTable)(batch: DataFrame): Unit =
+  def upsertSummary(table: LogTable)(batch: DataFrame): Unit =
     table.merge(batch)((cur, b) =>
       Merge.upsertColumns(cur, b,
         Seq("user_id", "workout_id", "session_id", "start_time", "end_time"),

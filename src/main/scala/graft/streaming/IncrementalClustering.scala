@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import graft.merge.ParquetTable
+import graft.merge.LogTable
 import graft.operators.Dedup
 
 /** Streaming duplicate-cluster maintenance — the foreachBatch analog of s04
@@ -23,8 +23,8 @@ import graft.operators.Dedup
   *   4. [[Dedup.dupClustersIncremental]] extends the prior labels (touched
   *      clusters only) and the result replaces the labels table.
   *
-  * The index/sizes tables are append-only (parquet append, no swap); labels
-  * is rewrite-and-swap. Batch-replay equivalence with the from-scratch
+  * Every table is a [[LogTable]]: the index/sizes tables are append-only
+  * commits; labels is a full overwrite commit. Batch-replay equivalence with the from-scratch
   * operator is pinned by IncrementalClusterSpec.
   *
   * ==Df-capping (`maxDf < Int.MaxValue`) — delta-maintained state==
@@ -97,15 +97,15 @@ final class IncrementalClustering(spark: SparkSession, root: String,
   private val hotCountsSchema = new StructType()
     .add("doc_id", LongType).add("hot_n", LongType).add("batch_id", LongType)
 
-  val indexTable = new ParquetTable(spark, s"$root/shingle_index", indexSchema)
-  val sizesTable = new ParquetTable(spark, s"$root/doc_sizes", sizesSchema)
-  val labelsTable = new ParquetTable(spark, s"$root/labels", labelsSchema)
+  val indexTable = new LogTable(spark, s"$root/shingle_index", indexSchema)
+  val sizesTable = new LogTable(spark, s"$root/doc_sizes", sizesSchema)
+  val labelsTable = new LogTable(spark, s"$root/labels", labelsSchema)
   /** Per-batch document-frequency deltas; only maintained when capped. */
-  val dfTable = new ParquetTable(spark, s"$root/shingle_df", dfSchema)
+  val dfTable = new LogTable(spark, s"$root/shingle_df", dfSchema)
   /** Cumulative set of shingles that crossed `maxDf` (capped mode only). */
-  val hotTable = new ParquetTable(spark, s"$root/hot_shingles", hotSchema)
+  val hotTable = new LogTable(spark, s"$root/hot_shingles", hotSchema)
   /** Per-doc hot-shingle count deltas (capped mode only). */
-  val hotCountsTable = new ParquetTable(spark, s"$root/doc_hot_counts", hotCountsSchema)
+  val hotCountsTable = new LogTable(spark, s"$root/doc_hot_counts", hotCountsSchema)
 
   /** Exact Jaccard for candidate pairs (doc_a, doc_b, n_inter) given global
     * per-doc set sizes. */
@@ -130,10 +130,8 @@ final class IncrementalClustering(spark: SparkSession, root: String,
   // from batches past the marker (one merge-on-read DELETE per table,
   // once per restart) before reprocessing — so a replayed partial batch
   // starts from exactly the marker's state. Labels need no stamp: the
-  // overwrite is an atomic swap of a pure function of (scrubbed tables,
-  // batch), so re-running it converges. At cluster scale the same
-  // protocol holds on any atomic-rename filesystem; a transactional table
-  // format (Delta/Iceberg) makes the scrub a metadata rollback instead.
+  // overwrite is one atomic commit of a pure function of (scrubbed tables,
+  // batch), so re-running it converges.
   private def markerPath = java.nio.file.Paths.get(root, "_last_batch")
 
   @volatile private var scrubbed = false
@@ -173,14 +171,6 @@ final class IncrementalClustering(spark: SparkSession, root: String,
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (batchId <= lastAppliedBatch) return
     if (!scrubbed) scrubPartialWrites()
-    val debug = sys.env.contains("GRAFT_DEBUG_PROPAGATE")
-    def stage[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debug) System.err.println(
-        f"[processBatch $batchId] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val newShingles = Dedup.docShingles(batch, "doc_id", "text", n).persist()
     val newSizes = newShingles.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("set_size"))
@@ -196,7 +186,7 @@ final class IncrementalClustering(spark: SparkSession, root: String,
     // semi-join below the aggregation) + this batch's delta crosses maxDf,
     // and the shingle is not already hot
     val newlyHot = if (!capped) null
-    else stage("newlyHot checkpoint") {
+    else {
       val priorDf = dfTable.read()
         .join(broadcast(newDelta.select(col("shingle"))), Seq("shingle"), "left_semi")
         .groupBy(col("shingle")).agg(sum(col("delta")).as("prior_df"))
@@ -207,13 +197,12 @@ final class IncrementalClustering(spark: SparkSession, root: String,
         .select(col("shingle"))
         .localCheckpoint(true) // tiny by construction; consumed up to 3×
     }
-    val anyNewHot = capped && stage("anyNewHot count")(newlyHot.limit(1).count() > 0)
+    val anyNewHot = capped && newlyHot.limit(1).count() > 0
     // per-batch hot set = cumulative crossings (tiny-table read, ≡ the full
     // df fold's `sum(delta) > maxDf` set because df is monotone)
     val hot = if (!capped) null
-    else stage("hot checkpoint")(
-      hotTable.read().select(col("shingle")).unionByName(newlyHot)
-        .localCheckpoint(true))
+    else hotTable.read().select(col("shingle")).unionByName(newlyHot)
+      .localCheckpoint(true)
     def capSide(ds: DataFrame): DataFrame =
       if (!capped) ds else ds.join(broadcast(hot), Seq("shingle"), "left_anti")
     val cNew = capSide(newShingles)
@@ -254,10 +243,9 @@ final class IncrementalClustering(spark: SparkSession, root: String,
       // computed only for docs TOUCHED by a candidate pair: the narrow
       // state tables are scanned with the touched set broadcast below the
       // fold, so the shuffle carries only touched docs
-      val touched = stage("touched checkpoint")(
-        inter.select(col("doc_a").as("doc_id"))
-          .unionByName(inter.select(col("doc_b").as("doc_id"))).distinct()
-          .localCheckpoint(true))
+      val touched = inter.select(col("doc_a").as("doc_id"))
+        .unionByName(inter.select(col("doc_b").as("doc_id"))).distinct()
+        .localCheckpoint(true)
       val hotN = hotCountsTable.read().select(col("doc_id"), col("hot_n"))
         .unionByName(hotDeltas)
         .join(broadcast(touched), Seq("doc_id"), "left_semi")
@@ -271,36 +259,27 @@ final class IncrementalClustering(spark: SparkSession, root: String,
     // the clustering loop's materializations analyze a leaf, not the whole
     // per-batch plan; the uncapped pairs plan is already shallow
     val pairs0 = jaccardOf(inter, sizes)
-    val pairs = if (capped) stage("pairs checkpoint")(pairs0.localCheckpoint(true))
-                else pairs0
+    val pairs = if (capped) pairs0.localCheckpoint(true) else pairs0
 
-    val labels = stage("dupClustersIncremental")(Dedup.dupClustersIncremental(
-      labelsTable.read(), pairs, batch.select(col("doc_id")), "doc_id"))
+    val labels = Dedup.dupClustersIncremental(
+      labelsTable.read(), pairs, batch.select(col("doc_id")), "doc_id")
     val stamp = (df: DataFrame) => df.withColumn("batch_id", lit(batchId))
     // The per-batch table writes target DISJOINT tables over inputs that
     // are already materialized (persisted/checkpointed above, or scans
     // whose file listing was pinned at read() time), so run them as one
     // thread wave instead of six sequential job+commit floors per batch
-    // (guide §2.6; the d54/Medallion idiom). The crash contract is
+    // (guide §2.6, [[graft.ops.JobWave]]). The crash contract is
     // ORDER-FREE by design — any partially-written subset is truncated by
     // the batch-id scrub, and the marker still lands strictly last
     // (CrashRecoverySpec pins the replay).
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    def wjob(body: => Unit) = new Thread(() =>
-      try body catch { case t: Throwable => failure.compareAndSet(null, t) })
-    val wave = Seq(
-      Some(wjob(labelsTable.overwrite(labels))),
-      Some(wjob(indexTable.append(stamp(newShingles)))),
-      Some(wjob(sizesTable.append(stamp(newSizes)))),
-      if (capped) Some(wjob(dfTable.append(stamp(newDelta)))) else None,
-      if (capped && anyNewHot) Some(wjob(hotTable.append(stamp(newlyHot)))) else None,
-      if (capped) Some(wjob(hotCountsTable.append(stamp(hotDeltas)))) else None
-    ).flatten
-    stage("write wave") {
-      wave.foreach(_.start())
-      wave.foreach(_.join())
-    }
-    if (failure.get() != null) throw failure.get()
+    graft.ops.JobWave.run(Seq[Option[() => Unit]](
+      Some(() => labelsTable.overwrite(labels)),
+      Some(() => indexTable.append(stamp(newShingles))),
+      Some(() => sizesTable.append(stamp(newSizes))),
+      if (capped) Some(() => dfTable.append(stamp(newDelta))) else None,
+      if (capped && anyNewHot) Some(() => hotTable.append(stamp(newlyHot))) else None,
+      if (capped) Some(() => hotCountsTable.append(stamp(hotDeltas))) else None
+    ).flatten)
     if (capped) { newDelta.unpersist(); inter.unpersist() }
     writeMarker(batchId)
     labels.unpersist()

@@ -3,17 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.merge.ParquetTable
+import graft.merge.LogTable
+import graft.ops.JobWave
 
 /** End-to-end medallion orchestration (ref `Test Scripts/07-run.py` +
   * `Silver/05-silver.py:486-503`): landing files → Bronze (streaming append)
   * → Silver in three awaited waves → Gold. `availableNow` drain mode, exactly
   * like the reference's batch runs (`04-bronze.py:39-40`).
   *
-  * Single-writer-per-table discipline matches the reference; re-running the
-  * whole pipeline over re-delivered + new files is idempotent end-to-end
-  * (MERGE semantics absorb duplicates) — that is the two-set replay
-  * invariant its tests pin (`Test Scripts/08-batch-test.py`).
+  * Every Silver and Gold table is a [[LogTable]] — the commit-log form of
+  * the reference's Delta tables, maintained by the same MERGE flavors
+  * (`Silver/05-silver.py`). Single-writer-per-table discipline matches the
+  * reference; re-running the whole pipeline over re-delivered + new files
+  * is idempotent end-to-end (MERGE semantics absorb duplicates) — that is
+  * the two-set replay invariant its tests pin (`Test Scripts/08-batch-test.py`).
   */
 final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String,
                       checkpointDir: String, asOf: Column) {
@@ -21,13 +24,12 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
   /** Merged tables are hash-bucketed on (a subset of) their merge key so
     * each foreachBatch MERGE rewrites only the buckets its batch touches —
     * O(touched partitions) per micro-batch, the Delta file-skipping
-    * equivalent (see [[ParquetTable]]). 16 buckets locally; size to target
-    * file counts on a real cluster. */
+    * equivalent (see [[LogTable.occMerge]]). 16 buckets locally; size to
+    * target file counts on a real cluster. */
   private val NBuckets = 16
   private def t(name: String, schema: org.apache.spark.sql.types.StructType,
-                bucketKeys: Seq[String] = Nil) =
-    new ParquetTable(spark, s"$tablesDir/$name", schema,
-      if (bucketKeys.isEmpty) None else Some((bucketKeys, NBuckets)))
+                bucketKeys: Seq[String]) =
+    new LogTable(spark, s"$tablesDir/$name", schema, Some((bucketKeys, NBuckets)))
 
   val usersTable = t("users", Schemas.users, Seq("user_id"))
   val gymLogsTable = t("gym_logs", Schemas.gymLogs, Seq("mac_address"))
@@ -127,19 +129,12 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     * wave-2 barrier. Concurrent Spark actions from two threads are safe
     * (separate jobs, separate target tables). */
   def runSilverWave2(): Unit = {
-    // a failed wave-2 job must fail the wave, not vanish with its thread
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    def job(body: => Unit) = new Thread(() =>
-      try body catch { case t: Throwable => failure.compareAndSet(null, t) })
-    val wave2 = Seq(
-      job(Silver.upsertUserBins(userBinsTable)(
-        Silver.userBins(userProfileTable.read(), usersTable.read(), asOf))),
-      job(Silver.upsertInsertOnly(completedWorkoutsTable,
+    JobWave.run(Seq(
+      () => Silver.upsertUserBins(userBinsTable)(
+        Silver.userBins(userProfileTable.read(), usersTable.read(), asOf)),
+      () => Silver.upsertInsertOnly(completedWorkoutsTable,
         Seq("user_id", "workout_id", "session_id", "start_time"))(
         Silver.completedWorkouts(workoutsTable.read()))))
-    wave2.foreach(_.start())
-    wave2.foreach(_.join())
-    if (failure.get() != null) throw failure.get()
     Silver.upsertInsertOnly(workoutBpmTable,
       Seq("user_id", "workout_id", "session_id", "time"))(
       Silver.workoutBpm(completedWorkoutsTable.read(), usersTable.read(),

@@ -2,15 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.merge.{Merge, ParquetTable}
+import graft.merge.{LogTable, Merge}
 import graft.ops.Relational
 
 /** Silver layer — typed, deduplicated business entities
   * (ref `Silver/05-silver.py`). Each job is split into
   *   - a pure *transform* (stream- and batch-applicable DataFrame program) and
-  *   - an *upsert* implementing the job's MERGE flavor against a
-  *     [[ParquetTable]] (the foreachBatch body; ref Upserter/CDCUpserter,
-  *     `05-silver.py:6-33`).
+  *   - an *upsert* implementing the job's MERGE flavor against a bucketed
+  *     [[LogTable]] (the foreachBatch body; ref Upserter/CDCUpserter,
+  *     `05-silver.py:6-33`). A micro-batch that touches no bucket cuts no
+  *     version, so each stream's closing no-data batch costs no commit.
   *
   * Streaming wiring: bronze tables are append-only parquet directories, so
   * the silver sources are plain file streams over them — the OSS equivalent
@@ -75,7 +76,7 @@ object Silver {
   // ── upserts (the foreachBatch bodies; ref MERGE statements in 05-silver.py) ──
 
   /** M1 — users / workouts / heart_rate / completed_workouts insert-only. */
-  def upsertInsertOnly(table: ParquetTable, keys: Seq[String])(batch: DataFrame): Unit =
+  def upsertInsertOnly(table: LogTable, keys: Seq[String])(batch: DataFrame): Unit =
     table.merge(batch)((cur, b) => Merge.insertOnly(cur, b, keys))
 
   /** M2 — gym_logs logout extension (ref 05-silver.py:108-115). The batch is
@@ -83,7 +84,7 @@ object Silver {
     * both a login row and its logout-extension re-delivery (full-row dedup
     * upstream keeps both), and an uncollapsed batch would insert duplicate
     * (mac,gym,login) rows through the full-outer merge. */
-  def upsertGymLogs(table: ParquetTable)(batch: DataFrame): Unit = {
+  def upsertGymLogs(table: LogTable)(batch: DataFrame): Unit = {
     val collapsed = Relational.dedupKeyed(batch,
       Seq("mac_address", "gym", "login"), Seq(col("logout").desc))
     table.merge(collapsed) { (cur, b) =>
@@ -96,7 +97,7 @@ object Silver {
     * keep new/update rows, collapse to newest per user within the batch
     * (rank, ties kept — then a deterministic tiebreak for key-uniqueness),
     * merge with recency guard. */
-  def upsertUserProfile(table: ParquetTable)(batch: DataFrame): Unit = {
+  def upsertUserProfile(table: LogTable)(batch: DataFrame): Unit = {
     val cdc = batch.filter(col("update_type").isin("new", "update"))
     val latest = Relational.latestPerKey(cdc, Seq("user_id"), "updated")
     // rank keeps ties; a real MERGE would fail on duplicate matches
@@ -108,7 +109,7 @@ object Silver {
   }
 
   /** M4 — user_bins SCD1 overwrite (ref 05-silver.py:314-321). */
-  def upsertUserBins(table: ParquetTable)(batch: DataFrame): Unit =
+  def upsertUserBins(table: LogTable)(batch: DataFrame): Unit =
     table.merge(batch)((cur, b) => Merge.scd1(cur, b, Seq("user_id")))
 
   // ── derived silver (wave 2/3; ref 05-silver.py:291-345, 353-428, 431-479) ──

@@ -2,7 +2,6 @@ package graft.merge
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
@@ -19,17 +18,14 @@ class CloneSpec extends SparkSpec {
   private val s2 = StructType(Seq(
     StructField("k", LongType), StructField("v", StringType)))
 
-  private def parquetFiles(root: String): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(root, "current")).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq
-  }
+  private def parquetFiles(root: String): Seq[Path] =
+    LogTable.listDir(Paths.get(root, "files")).filter(_.toString.endsWith(".parquet"))
 
   private def inode(p: Path): Any = Files.getAttribute(p, "unix:ino")
 
   test("clone is zero-copy (hardlinks), reads identically, then diverges safely") {
     val srcRoot = tmp("clone-src-")
-    val t = new ParquetTable(spark, srcRoot, s2)
+    val t = new LogTable(spark, srcRoot, s2)
     t.overwrite(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
 
     val dstRoot = tmp("clone-dst-") + "/t2"
@@ -65,34 +61,37 @@ class CloneSpec extends SparkSpec {
 
   test("clone of a bucketed table keeps bucket layout and partition-scoped merge") {
     val srcRoot = tmp("clone-bsrc-")
-    val t = new ParquetTable(spark, srcRoot, s2, bucketBy = Some((Seq("k"), 4)))
+    val t = new LogTable(spark, srcRoot, s2, bucketBy = Some((Seq("k"), 4)))
     t.overwrite((1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"))
     val c = t.cloneTo(tmp("clone-bdst-") + "/t2")
     assert(c.read().count() == 20)
+    val before = c.liveFileNames()
     c.merge(Seq((5L, "X")).toDF("k", "v"))((cur, b) => Merge.scd1(cur, b, Seq("k")))
     assert(c.read().filter($"k" === 5L).as[(Long, String)].head() == ((5L, "X")))
     assert(t.read().filter($"k" === 5L).as[(Long, String)].head() == ((5L, "v5")))
+    // partition-scoped: the three untouched buckets keep their files
+    assert(before.toSet.intersect(c.liveFileNames().toSet).size == before.size - 1)
   }
 
   test("clone contracts: never-written source and occupied destination fail loudly") {
-    val empty = new ParquetTable(spark, tmp("clone-empty-"), s2)
+    val empty = new LogTable(spark, tmp("clone-empty-"), s2)
     assert(intercept[IllegalArgumentException](empty.cloneTo(tmp("clone-x-")))
-      .getMessage.contains("never-written"))
+      .getMessage.contains("empty table"))
     val srcRoot = tmp("clone-src2-")
-    val t = new ParquetTable(spark, srcRoot, s2)
+    val t = new LogTable(spark, srcRoot, s2)
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
     assert(intercept[IllegalArgumentException](t.cloneTo(srcRoot))
-      .getMessage.contains("already holds a table"))
+      .getMessage.contains("not empty"))
   }
 
   test("clone starts fresh history even when the source is versioned") {
     val srcRoot = tmp("clone-vsrc-")
-    val t = new ParquetTable(spark, srcRoot, s2, keepVersions = 3)
+    val t = new LogTable(spark, srcRoot, s2)
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     assert(t.history().size == 2)
     val c = t.cloneTo(tmp("clone-vdst-") + "/t2")
-    assert(c.history().isEmpty, s"clone must start fresh, got ${c.history()}")
+    assert(c.history() == Seq(1L), s"clone must start fresh at the clone point, got ${c.history()}")
     assert(c.read().count() == 2)
   }
 }

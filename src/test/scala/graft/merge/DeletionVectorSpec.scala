@@ -1,13 +1,14 @@
 package graft.merge
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
-/** Deletion vectors: merge-on-read DELETE (Delta DV analog).
+/** Deletion vectors: merge-on-read DELETE (Delta DV analog) on a
+  * [[LogTable]].
   *
   * Contract under test:
   *  - a delete touches NO data file (byte-identity, not just file count);
@@ -15,9 +16,9 @@ import graft.SparkSpec
   *    subtracts deleted positions;
   *  - deletes compose without double-counting (wave 2 sees the
   *    merge-on-read view);
-  *  - materialization rewrites to the same content and clears the sidecar;
-  *  - hardlink clones keep DVs valid (positions key on RELATIVE paths);
-  *  - versioned tables reject DVs loudly (history would resurrect rows).
+  *  - compaction rewrites to the same content and drops the sidecars;
+  *  - hardlink clones keep DVs valid (positions key on file basenames);
+  *  - a delete is a named version: history reads resurrect deleted rows.
   */
 class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
@@ -31,30 +32,27 @@ class DeletionVectorSpec extends SparkSpec {
   private val s2 = StructType(Seq(
     StructField("k", LongType), StructField("v", StringType)))
 
-  private def dataFiles(root: String): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(root, "current")).iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") &&
-        !p.toString.contains("/_dv/")).toSeq.sortBy(_.toString)
-  }
-
-  private def digest(p: Path): String =
-    MessageDigest.getInstance("MD5").digest(Files.readAllBytes(p))
+  private def digest(root: String, name: String): String =
+    MessageDigest.getInstance("MD5").digest(Files.readAllBytes(Paths.get(root, "files", name)))
       .map("%02x".format(_)).mkString
 
-  private def fingerprint(root: String): Map[String, String] =
-    dataFiles(root).map(p => p.toString -> digest(p)).toMap
+  /** Live data files → content digest. */
+  private def fingerprint(t: LogTable, root: String): Map[String, String] =
+    t.liveFileNames().map(n => n -> digest(root, n)).toMap
+
+  /** Rows the live version's deletion vectors hide (v1 holds every row). */
+  private def hidden(t: LogTable): Long = t.readVersion(1).count() - t.read().count()
 
   test("deleteWhere is merge-on-read: data files byte-identical, reads filtered") {
     val root = tmp("dv-basic-")
-    val t = new ParquetTable(spark, root, s2)
+    val t = new LogTable(spark, root, s2)
     t.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
-    val before = fingerprint(root)
+    val before = fingerprint(t, root)
 
     val n = t.deleteWhere(col("k") % 10 === 0)
     assert(n == 10L)
-    assert(t.deletedPositions == 10L)
-    assert(fingerprint(root) == before, "a DELETE rewrote data files")
+    assert(hidden(t) == 10L)
+    assert(fingerprint(t, root) == before, "a DELETE rewrote data files")
     assert(t.read().count() == 90L)
     assert(t.read().filter(col("k") % 10 === 0).count() == 0L)
 
@@ -64,58 +62,66 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.read().count() == 80L)
     // re-deleting deleted rows is a no-op
     assert(t.deleteWhere(col("k") % 5 === 0) == 0L)
-    assert(fingerprint(root) == before)
+    assert(fingerprint(t, root) == before)
   }
 
-  test("materializeDeletes: same content, sidecar cleared, files rewritten") {
+  test("compact materializes deletes: same content, sidecars dropped, files rewritten") {
     val root = tmp("dv-mat-")
-    val t = new ParquetTable(spark, root, s2)
+    val t = new LogTable(spark, root, s2)
     t.overwrite((1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteWhere(col("k") <= 20)
     val morKeys = t.read().select("k").as[Long].collect().sorted
-    val before = fingerprint(root)
+    val before = t.liveFileNames()
 
-    t.materializeDeletes()
-    assert(t.deletedPositions == 0L)
-    assert(fingerprint(root).keySet.intersect(before.keySet).isEmpty,
-      "materialize swapped nothing")
+    assert(t.compact() > 0, "a DV-carrying table must compact")
+    assert(t.liveFileNames().intersect(before).isEmpty, "compaction rewrote nothing")
     val postKeys = t.read().select("k").as[Long].collect().sorted
     assert(postKeys.toSeq == morKeys.toSeq)
     assert(postKeys.forall(_ > 20))
-    // no-op when no DVs
-    val fp = fingerprint(root)
-    t.materializeDeletes()
-    assert(fingerprint(root) == fp)
+    // the rewritten files hold exactly the live rows: no sidecar is needed
+    assert(spark.read.parquet(t.liveFileNames().map(n => s"$root/files/$n"): _*)
+      .count() == postKeys.length.toLong)
+    // no-op once no DVs remain
+    val files = t.liveFileNames()
+    assert(t.compact() == 0)
+    assert(t.liveFileNames() == files)
   }
 
-  test("deleteMatched: keyed erasure batch, distributed join") {
+  test("keyed erasure: deleteWhere over a request batch's distinct keys") {
     val root = tmp("dv-keyed-")
-    val t = new ParquetTable(spark, root, s2)
+    val t = new LogTable(spark, root, s2)
     t.overwrite((1L to 40L).map(i => (i, s"v$i")).toDF("k", "v"))
     val requests = Seq(3L, 7L, 7L, 11L, 999L).toDF("k") // dup + miss
-    assert(t.deleteMatched(requests, Seq("k")) == 3L)
+    def erase(): Long = t.deleteWhere(
+      col("k").isin(requests.distinct().as[Long].collect().toIndexedSeq: _*))
+    assert(erase() == 3L)
     assert(t.read().count() == 37L)
     assert(t.read().filter(col("k").isin(3L, 7L, 11L)).count() == 0L)
-    // repeated request: already deleted, no double count
-    assert(t.deleteMatched(requests, Seq("k")) == 0L)
+    // repeated request: already deleted, no double count, no version cut
+    val v = t.currentVersion
+    assert(erase() == 0L)
+    assert(t.currentVersion == v)
   }
 
   test("hardlink clone keeps DVs valid (relative-path keying)") {
     val srcRoot = tmp("dv-clone-src-")
-    val t = new ParquetTable(spark, srcRoot, s2)
+    val t = new LogTable(spark, srcRoot, s2)
     t.overwrite((1L to 30L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteWhere(col("k") > 25)
-    val c = t.cloneTo(tmp("dv-clone-dst-") + "/t2")
+    val dstRoot = tmp("dv-clone-dst-") + "/t2"
+    val c = t.cloneTo(dstRoot)
     assert(c.read().count() == 25L, "clone resurrected DV-deleted rows")
     // divergence: source materializes; the clone's view must not change
-    t.materializeDeletes()
+    t.compact()
     assert(c.read().count() == 25L)
-    assert(c.deletedPositions == 5L) // the 5 cloned positions survive
+    // the clone still reads the 30-row files through the 5 cloned positions
+    assert(spark.read.parquet(c.liveFileNames().map(n => s"$dstRoot/files/$n"): _*)
+      .count() == 30L)
   }
 
   test("bucketed table: merge and compact see the merge-on-read view") {
     val root = tmp("dv-bucket-")
-    val t = new ParquetTable(spark, root, s2, bucketBy = Some((Seq("k"), 4)))
+    val t = new LogTable(spark, root, s2, bucketBy = Some((Seq("k"), 4)))
     t.overwrite((1L to 80L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteWhere(col("k") <= 40)
     assert(t.read().count() == 40L)
@@ -130,10 +136,10 @@ class DeletionVectorSpec extends SparkSpec {
     assert(keys.contains(100L) && keys.contains(41L))
     assert(t.read().filter(col("k") === 41L).select("v").as[String].head() == "upd")
 
-    // appends fragment buckets; compact materializes the touched buckets
+    // appends fragment buckets; compact materializes the deletes
     t.append(Seq((200L, "a")).toDF("k", "v"))
     t.append(Seq((201L, "b")).toDF("k", "v"))
-    t.compact(maxFilesPerBucket = 1)
+    t.compact()
     val keys2 = t.read().select("k").as[Long].collect().toSet
     assert(!keys2.exists(_ <= 40), "compact resurrected DV-deleted rows")
     assert(keys2.contains(200L) && keys2.contains(201L))
@@ -141,7 +147,7 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("readRange (stats manifest) applies DVs") {
     val root = tmp("dv-range-")
-    val t = new ParquetTable(spark, root, s2, statsBy = Seq("k"))
+    val t = new LogTable(spark, root, s2, statsBy = Seq("k"))
     t.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteWhere(col("k") === 10L || col("k") === 15L)
     val got = t.readRange("k", lit(5L), lit(20L)).select("k").as[Long].collect().sorted
@@ -151,29 +157,26 @@ class DeletionVectorSpec extends SparkSpec {
   test("DV deletes compose with time travel: historical reads resurrect, " +
       "live stays deleted (deleteWhere's composition contract)") {
     val root = tmp("dv-tt-")
-    val t = new ParquetTable(spark, root, s2, keepVersions = 3)
+    val t = new LogTable(spark, root, s2)
     def ks(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select("k").as[Long].collect().sorted.toSeq
     t.overwrite((1L to 10L).map(i => (i, s"v$i")).toDF("k", "v"))  // v1
-    assert(t.deleteWhere(col("k") % 2 === 0) == 5L)                // sub-version commit
-    // live read applies the sidecar; the live version's historical read is
-    // pinned at CUT time — pre-delete rows resurrect
+    assert(t.deleteWhere(col("k") % 2 === 0) == 5L)                // v2
+    // the live read applies the sidecar; the pre-delete version resurrects
     assert(ks(t.read()) == Seq(1L, 3L, 5L, 7L, 9L))
     assert(ks(t.readVersion(1)) == (1L to 10L))
-    // cut v2 from the live (DV-applied) view: v1 retires WITH its sidecar
-    // inside, which the version read never sees
-    t.overwrite(t.read())                                          // v2
-    assert(t.deletedPositions == 0L, "fresh tree must carry no sidecar")
+    // OPTIMIZE rewrites the live (DV-applied) view; history is unchanged
+    assert(t.compact() > 0)                                        // v3
     assert(ks(t.readVersion(1)) == (1L to 10L))
     assert(ks(t.readVersion(2)) == Seq(1L, 3L, 5L, 7L, 9L))
-    // keyed DV delete composes the same way
-    assert(t.deleteMatched(Seq(3L).toDF("k"), Seq("k")) == 1L)
+    // a keyed DV delete composes the same way
+    assert(t.deleteWhere(col("k") === 3L) == 1L)                   // v4
     assert(ks(t.read()) == Seq(1L, 5L, 7L, 9L))
-    assert(ks(t.readVersion(2)) == Seq(1L, 3L, 5L, 7L, 9L),
-      "post-cut DV delete leaked into the named version")
+    assert(ks(t.readVersion(3)) == Seq(1L, 3L, 5L, 7L, 9L),
+      "a later DV delete leaked into an earlier version")
     // restore to a pre-delete version resurrects (the Delta behavior);
-    // v3's cut retires v2 with its sidecar — its history stays pinned
-    t.restore(1)                                                   // v3 ≡ v1
+    // the versions in between keep their own content
+    t.restore(1)                                                   // v5 ≡ v1
     assert(ks(t.read()) == (1L to 10L))
     assert(ks(t.readVersion(2)) == Seq(1L, 3L, 5L, 7L, 9L))
   }

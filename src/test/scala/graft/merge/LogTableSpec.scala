@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
-/** The commit-log table ([[LogTable]]) — every composition the rename-swap
-  * [[ParquetTable]] rejects must just work here: bucketed × time travel,
+/** The commit-log table ([[LogTable]]) — every composition a directory-swap
+  * table would have to reject must just work here: bucketed × time travel,
   * bucketed × OCC, bucketed × file stats, DV-aware history, plus the
   * no-vanished-snapshot property immutable files buy. */
 class LogTableSpec extends SparkSpec {
@@ -34,7 +34,7 @@ class LogTableSpec extends SparkSpec {
     val shared = v1Files.toSet.intersect(v2Files.toSet)
     assert(shared.nonEmpty, "no file sharing across versions — merge rewrote everything")
     assert(v1Files.toSet != v2Files.toSet, "merge replaced no file")
-    // both versions readable, exact content (the composition ParquetTable rejects)
+    // both versions readable, exact content
     assert(rows(t.readVersion(1)) == (1L to 40L).map(i => (i, s"v$i")))
     assert(rows(t.readVersion(2)) ==
       ((2L to 40L).map(i => (i, s"v$i")) ++ Seq((1L, "UPD"), (41L, "NEW"))).sortBy(_._1))
@@ -385,5 +385,27 @@ class LogTableSpec extends SparkSpec {
     assert(ops(7L) == "OPTIMIZE")
     // OPTIMIZE appears exactly once: only the commit that rewrote files
     assert(t.describeHistory().count(_._3 == "OPTIMIZE") == 1)
+  }
+
+  test("a bucketed merge of an empty batch cuts no version and rewrites no file") {
+    val t = new LogTable(spark, tmp("log-empty-"), s2, bucketBy = Some((Seq("k"), 4)))
+    t.overwrite((1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"))
+    val (v, files) = (t.currentVersion, t.liveFileNames())
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    t.merge(empty)((cur, b) => Merge.scd1(cur, b, Seq("k")))
+    assert(t.occMerge(empty)((cur, b) => Merge.insertOnly(cur, b, Seq("k"))) == 1)
+    assert(t.currentVersion == v && t.liveFileNames() == files)
+    assert(t.read().count() == 20L)
+  }
+
+  test("directory streams are closed: log listings hold no descriptors") {
+    val t = new LogTable(spark, tmp("log-fds-"), s2)
+    t.append(Seq((1L, "a")).toDF("k", "v"))
+    def openFds: Int = new java.io.File("/proc/self/fd").list().length
+    val before = openFds
+    (1 to 500).foreach { _ => t.history(); t.currentVersion }
+    val grown = openFds - before
+    // each unclosed listing would hold a descriptor: 1,000 here
+    assert(grown < 50, s"$grown descriptors leaked over 1,000 log listings")
   }
 }

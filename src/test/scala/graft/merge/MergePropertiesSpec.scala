@@ -72,22 +72,25 @@ class MergePropertiesSpec extends SparkSpec {
   test("bucketed merge: partition-scoped result equals full-rewrite result, " +
       "untouched bucket files are byte-identical") {
     import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("ord", org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    def filesOf(dir: Path): Map[String, (Long, Long)] =
-      Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => dir.relativize(p).toString ->
-          (Files.size(p), Files.getLastModifiedTime(p).toMillis)).toMap
-
     val dir = Files.createTempDirectory("bucketed-").toString
-    val bucketed = new ParquetTable(spark, dir, schema, Some((Seq("k"), 8)))
+    def stat(name: String): (Long, Long) = {
+      val p = Path.of(dir, "files", name)
+      (Files.size(p), Files.getLastModifiedTime(p).toMillis)
+    }
+    def bucketsOf(name: String): Set[Int] =
+      spark.read.parquet(Path.of(dir, "files", name).toString)
+        .select(pmod(xxhash64($"k"), lit(8)).cast("int")).distinct().as[Int].collect().toSet
+
+    val bucketed = new LogTable(spark, dir, schema, Some((Seq("k"), 8)))
     // wide key range → every bucket populated
     val initial = (0 until 64).map(k => (k, k, s"v$k")).toDF("k", "ord", "v")
     bucketed.overwrite(initial)
-    val before = filesOf(Path.of(dir, "current"))
+    val before = bucketed.liveFileNames().map(n => n -> stat(n)).toMap
 
     // batch touching a handful of keys → few buckets
     val batch = Seq((3, 100, "B3"), (17, 100, "B17"), (90, 100, "B90"))
@@ -99,50 +102,39 @@ class MergePropertiesSpec extends SparkSpec {
       .as[(Int, Int, String)].collect().toSet
     assert(bucketed.read().as[(Int, Int, String)].collect().toSet == expected)
 
-    // untouched bucket directories: same files, same sizes, same mtimes
-    val after = filesOf(Path.of(dir, "current"))
-    val touched = batch.select(
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.xxhash64($"k"),
-          org.apache.spark.sql.functions.lit(8)).cast("int"))
+    // untouched buckets: same files, same sizes, same mtimes
+    val after = bucketed.liveFileNames().toSet
+    val touched = batch.select(pmod(xxhash64($"k"), lit(8)).cast("int"))
       .distinct().as[Int].collect().toSet
-    val untouchedBefore = before.filterNot { case (p, _) =>
-      touched.exists(k => p.startsWith(s"__bucket=$k/")) }
-    assert(untouchedBefore.nonEmpty, "test needs untouched buckets to be meaningful")
-    untouchedBefore.foreach { case (p, meta) =>
-      assert(after.get(p).contains(meta), s"untouched file changed: $p")
+    val (kept, replaced) = before.keySet.partition(after.contains)
+    assert(kept.nonEmpty, "test needs untouched buckets to be meaningful")
+    kept.foreach { n =>
+      assert(stat(n) == before(n), s"untouched file changed: $n")
+      assert(bucketsOf(n).intersect(touched).isEmpty, s"touched bucket kept its file: $n")
     }
-    // touched buckets really were rewritten
-    assert(before.keySet.exists(p => touched.exists(k => p.startsWith(s"__bucket=$k/"))
-      && !after.contains(p)))
+    // touched buckets really were rewritten, and only those
+    assert(replaced.nonEmpty && replaced.forall(n => bucketsOf(n).subsetOf(touched)))
   }
 
-  test("compact collapses per-append small files, preserves content, " +
-      "skips already-compact buckets") {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
+  test("compact collapses per-append small files, preserves content; " +
+      "a compact table is a no-op") {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    val dir = Files.createTempDirectory("compact-").toString
-    val t = new ParquetTable(spark, dir, schema, Some((Seq("k"), 4)))
+    val dir = java.nio.file.Files.createTempDirectory("compact-").toString
+    val t = new LogTable(spark, dir, schema, Some((Seq("k"), 4)))
     // five appends → ≥5 files per populated bucket
     (0 until 5).foreach(i => t.append(Seq((i, s"v$i"), (i + 16, s"w$i")).toDF("k", "v")))
     val before = t.read().as[(Int, String)].collect().toSet
-    def parquetFiles(): Seq[Path] =
-      Files.walk(Path.of(dir, "current")).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-    val filesBefore = parquetFiles().size
-    t.compact(maxFilesPerBucket = 1)
+    val filesBefore = t.liveFileNames().size
+    assert(t.compact() == filesBefore)
     assert(t.read().as[(Int, String)].collect().toSet == before)
-    val filesAfter = parquetFiles().size
-    assert(filesAfter < filesBefore, s"no compaction: $filesBefore -> $filesAfter")
-    // second compact is a no-op: every bucket already at <= 1 file
-    val snapshot = parquetFiles().map(p => p.toString ->
-      Files.getLastModifiedTime(p).toMillis).toMap
-    t.compact(maxFilesPerBucket = 1)
-    assert(parquetFiles().map(p => p.toString ->
-      Files.getLastModifiedTime(p).toMillis).toMap == snapshot)
+    val filesAfter = t.liveFileNames()
+    assert(filesAfter.size <= 4, s"no compaction: $filesBefore -> ${filesAfter.size}")
+    // second compact is a no-op: one file per bucket already, no version cut
+    val v = t.currentVersion
+    assert(t.compact() == 0)
+    assert(t.liveFileNames() == filesAfter && t.currentVersion == v)
   }
 
   /** SCD2 model: per key an append-only version list; a batch row appends
@@ -256,14 +248,16 @@ class MergePropertiesSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     val dir = java.nio.file.Files.createTempDirectory("bucketed-leak-").toString
-    val t = new ParquetTable(spark, dir, schema, Some((Seq("k"), 8)))
+    val t = new LogTable(spark, dir, schema, Some((Seq("k"), 8)))
     t.overwrite((0 until 16).map(k => (k, s"v$k")).toDF("k", "v"))
     val batch = Seq((1, "B1")).toDF("k", "v")
+    val v = t.currentVersion
     intercept[IllegalArgumentException] {
       // not keyed on k: rewrites every key's row → rows land outside the
       // batch's buckets
       t.merge(batch)((cur, _) =>
         cur.withColumn("k", $"k" + 100))
     }
+    assert(t.currentVersion == v, "a leaking merge must commit nothing")
   }
 }

@@ -53,7 +53,7 @@ class MergeSpec extends SparkSpec {
 
   test("gym_logs upsert collapses same-batch logout variants to one row") {
     val dir = java.nio.file.Files.createTempDirectory("gym-").toString
-    val t = new ParquetTable(spark, dir, graft.streaming.Schemas.gymLogs)
+    val t = new LogTable(spark, dir, graft.streaming.Schemas.gymLogs)
     def ts(s: Long) = new java.sql.Timestamp(s * 1000)
     val batch = Seq(
       ("m1", 1L, ts(100), ts(200)),
@@ -96,10 +96,10 @@ class MergeSpec extends SparkSpec {
     assert(twice.count() == 3) // null-keyed row not re-inserted
   }
 
-  test("ParquetTable rewrite-and-swap round trip") {
+  test("LogTable overwrite + merge round trip") {
     val dir = java.nio.file.Files.createTempDirectory("pt-test-").toString
     val schema = org.apache.spark.sql.types.StructType.fromDDL("k int, v string")
-    val t = new ParquetTable(spark, dir, schema)
+    val t = new LogTable(spark, dir, schema)
     assert(t.read().count() == 0)
     t.overwrite(Seq((1, "a")).toDF("k", "v"))
     assert(t.read().count() == 1)

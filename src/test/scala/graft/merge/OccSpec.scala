@@ -23,55 +23,63 @@ class OccSpec extends SparkSpec {
 
   test("conflicting CAS discards the stale staging; rebase equals serial") {
     val root = tmp("occ-basic-")
-    val t = new ParquetTable(spark, root, s2)
-    t.overwrite(Seq((1L, "base"), (2L, "base")).toDF("k", "v"))
-    val tok0 = t.commitToken
-
-    val sA = t.stageMerge(Seq((1L, "A")).toDF("k", "v"))(
-      (cur, b) => Merge.scd1(cur, b, Seq("k")))
-    val sB = t.stageMerge(Seq((2L, "B"), (3L, "B")).toDF("k", "v"))(
-      (cur, b) => Merge.scd1(cur, b, Seq("k")))
-    assert(t.commitToken == tok0, "staging must not commit anything")
-
-    assert(t.commitStaged(sA))
-    assert(!t.commitStaged(sB), "stale staging must fail the CAS")
-    // B's staged tree is discarded on conflict
-    assert(!Files.exists(sB.stagingDir))
-    // without the rebase, A's update to k=1 would be intact but B's
-    // snapshot-of-old-state would have erased it — verify rebase instead
-    assert(t.occMerge(Seq((2L, "B"), (3L, "B")).toDF("k", "v"))(
-      (cur, b) => Merge.scd1(cur, b, Seq("k"))) == 1)
+    val t = new LogTable(spark, root, s2)
+    t.overwrite(Seq((1L, "base"), (2L, "base")).toDF("k", "v"))       // v1
+    val v1Files = t.liveFileNames().toSet
+    var aFiles = Set.empty[String]
+    val aDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // forced interleaving: writer A commits while writer B stages against
+    // the same snapshot, so B's first CAS must fail
+    val attempts = t.occMerge(Seq((2L, "B"), (3L, "B")).toDF("k", "v")) { (cur, b) =>
+      if (aDone.compareAndSet(false, true)) {
+        assert(t.occMerge(Seq((1L, "A")).toDF("k", "v"))(
+          (c, a) => Merge.scd1(c, a, Seq("k"))) == 1)                  // v2
+        aFiles = t.liveFileNames().toSet
+      }
+      Merge.scd1(cur, b, Seq("k"))
+    }
+    assert(attempts == 2, "stale staging must fail the CAS and rebase once")
+    assert(t.currentVersion == 3L)
+    // B's first staged files are discarded on conflict: the data directory
+    // holds exactly the files of the three committed versions
+    val onDisk = LogTable.listDir(java.nio.file.Paths.get(root, "files"))
+      .map(_.getFileName.toString).toSet
+    assert(onDisk == v1Files ++ aFiles ++ t.liveFileNames(),
+      "the losing attempt's staged files were left behind")
+    // without the rebase, B's snapshot-of-old-state would have erased A's
+    // update to k=1
     val got = t.read().orderBy("k").as[(Long, String)].collect().toSeq
     assert(got == Seq((1L, "A"), (2L, "B"), (3L, "B")),
       s"rebase diverged from the serial schedule: $got")
   }
 
   test("every content-changing verb bumps the commit token") {
+    // the token is the log's version number
     val root = tmp("occ-token-")
-    val t = new ParquetTable(spark, root, s2)
-    val t0 = t.commitToken
+    val t = new LogTable(spark, root, s2)
+    val t0 = t.currentVersion
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
-    assert(t.commitToken == t0 + 1)
+    assert(t.currentVersion == t0 + 1)
     t.append(Seq((2L, "b")).toDF("k", "v"))
-    assert(t.commitToken == t0 + 2)
+    assert(t.currentVersion == t0 + 2)
     t.merge(Seq((3L, "c")).toDF("k", "v"))(
       (cur, b) => Merge.insertOnly(cur, b, Seq("k")))
-    assert(t.commitToken == t0 + 3)
+    assert(t.currentVersion == t0 + 3)
     t.deleteWhere(col("k") === 1L)
-    assert(t.commitToken == t0 + 4)
+    assert(t.currentVersion == t0 + 4)
     t.deleteWhere(col("k") === 999L) // matches nothing → NOT a commit
-    assert(t.commitToken == t0 + 4)
-    t.materializeDeletes()
-    assert(t.commitToken == t0 + 5)
+    assert(t.currentVersion == t0 + 4)
+    t.compact() // materializes the deletion vector
+    assert(t.currentVersion == t0 + 5)
   }
 
   test("two racing OCC writers both land; final state is their union") {
     val root = tmp("occ-race-")
-    val t = new ParquetTable(spark, root, s2)
+    val t = new LogTable(spark, root, s2)
     t.overwrite(Seq((0L, "base")).toDF("k", "v"))
     // two handles on the same root, as two writer processes would hold
-    val w1 = new ParquetTable(spark, root, s2)
-    val w2 = new ParquetTable(spark, root, s2)
+    val w1 = new LogTable(spark, root, s2)
+    val w2 = new LogTable(spark, root, s2)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -93,7 +101,7 @@ class OccSpec extends SparkSpec {
 
   test("occMerge gives up loudly after maxAttempts") {
     val root = tmp("occ-livelock-")
-    val t = new ParquetTable(spark, root, s2)
+    val t = new LogTable(spark, root, s2)
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
     // sabotage: the merge function itself commits, so every stage is stale
     val e = intercept[IllegalStateException] {
@@ -111,7 +119,7 @@ class OccSpec extends SparkSpec {
       StructField("v", StringType), StructField("ord", LongType)))
     def run(interleave: Boolean): (Int, Seq[(Long, String, Long)]) = {
       val root = tmp(s"occ-contended-$interleave-")
-      val t = new ParquetTable(spark, root, s3)
+      val t = new LogTable(spark, root, s3)
       t.overwrite(Seq((1L, "seed", 10L), (2L, "seed", 10L)).toDF("k", "v", "ord"))
       val batchA = Seq((1L, "A", 30L), (2L, "A", 20L)).toDF("k", "v", "ord")
       val batchB = Seq((1L, "B", 20L), (2L, "B", 30L)).toDF("k", "v", "ord")
@@ -122,7 +130,7 @@ class OccSpec extends SparkSpec {
       if (!interleave) assert(t.occMerge(batchA)(mergeFn) == 1)
       val attempts = t.occMerge(batchB, maxAttempts = 5) { (cur, b) =>
         // interleave=true: A commits BETWEEN B's snapshot read and CAS, so
-        // B's first attempt must lose (stale CAS or vanished snapshot)
+        // B's first attempt must lose the CAS
         if (interleave && aDone.compareAndSet(false, true))
           assert(t.occMerge(batchA)(mergeFn) == 1)
         mergeFn(cur, b)
@@ -159,111 +167,5 @@ class OccSpec extends SparkSpec {
     }
     assert(t.lastTxn("app") == 1L &&
       t.read().as[(Long, String)].collect().toSeq == Seq((1L, "b1")))
-  }
-
-  test("bucketed tables reject OCC staging loudly") {
-    val root = tmp("occ-bucketed-")
-    val t = new ParquetTable(spark, root, s2, bucketBy = Some((Seq("k"), 4)))
-    t.overwrite(Seq((1L, "a")).toDF("k", "v"))
-    val e = intercept[IllegalArgumentException](
-      t.stageMerge(Seq((2L, "b")).toDF("k", "v"))(
-        (cur, b) => Merge.insertOnly(cur, b, Seq("k"))))
-    assert(e.getMessage.contains("unbucketed"))
-  }
-
-  test("snapshotVanished classifies every face of the vanished-snapshot race" +
-      " — and ONLY paths under this table's root") {
-    val root = tmp("occ-classify-")
-    val t = new ParquetTable(spark, root, s2)
-    // face 1: a scan task hits a retired file (FNF somewhere in the chain)
-    assert(t.snapshotVanished(new RuntimeException("wrap",
-      new java.io.FileNotFoundException(
-        s"File file:$root/current/part-0000.parquet does not exist"))))
-    // face 2: Spark's FAILED_READ_FILE.FILE_NOT_EXIST wrapper (message-level;
-    // Spark does not always chain the FNF cause through the task failure)
-    assert(t.snapshotVanished(new org.apache.spark.SparkException(
-      "[FAILED_READ_FILE.FILE_NOT_EXIST] Encountered error while reading file " +
-        s"file://$root/current/part-0.parquet. File does not exist.")))
-    // face 3: analysis-time PATH_NOT_FOUND — swapIn's two renames leave a
-    // window where `current` itself is absent, so a concurrent stager's
-    // read() fails before any file opens (the un-retried s35 failure mode)
-    assert(t.snapshotVanished(new RuntimeException("stream wrapper",
-      new org.apache.spark.sql.AnalysisException(
-        errorClass = "PATH_NOT_FOUND",
-        messageParameters = Map("path" -> s"file:$root/current")))))
-    // a genuine error is NOT a conflict
-    assert(!t.snapshotVanished(new IllegalStateException("schema mismatch")))
-    // and neither is a missing FOREIGN path (ADVICE r12): a mistyped source
-    // dir or a file read inside the caller's merge function must surface,
-    // not be retried to exhaustion as a phantom writer storm
-    assert(!t.snapshotVanished(new RuntimeException("wrap",
-      new java.io.FileNotFoundException(
-        "File file:/somewhere/else/input.parquet does not exist"))))
-    assert(!t.snapshotVanished(new org.apache.spark.sql.AnalysisException(
-      errorClass = "PATH_NOT_FOUND",
-      messageParameters = Map("path" -> "file:/somewhere/else/input"))))
-    // a caller's own message MENTIONING the marker without the class or a
-    // root path is not a conflict either
-    assert(!t.snapshotVanished(new RuntimeException(
-      "my job failed; see PATH_NOT_FOUND docs")))
-  }
-
-  test("snapshotVanished's bare-name FNF face: classified when the name is " +
-      "in the attempt's snapshot, foreign bare names still surface") {
-    val root = tmp("occ-barename-")
-    val t = new ParquetTable(spark, root, s2)
-    // an FNF raised with ONLY a basename (no path) — e.g. a local-fs layer
-    // that formats "name (No such file or directory)" — classifies iff the
-    // name belongs to the snapshot the failed attempt staged from (r13
-    // ADVICE: the root-path requirement alone would skip the OCC retry and
-    // fail a concurrent writer spuriously)
-    val snapNames = Set("part-00000-abc.snappy.parquet")
-    assert(t.snapshotVanished(new RuntimeException("wrap",
-      new java.io.FileNotFoundException(
-        "part-00000-abc.snappy.parquet (No such file or directory)")),
-      snapNames))
-    // a caller's foreign bare-name FNF is NOT in the snapshot set → real error
-    assert(!t.snapshotVanished(new RuntimeException("wrap",
-      new java.io.FileNotFoundException(
-        "sideinput.parquet (No such file or directory)")), snapNames))
-    // default (no snapshot set) keeps the strict r12 contract
-    assert(!t.snapshotVanished(new java.io.FileNotFoundException(
-      "part-00000-abc.snappy.parquet (No such file or directory)")))
-    // TOKEN boundary (r14 ADVICE): the snapshot name embedded inside a
-    // LONGER filename token is a different file — a caller-side error about
-    // its own artifact must not read as a conflict
-    assert(!t.snapshotVanished(new java.io.FileNotFoundException(
-      "backup-part-00000-abc.snappy.parquet (No such file or directory)"),
-      snapNames))
-    assert(!t.snapshotVanished(new java.io.FileNotFoundException(
-      "part-00000-abc.snappy.parquet.bak (No such file or directory)"),
-      snapNames))
-    // but ordinary delimiters (path separators, quotes, spaces, string
-    // edges) around the exact name still classify
-    assert(t.snapshotVanished(new java.io.FileNotFoundException(
-      "File 'some/dir/part-00000-abc.snappy.parquet' does not exist"),
-      snapNames))
-    assert(t.snapshotVanished(new java.io.FileNotFoundException(
-      "part-00000-abc.snappy.parquet"), snapNames))
-  }
-
-  test("stageMerge reports the staged-from snapshot's basenames at " +
-      "resolution time (the set occMerge classifies bare-name FNFs against)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val root = tmp("occ-snapcap-")
-    val t = new ParquetTable(spark, root, s2)
-    t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val seen = new java.util.concurrent.atomic.AtomicReference(Set.empty[String])
-    val staged = t.stageMerge(Seq((3L, "c")).toDF("k", "v"), seen.set) {
-      (cur, batch) => cur.unionByName(batch)
-    }
-    assert(t.commitStaged(staged))
-    val names = seen.get
-    assert(names.nonEmpty, "no snapshot basenames captured during staging")
-    assert(names.forall(_.endsWith(".parquet")))
-    // the captured set is the PRE-merge snapshot: re-listing the committed
-    // table yields a different generation's files
-    assert(t.read().count() == 3L)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** Schema evolution (additive mergeSchema analog) + CHECK-constraint
-  * enforcement on [[ParquetTable]] write paths. */
+  * enforcement on [[LogTable]] write paths. */
 class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,31 +31,31 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("evolve widens reads null-filled, appends carry the column, old files untouched") {
     val root = tmp("evo-")
-    val t = new ParquetTable(spark, root, s3)
+    val t = new LogTable(spark, root, s3)
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val before = fileState(java.nio.file.Paths.get(root, "current"))
+    val before = fileState(java.nio.file.Paths.get(root, "files"))
 
-    val t2 = t.evolve(s4)
-    t2.append(Seq((3L, "c", 30), (4L, "d", 40)).toDF("k", "v", "extra"))
+    t.evolve(s4)
+    t.append(Seq((3L, "c", 30), (4L, "d", 40)).toDF("k", "v", "extra"))
 
     // old rows null-filled on the evolved column; new rows carry values
-    val got = t2.read().orderBy($"k")
+    val got = t.read().orderBy($"k")
       .as[(Long, String, Option[Int])].collect().toSeq
     assert(got == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(30)), (4L, "d", Some(40))))
 
     // pre-evolution files byte-identical (size + mtime): no rewrite happened
-    val after = fileState(java.nio.file.Paths.get(root, "current"))
+    val after = fileState(java.nio.file.Paths.get(root, "files"))
     before.foreach { case (f, st) =>
       assert(after.get(f).contains(st), s"pre-evolution file rewritten: $f")
     }
 
-    // the narrow handle still reads its own projection of the same table
-    assert(t.read().columns.toSeq == Seq("k", "v"))
+    // the pre-evolution version still reads with the schema it had
+    assert(t.readVersion(1).columns.toSeq == Seq("k", "v"))
   }
 
   test("evolution rules: drops, renames, and type changes fail loudly") {
     val root = tmp("evo-rules-")
-    val t = new ParquetTable(spark, root, s4)
+    val t = new LogTable(spark, root, s4)
     val dropped = StructType(Seq(StructField("k", LongType)))
     val retyped = StructType(Seq(
       StructField("k", IntegerType), StructField("v", StringType),
@@ -68,19 +68,20 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("evolved table still merges: old rows join null-filled") {
     val root = tmp("evo-merge-")
-    val t = new ParquetTable(spark, root, s3)
+    val t = new LogTable(spark, root, s3)
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val t2 = t.evolve(s4)
-    t2.merge(Seq((2L, "B", 20), (3L, "c", 30)).toDF("k", "v", "extra"))(
+    t.evolve(s4)
+    t.merge(Seq((2L, "B", 20), (3L, "c", 30)).toDF("k", "v", "extra"))(
       (cur, batch) => Merge.scd1(cur, batch, Seq("k")))
-    val got = t2.read().orderBy($"k").as[(Long, String, Option[Int])].collect().toSeq
+    val got = t.read().orderBy($"k").as[(Long, String, Option[Int])].collect().toSeq
     assert(got == Seq((1L, "a", None), (2L, "B", Some(20)), (3L, "c", Some(30))))
   }
 
   test("CHECK constraints: violating writes fail loudly naming the constraint, table untouched") {
     val root = tmp("check-")
-    val t = new ParquetTable(spark, root, s3,
-      checks = Seq("k_positive" -> "k > 0", "v_not_null" -> "v IS NOT NULL"))
+    val t = new LogTable(spark, root, s3)
+    t.addConstraint("k_positive", "k > 0")
+    t.addConstraint("v_not_null", "v IS NOT NULL")
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
 
     def messages(e: Throwable): Seq[String] =
@@ -98,14 +99,5 @@ class SchemaEvolutionSpec extends SparkSpec {
 
     // failed writes left the live table exactly as it was
     assert(t.read().as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-  }
-
-  test("CHECK null-condition passes (SQL CHECK semantics)") {
-    val root = tmp("check-null-")
-    val t = new ParquetTable(spark, root,
-      StructType(Seq(StructField("k", LongType), StructField("n", IntegerType))),
-      checks = Seq("n_small" -> "n < 100")) // NULL n => NULL condition => pass
-    t.overwrite(Seq((1L, Some(5)), (2L, None)).toDF("k", "n"))
-    assert(t.read().count() == 2)
   }
 }

@@ -3,24 +3,25 @@ package graft.merge
 import java.nio.file.Files
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.SparkSpec
+import graft.ops.IncrementalView
 
-/** Time travel (`keepVersions > 0`): the Delta `VERSION AS OF` analog on the
-  * rename-swap [[ParquetTable]]. Pins: versions are cut per overwrite/merge,
-  * readVersion returns the HISTORICAL state (not current), retention prunes
-  * oldest-first, version identity survives a reopen (the `_gen` marker), and
-  * the bucketed combination is rejected loudly. */
+/** Time travel: the Delta `VERSION AS OF` analog on a [[LogTable]]. Pins:
+  * every commit is a version, readVersion returns the HISTORICAL state (not
+  * current), retention ([[LogTable.vacuum]]) prunes oldest-first, version
+  * identity survives a reopen (it lives in the log), and the keyed change
+  * feed reports each commit's exact delta. */
 class TimeTravelSpec extends SparkSpec {
   import spark.implicits._
 
   private val schema = new StructType().add("k", LongType).add("v", StringType)
 
-  private def table(keep: Int): (ParquetTable, String) = {
+  private def table(): (LogTable, String) = {
     val dir = Files.createTempDirectory("graft-tt-").toString
-    (new ParquetTable(spark, dir, schema, keepVersions = keep), dir)
+    (new LogTable(spark, dir, schema), dir)
   }
 
   test("readVersion returns each retained historical state exactly") {
-    val (t, _) = table(keep = 3)
+    val (t, _) = table()
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))                    // v1
     t.merge(Seq((2L, "b")).toDF("k", "v"))(                       // v2
       (cur, b) => Merge.insertOnly(cur, b, Seq("k")))
@@ -38,10 +39,11 @@ class TimeTravelSpec extends SparkSpec {
     assert(e.getMessage.contains("readable versions"))
   }
 
-  test("retention keeps only the newest keepVersions retained dirs") {
-    val (t, _) = table(keep = 2)
+  test("retention: vacuum(retainLast) keeps only the newest versions") {
+    val (t, _) = table()
     (1 to 5).foreach(i => t.overwrite(Seq((i.toLong, s"v$i")).toDF("k", "v")))
-    // current = 5; retained = {3, 4} (1 and 2 pruned oldest-first)
+    t.vacuum(retainLast = 3)
+    // live = 5; retained = {3, 4} (1 and 2 pruned oldest-first)
     assert(t.history() == Seq(3L, 4L, 5L))
     intercept[IllegalArgumentException](t.readVersion(1))
     assert(t.readVersion(4).as[(Long, String)].collect().toSeq ==
@@ -49,51 +51,44 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("version identity survives reopening the table directory") {
-    val (t, dir) = table(keep = 3)
+    val (t, dir) = table()
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))
     t.overwrite(Seq((1L, "b")).toDF("k", "v"))
-    val reopened = new ParquetTable(spark, dir, schema, keepVersions = 3)
+    val reopened = new LogTable(spark, dir, schema)
     assert(reopened.currentVersion == 2L)
     assert(reopened.history() == Seq(1L, 2L))
-    // generation numbering resumes past the retained dirs: the next write
-    // must not collide with .v-1
+    // version numbering resumes past the log: the next write must not
+    // collide with version 1 or 2
     reopened.overwrite(Seq((1L, "c")).toDF("k", "v"))
     assert(reopened.history() == Seq(1L, 2L, 3L))
     assert(reopened.readVersion(1).as[(Long, String)].collect().toSeq ==
       Seq((1L, "a")))
   }
 
-  test("bucketed + keepVersions is rejected loudly") {
-    val dir = Files.createTempDirectory("graft-tt-").toString
-    val e = intercept[IllegalArgumentException](
-      new ParquetTable(spark, dir, schema, Some((Seq("k"), 4)), keepVersions = 2))
-    assert(e.getMessage.contains("commit log"))
-  }
-
   test("changes() reports the exact row-level delta of each commit") {
-    val (t, _) = table(keep = 4)
+    val (t, _) = table()
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))         // v1
     t.merge(Seq((1L, "A"), (3L, "c")).toDF("k", "v"))(            // v2: update 1, insert 3
       (cur, b) => Merge.scd1(cur, b, Seq("k")))
     t.overwrite(t.read().filter($"k" =!= 2L))                     // v3: delete 2
-    val ch = t.changes(1, 3, Seq("k"))
-      .as[(Long, String, String, Long)].collect().toSet
+    def changes(from: Long, to: Long) = IncrementalView.keyedChanges(t, from, to, Seq("k"))
+    val ch = changes(1, 3).as[(Long, String, String, Long)].collect().toSet
     assert(ch == Set(
       (1L, "a", "update_preimage", 2L),
       (1L, "A", "update_postimage", 2L),
       (3L, "c", "insert", 2L),
       (2L, "b", "delete", 3L)))
     // unchanged rows emit nothing; a single-pair slice sees only its commit
-    assert(t.changes(2, 3, Seq("k")).as[(Long, String, String, Long)]
+    assert(changes(2, 3).as[(Long, String, String, Long)]
       .collect().toSet == Set((2L, "b", "delete", 3L)))
     // endpoints must be readable and ordered
-    intercept[IllegalArgumentException](t.changes(1, 99, Seq("k")))
-    intercept[IllegalArgumentException](t.changes(3, 1, Seq("k")))
+    intercept[IllegalArgumentException](changes(1, 99))
+    intercept[IllegalArgumentException](changes(3, 1))
   }
 
   test("restore rolls FORWARD: new version with the old content, history " +
       "intact, undoable; unversioned/unknown targets fail loudly") {
-    val (t, _) = table(keep = 4)
+    val (t, _) = table()
     t.overwrite(Seq((1L, "a")).toDF("k", "v"))                    // v1
     t.merge(Seq((2L, "b")).toDF("k", "v"))(                       // v2
       (cur, b) => Merge.insertOnly(cur, b, Seq("k")))
@@ -111,22 +106,8 @@ class TimeTravelSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b")))
     // unknown version fails loudly
     intercept[IllegalArgumentException](t.restore(99))
-    // unversioned table refuses restore
-    val (u, _) = table(keep = 0)
-    u.overwrite(Seq((1L, "a")).toDF("k", "v"))
+    // a never-written table has no version to restore
+    val (u, _) = table()
     intercept[IllegalArgumentException](u.restore(1))
-  }
-
-  test("keepVersions=0 tables behave exactly as before (no version dirs)") {
-    val (t, dir) = table(keep = 0)
-    t.overwrite(Seq((1L, "a")).toDF("k", "v"))
-    t.overwrite(Seq((1L, "b")).toDF("k", "v"))
-    import scala.jdk.CollectionConverters._
-    val names = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    // `_commits` is the OCC token (OccSpec) — the only other root artifact
-    assert(names == Set("current", "_commits"))
-    assert(t.history().isEmpty)
-    assert(t.currentVersion == 0L)
   }
 }

@@ -70,41 +70,36 @@ class DataSkippingSpec extends SparkSpec {
     assert(got == ((want.size.toLong, want.map(_._1).sum)))
   }
 
-  test("ParquetTable statsBy: manifest rides overwrite/append/clone, readRange ≡ filter") {
-    import graft.merge.ParquetTable
+  test("LogTable statsBy: stats ride overwrite/append/clone, readRange ≡ filter") {
+    import graft.merge.LogTable
     import org.apache.spark.sql.types._
     val root = tmp("skip-table-")
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("m", IntegerType), StructField("payload", StringType)))
-    val t = new ParquetTable(spark, root, schema, statsBy = Seq("k"))
+    val t = new LogTable(spark, root, schema, statsBy = Seq("k"))
 
-    // overwrite: manifest built on staging, swapped in with the data
+    // overwrite: per-file stats land in the commit's manifest entries
     t.overwrite(rows.toDF("k", "m", "payload").repartitionByRange(8, $"k"))
-    val cur = s"$root/current"
-    val total = spark.read.parquet(cur).inputFiles.length
-    val kept = DataSkipping.prunedFiles(spark, cur, "k", lit(100L), lit(299L))
-    assert(kept.nonEmpty && kept.length < total, s"${kept.length} of $total")
+    val total = t.read().inputFiles.length
+    val kept = t.readRange("k", lit(100L), lit(299L)).inputFiles.length
+    assert(kept > 0 && kept < total, s"$kept of $total")
     def rr(lo: Long, hi: Long) = t.readRange("k", lit(lo), lit(hi))
       .orderBy($"k").as[(Long, Int, String)].collect().toSeq
     assert(rr(100L, 299L) == rows.filter(r => r._1 >= 100 && r._1 <= 299))
 
-    // append: manifest maintained incrementally, new range findable
+    // append: stats computed for the new files only, new range findable
     val extra = (4096 until 4600).map(i => (i.toLong, i % 97, s"p$i"))
     t.append(extra.toDF("k", "m", "payload").repartitionByRange(2, $"k"))
     assert(rr(4500L, 4550L) == extra.filter(r => r._1 >= 4500 && r._1 <= 4550))
     assert(rr(100L, 299L) == rows.filter(r => r._1 >= 100 && r._1 <= 299))
 
-    // clone: relative manifest names keep readRange working on the clone
+    // clone: the stats ride the cloned manifest
     val c = t.cloneTo(tmp("skip-clone-") + "/t2")
     assert(c.readRange("k", lit(100L), lit(299L)).count() == 200)
 
-    // contracts: un-statted column and bucketed+statsBy fail loudly
+    // contract: an un-statted column fails loudly
     assert(intercept[IllegalArgumentException](t.readRange("m", lit(0), lit(1)))
       .getMessage.contains("no file stats"))
-    assert(intercept[IllegalArgumentException](
-      new ParquetTable(spark, tmp("skip-b-"), schema,
-        bucketBy = Some((Seq("k"), 4)), statsBy = Seq("k")))
-      .getMessage.contains("unbucketed"))
   }
 
   test("all-null stat column: file pruned, correct for range predicates") {

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.merge.{Merge, ParquetTable}
+import graft.merge.{LogTable, Merge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
@@ -20,7 +20,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("delta-maintained aggregate equals recompute through migration, birth, and death") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivm-").toString
-    val t = new ParquetTable(spark, dir, schema, keepVersions = 4)
+    val t = new LogTable(spark, dir, schema)
     t.overwrite(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L)).toDF("k", "g", "x")) // v1
     // v2: update 1 a→b (migration), insert 4 into new group c (birth)
     t.merge(Seq((1L, "b", 11L), (4L, "c", 7L)).toDF("k", "g", "x"))(
@@ -29,7 +29,7 @@ class IncrementalViewSpec extends SparkSpec {
     t.overwrite(t.read().filter($"k" =!= 4L))
     val prior = agg(t.readVersion(1))
     val maintained = IncrementalView.applyDelta(
-      prior, t.changes(1, 3, Seq("k")), Seq("g"), Seq("x"))
+      prior, IncrementalView.keyedChanges(t, 1, 3, Seq("k")), Seq("g"), Seq("x"))
       .orderBy("g").as[(String, Long, Long)].collect().toSeq
     val recomputed = agg(t.readVersion(3))
       .orderBy("g").as[(String, Long, Long)].collect().toSeq

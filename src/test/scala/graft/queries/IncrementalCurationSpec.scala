@@ -60,7 +60,7 @@ class IncrementalCurationSpec extends SparkSpec {
     p.freezeBench(bench)
     p.ingest(corpus.filter(col("doc_id") % 10 < 7))
     p.ingest(corpus.filter(col("doc_id") % 10 >= 5))
-    assert(spark.read.parquet(s"$root/bg/current").count() ==
+    assert(spark.read.format("graft-logtable").load(s"$root/bg").count() ==
       TextQueries.lmBigrams(corpus).count(),
       "stored bigram rows must match a one-shot tokenization of the union")
   }

@@ -386,7 +386,7 @@ class PlanAuditSpec extends SparkSpec {
       val data = spark.range(50000).select(
         xxhash64(col("id")).as("k"), md5(col("id").cast("string")).as("payload"))
       val root = java.nio.file.Files.createTempDirectory("rg-skip-").toString
-      val tbl = new graft.merge.ParquetTable(spark, root, schema, Some((Seq("k"), 2)))
+      val tbl = new graft.merge.LogTable(spark, root, schema, Some((Seq("k"), 2)))
       tbl.overwrite(data)
       val probe = data.orderBy("id").limit(1).collect()(0).getLong(0)
       val sortedScan = scannedRows(tbl.read().filter(col("k") === probe))
@@ -655,7 +655,7 @@ class PlanAuditSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val root = java.nio.file.Files.createTempDirectory("dv-plan-").toString
-    val t = new graft.merge.ParquetTable(spark, root,
+    val t = new graft.merge.LogTable(spark, root,
       org.apache.spark.sql.types.StructType.fromDDL("k bigint, v string"))
     t.overwrite((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteWhere(col("k") % 100 === 0)
