@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * the right side of a left join — so projection-heavy rows (BPE encode,
   * PII redaction, recall evals) read phantom-fast (d36 0.13 s under count
   * vs 0.6 s real; d41 0.18 vs 1.14; v23 0.28 vs 0.84). Each run now
-  * aggregates over every output column (the `Scratch qf` protocol), so the
-  * round record measures the work a consumer of the result would pay for.
+  * aggregates over every output column ([[forceAll]]; [[Probe]] times
+  * single rows the same way), so the round record measures the work a
+  * consumer of the result would pay for.
   */
 object Bench {
   /** One aggregate per output column — nothing in the plan is prunable. */
@@ -39,8 +40,9 @@ object Bench {
   }
 
   /** The bench session: `local[cpus]`, one shuffle partition per core,
-    * UTC, AQE on. [[PlanDump]] builds the same shape, so dumped plans are
-    * the plans the bench times. */
+    * UTC, AQE on. [[Verify]], [[PlanDump]] and [[Probe]] build the same
+    * shape, so verified rows, dumped plans and probe timings are the plans
+    * the bench times. */
   def session(cpus: String): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -49,6 +51,14 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** Session init, codegen paths and parquet footer reads, paid before
+    * the first timed row. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    graft.sources.Tables.names.foreach(n =>
+      graft.sources.Tables(spark, sfDir, n).count())
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -85,10 +95,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     def loadAvg: Double = loadNow
     val loadStart = loadAvg
-    // warm-up: session init, codegen paths, parquet footer reads
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    graft.sources.Tables.names.foreach(n =>
-      graft.sources.Tables(spark, sfDir, n).count())
+    warmUp(spark, sfDir)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // streaming rows (s*) get ONE untimed warm-up drain first (r13): the
       // drain/iterative class was the volatile one across quiet closes

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
 
 /** COMMIT-LOG TABLE — the repo's one table format: the Delta/Iceberg
   * metadata design (immutable data files + an append-only manifest log),
@@ -884,60 +884,53 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   private val DvName = "__dv_name"
   private val DvPos = "__dv_pos"
 
-  /** Read `entries` with `as` as the read schema — files written before an
-    * [[evolve]] lack the newer columns and come back null-filled (the
-    * mergeSchema read, served from the log's schema instead of a footer
-    * scan). */
-  private def readData(entries: Seq[FileEntry], dv: Seq[String],
-                       as: StructType): DataFrame = {
-    if (entries.isEmpty) return emptyDf(as)
-    // files hold PHYSICAL names; read physical (older files null-fill
-    // missing physical columns), project back to the logical names of `as`
-    val raw = spark.read.schema(physicalSchema(as))
-      .parquet(entries.map(e => filesDir.resolve(e.name).toString): _*)
-    val out = if (dv.isEmpty) raw
-    else {
-      val dvDf = spark.read.parquet(dv.map(d => filesDir.resolve(d).toString): _*)
-      raw
-        .withColumn(DvName,
-          regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
-        .withColumn(DvPos, col("_metadata.row_index"))
-        .join(broadcast(dvDf), Seq(DvName, DvPos), "left_anti")
-        .drop(DvName, DvPos)
-    }
-    out.select(as.fields.map(f => col(physicalOf(f)).as(f.name)).toIndexedSeq: _*)
-  }
-
-  /** [[readData]] + the stable `_row_id` column (row-tracking read): id =
-    * the file's allocated base + the row's index within the file, or the
-    * MATERIALIZED id column for files rewritten by OPTIMIZE. Base lookup is
-    * a broadcast join on file name (O(#files) rows); ids are computed
-    * BEFORE the DV anti-join, so surviving rows keep their ids across
-    * deletes. */
-  private def readDataWithIds(entries: Seq[FileEntry], dv: Seq[String],
-                              as: StructType): DataFrame = {
+  /** THE scan: `entries` read with `as` as the read schema — files written
+    * before an [[evolve]] lack the newer columns and come back null-filled
+    * (the mergeSchema read, served from the log's schema instead of a
+    * footer scan) — minus the rows the `dv` sidecars delete, projected to
+    * the logical names of `as`. Files hold PHYSICAL names, so the read is
+    * physical. Optional columns, in this order after the logical ones:
+    *   - `keepPos`: the (file name, row index) plumbing columns the DV
+    *     writers and the change feed key on;
+    *   - `withIds`: the stable `_row_id` (row-tracking read): the file's
+    *     allocated base + the row's index within the file, or the
+    *     MATERIALIZED id column for files rewritten by OPTIMIZE. The base
+    *     lookup is a broadcast join on file name (O(#files) rows); ids are
+    *     computed BEFORE the DV anti-join, so surviving rows keep their ids
+    *     across deletes.
+    * Without DVs, positions or ids the plan is a bare projected scan (no
+    * `_metadata` columns). */
+  private def scan(entries: Seq[FileEntry], dv: Seq[String], as: StructType,
+                   keepPos: Boolean = false, withIds: Boolean = false): DataFrame = {
     import spark.implicits._
-    val withId = StructType(as.fields :+
-      StructField(LogTable.RowIdCol, org.apache.spark.sql.types.LongType))
-    if (entries.isEmpty) return emptyDf(withId)
-    val readSchema = StructType(physicalSchema(as).fields :+
-      StructField(LogTable.MatRowIdCol, org.apache.spark.sql.types.LongType))
-    val bases = entries.filter(_.baseRowId >= 0)
-      .map(e => (e.name, e.baseRowId)).toDF(DvName, "__base")
+    val posFields =
+      if (keepPos) Seq(StructField(DvName, StringType), StructField(DvPos, LongType))
+      else Seq.empty
+    val idFields = if (withIds) Seq(StructField(LogTable.RowIdCol, LongType)) else Seq.empty
+    if (entries.isEmpty) return emptyDf(StructType(as.fields ++ posFields ++ idFields))
+    val readSchema =
+      if (!withIds) physicalSchema(as)
+      else StructType(physicalSchema(as).fields :+ StructField(LogTable.MatRowIdCol, LongType))
     val raw = spark.read.schema(readSchema)
       .parquet(entries.map(e => filesDir.resolve(e.name).toString): _*)
-      .withColumn(DvName,
-        regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
-      .withColumn(DvPos, col("_metadata.row_index"))
-      .join(broadcast(bases), Seq(DvName), "left")
-      .withColumn(LogTable.RowIdCol,
-        coalesce(col(LogTable.MatRowIdCol), col("__base") + col(DvPos)))
-    val out = if (dv.isEmpty) raw
-    else raw.join(
-      broadcast(spark.read.parquet(dv.map(d => filesDir.resolve(d).toString): _*)),
-      Seq(DvName, DvPos), "left_anti")
-    out.select((as.fields.map(f => col(physicalOf(f)).as(f.name))
-      :+ col(LogTable.RowIdCol)).toIndexedSeq: _*)
+    val located = if (!keepPos && !withIds && dv.isEmpty) raw
+      else raw
+        .withColumn(DvName, regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
+        .withColumn(DvPos, col("_metadata.row_index"))
+    val ided = if (!withIds) located
+      else {
+        val bases = entries.filter(_.baseRowId >= 0)
+          .map(e => (e.name, e.baseRowId)).toDF(DvName, "__base")
+        located.join(broadcast(bases), Seq(DvName), "left")
+          .withColumn(LogTable.RowIdCol,
+            coalesce(col(LogTable.MatRowIdCol), col("__base") + col(DvPos)))
+      }
+    val live = if (dv.isEmpty) ided
+      else ided.join(
+        broadcast(spark.read.parquet(dv.map(d => filesDir.resolve(d).toString): _*)),
+        Seq(DvName, DvPos), "left_anti")
+    live.select((as.fields.map(f => col(physicalOf(f)).as(f.name)).toSeq ++
+      (posFields ++ idFields).map(f => col(f.name))): _*)
   }
 
   /** Live table with the stable `_row_id` column (requires
@@ -951,8 +944,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(trackingEnabled, "table was not created with rowTracking = true")
     val v = currentVersion
     if (v == 0) emptyDf(StructType(schema.fields :+
-      StructField(LogTable.RowIdCol, org.apache.spark.sql.types.LongType)))
-    else { val s = snapshotAt(v); readDataWithIds(s.files, s.dv, s.schema) }
+      StructField(LogTable.RowIdCol, LongType)))
+    else { val s = snapshotAt(v); scan(s.files, s.dv, s.schema, withIds = true) }
   }
 
   /** Version `v` with row ids — time travel composes with row tracking
@@ -961,7 +954,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   def readVersionWithRowIds(v: Long): DataFrame = {
     require(trackingEnabled, "table was not created with rowTracking = true")
     val s = snapshotAt(v)
-    readDataWithIds(s.files, s.dv, s.schema)
+    scan(s.files, s.dv, s.schema, withIds = true)
   }
 
   /** Highest allocated row-tracking id (0 before any tracked write) — the
@@ -975,7 +968,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   def read(): DataFrame = {
     val v = currentVersion
     if (v == 0) emptyDf
-    else { val s = snapshotAt(v); readData(s.files, s.dv, s.schema) }
+    else { val s = snapshotAt(v); scan(s.files, s.dv, s.schema) }
   }
 
   /** The table as of version `v` — INCLUDING that version's deletion
@@ -983,7 +976,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * is a named version here, served with the schema it had). */
   def readVersion(v: Long): DataFrame = {
     val s = snapshotAt(v)
-    readData(s.files, s.dv, s.schema)
+    scan(s.files, s.dv, s.schema)
   }
 
   /** The in-commit timestamp of version `v` (ms; strictly increasing across
@@ -1071,7 +1064,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           .select("__name").collect().map(_.getString(0)).toSet
         noStats ++ withStats.filter(e => surviving.contains(e.name))
       }
-    readData(kept, m.dv, m.schema).filter(col(c) >= lo && col(c) <= hi)
+    scan(kept, m.dv, m.schema).filter(col(c) >= lo && col(c) <= hi)
   }
 
   /** Number of files the live version references (spec hook). */
@@ -1149,14 +1142,14 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         case Some(m) =>
           // one predicate scan to find the touched files (live rows only —
           // a file whose sole matches are DV-deleted is kept verbatim)
-          val matched = readDataWithPos(m).filter(cond)
+          val matched = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
             .select(col(DvName)).distinct()
             .collect().map(_.getString(0)).toSet
           val (rewrite, keep) = m.files.partition(e => matched(e.name))
           // keep rows where the predicate is NOT SATISFIED — `!cond` alone
           // drops NULL-valued rows (neither matched nor kept, silent data
           // loss); coalesce to false mirrors SQL DELETE / deleteWhere
-          val remainder = readData(rewrite, m.dv, m.schema)
+          val remainder = scan(rewrite, m.dv, m.schema)
             .filter(!coalesce(cond, lit(false)))
           val fresh = writeFiles(remainder.unionByName(validated), m.schema)
           // stale DV rows for removed files are inert (fresh files get new
@@ -1187,7 +1180,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           set.keys.foreach(k => require(m.schema.fieldNames.contains(k),
             s"updateWhere: unknown column '$k'"))
           // one scan: touched files AND the matched-row count together
-          val perFile = readDataWithPos(m).filter(cond)
+          val perFile = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
             .groupBy(col(DvName)).agg(count(lit(1)).as("n"))
             .collect().map(r => r.getString(0) -> r.getLong(1))
           updated = perFile.map(_._2).sum
@@ -1196,7 +1189,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             val matched = perFile.map(_._1).toSet
             val (rewrite, keep) = m.files.partition(e => matched(e.name))
             val c = coalesce(cond, lit(false)) // NULL predicate = not matched
-            val upd = readData(rewrite, m.dv, m.schema)
+            val upd = scan(rewrite, m.dv, m.schema)
               .select(m.schema.fields.map { f =>
                 set.get(f.name)
                   .map(v => when(c, v.cast(f.dataType)).otherwise(col(f.name)))
@@ -1259,7 +1252,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       snap match {
         case None => deleted = 0L; None // empty table: nothing to commit
         case Some(m) =>
-          val live = readDataWithPos(m).filter(cond)
+          val live = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
             .select(col(DvName), col(DvPos)).localCheckpoint(true)
           deleted = live.count()
           if (deleted == 0) None // no matches: no version cut
@@ -1276,19 +1269,6 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       }
     }
     deleted
-  }
-
-  private def readDataWithPos(m: Snapshot): DataFrame = {
-    val raw = spark.read.schema(physicalSchema(m.schema))
-      .parquet(m.files.map(e => filesDir.resolve(e.name).toString): _*)
-      .withColumn(DvName, regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
-      .withColumn(DvPos, col("_metadata.row_index"))
-    val undeleted = if (m.dv.isEmpty) raw
-    else raw.join(
-      broadcast(spark.read.parquet(m.dv.map(d => filesDir.resolve(d).toString): _*)),
-      Seq(DvName, DvPos), "left_anti")
-    undeleted.select((m.schema.fields.map(f => col(physicalOf(f)).as(f.name))
-      :+ col(DvName) :+ col(DvPos)).toIndexedSeq: _*)
   }
 
   /** OCC merge: the commit loop IS the protocol — staging runs lock-free
@@ -1324,7 +1304,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         None // already delivered: no version cut
       else bucketBy match {
         case None =>
-          val cur = snap.map(m => readData(m.files, m.dv, m.schema)).getOrElse(emptyDf)
+          val cur = snap.map(m => scan(m.files, m.dv, m.schema)).getOrElse(emptyDf)
           val fresh = writeFiles(withChecks(f(cur, batch), snap),
             snap.map(_.schema).getOrElse(schema))
           Some((fresh, Seq.empty, fresh))
@@ -1342,7 +1322,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
               .partition(e => touched.contains(e.bucket))
             val dv = snap.map(_.dv).getOrElse(Seq.empty)
             val as = snap.map(_.schema).getOrElse(schema)
-            val cur = if (hit.isEmpty) emptyDf(as) else readData(hit, dv, as)
+            val cur = if (hit.isEmpty) emptyDf(as) else scan(hit, dv, as)
             val fresh = writeFiles(withChecks(f(cur, batch), snap), as)
             val stray = fresh.map(_.bucket).toSet -- touched
             if (stray.nonEmpty) dropFiles(fresh)
@@ -1394,10 +1374,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             // new files (Delta's materialized row-id column), so ids survive
             // the re-layout — the rewritten entries carry no base/rows and
             // allocate nothing
-            val src =
-              if (trackingEnabled) readDataWithIds(m.files, m.dv, m.schema)
-                .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
-              else readData(m.files, m.dv, m.schema)
+            val src = scan(m.files, m.dv, m.schema, withIds = trackingEnabled)
+              .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
             val fresh = writeFiles(src, m.schema,
               coalesceTo = if (bucketBy.isEmpty) Some(want) else None,
               clusterBy = clusterBy)
@@ -1439,10 +1417,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           else {
             val bytes = todo.map(e => Files.size(filesDir.resolve(e.name))).sum
             val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-            val src =
-              if (trackingEnabled) readDataWithIds(todo, m.dv, m.schema)
-                .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
-              else readData(todo, m.dv, m.schema)
+            val src = scan(todo, m.dv, m.schema, withIds = trackingEnabled)
+              .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
             val fresh = writeFiles(src, m.schema, coalesceTo = Some(want),
               clusterBy = clusterBy).map(_.copy(clustered = true))
             rewritten = todo.size
@@ -1504,41 +1480,13 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     // the feed is served in the END version's schema (earlier files
     // null-fill) — a mid-span evolve never forks the batch schema
     val as = snapshotAt(toVersion).schema
-    if (!withCommitVersion) readData(perVersion.flatMap(_._2), Seq.empty, as)
+    if (!withCommitVersion) scan(perVersion.flatMap(_._2), Seq.empty, as)
     else {
       val parts = perVersion.collect { case (v, adds) if adds.nonEmpty =>
-        readData(adds, Seq.empty, as).withColumn(LogTable.CommitVersionCol, lit(v))
+        scan(adds, Seq.empty, as).withColumn(LogTable.CommitVersionCol, lit(v))
       }
       if (parts.isEmpty) emptyDf(as).withColumn(LogTable.CommitVersionCol, lit(0L))
       else parts.reduce(_ union _)
-    }
-  }
-
-  /** Scan `entries` under logical schema `as`, keeping the (file, pos)
-    * plumbing columns and — when `withIds` — the stable `_row_id`
-    * (allocated base + pos, or the materialized column). Feed-internal. */
-  private def feedScan(entries: Seq[FileEntry], as: StructType,
-                       withIds: Boolean): DataFrame = {
-    import spark.implicits._
-    val readSchema =
-      if (!withIds) physicalSchema(as)
-      else StructType(physicalSchema(as).fields :+
-        StructField(LogTable.MatRowIdCol, org.apache.spark.sql.types.LongType))
-    val raw = spark.read.schema(readSchema)
-      .parquet(entries.map(e => filesDir.resolve(e.name).toString): _*)
-      .withColumn(DvName,
-        regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
-      .withColumn(DvPos, col("_metadata.row_index"))
-    val logical = as.fields.map(f => col(physicalOf(f)).as(f.name)).toSeq
-    if (!withIds) raw.select((logical :+ col(DvName) :+ col(DvPos)): _*)
-    else {
-      val bases = entries.filter(_.baseRowId >= 0)
-        .map(e => (e.name, e.baseRowId)).toDF(DvName, "__base")
-      raw.join(broadcast(bases), Seq(DvName), "left")
-        .withColumn(LogTable.RowIdCol,
-          coalesce(col(LogTable.MatRowIdCol), col("__base") + col(DvPos)))
-        .select((logical :+ col(DvName) :+ col(DvPos)
-          :+ col(LogTable.RowIdCol)): _*)
     }
   }
 
@@ -1596,28 +1544,23 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         val prevFiles = prev.map(_.files).getOrElse(Seq.empty)
         val prevDv = prev.map(_.dv).getOrElse(Seq.empty)
         if (d.add.nonEmpty)
-          parts += out(feedScan(d.add, as, withRowIds), "insert", v)
+          parts += out(scan(d.add, Seq.empty, as, withIds = withRowIds), "insert", v)
         if (d.dvAdd.nonEmpty) {
           // the sidecar holds exactly this commit's deletions
           val dvDf = spark.read.parquet(
             d.dvAdd.map(n => filesDir.resolve(n).toString): _*)
           val touched = dvDf.select(DvName).distinct()
             .as[String].collect().toSet
-          val scanned = feedScan(prevFiles.filter(e => touched(e.name)),
-            as, withRowIds)
+          val scanned = scan(prevFiles.filter(e => touched(e.name)), Seq.empty,
+            as, keepPos = true, withIds = withRowIds)
           parts += out(scanned.join(broadcast(dvDf), plumb, "left_semi"),
             "delete", v)
         }
         if (d.remove.nonEmpty) {
           // rewrite: removed files' LIVE rows (pre-commit DV applied)
           val rm = d.remove.toSet
-          val scanned = feedScan(prevFiles.filter(e => rm(e.name)),
-            as, withRowIds)
-          val live = if (prevDv.isEmpty) scanned
-          else scanned.join(broadcast(spark.read.parquet(
-              prevDv.map(n => filesDir.resolve(n).toString): _*)),
-            plumb, "left_anti")
-          parts += out(live, "delete", v)
+          parts += out(scan(prevFiles.filter(e => rm(e.name)), prevDv, as,
+            withIds = withRowIds), "delete", v)
         }
       }
       prev = Some(applyDelta(prev.getOrElse(
@@ -1729,7 +1672,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       require(!snap.exists(_.constraints.contains(name)),
         s"constraint '$name' already exists")
       snap.foreach { m =>
-        val bad = readData(m.files, m.dv, m.schema)
+        val bad = scan(m.files, m.dv, m.schema)
           .filter(not(coalesce(expr(cond), lit(false)))).count()
         require(bad == 0,
           s"cannot add CHECK constraint '$name' ($cond): $bad existing row(s) violate it")
@@ -1960,7 +1903,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * widened since `v`). */
   def restore(v: Long): Unit = {
     val s = snapshotAt(v)
-    overwrite(readData(s.files, s.dv, currentSchema))
+    overwrite(scan(s.files, s.dv, currentSchema))
   }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE … SHALLOW CLONE`): a NEW log table

@@ -243,7 +243,8 @@ object Similarity {
     * `m·ksub` doubles each); the coded corpus streams through the scan →
     * score → per-query top-k, no shuffle of anything vector-sized.
     * Output `(query_id, vec_id, adist, rank)` — ascending approximate L2²;
-    * ProductQuantizationSpec pins recall floors; Scratch `annrecall` records the curve. */
+    * ProductQuantizationSpec pins recall floors; COVERAGE.md "Recall
+    * evidence (r6b)" records the curve. */
   /** The stride-sampled PQ codebook, flattened per PqEncodeExpr's layout:
     * entry (sub, c) = the c-th sample's sub-vector (the v04/v09 design —
     * engine-portable so a DuckDB oracle mirrors training exactly). */
@@ -286,7 +287,8 @@ object Similarity {
     * `queries × shortlist` vectors instead of the corpus — the equi-join on
     * `vec_id` is the "fetch from the vector store" step. Recall =
     * shortlist's capture rate of the true top-k (ProductQuantizationSpec
-    * pins the floor; Scratch `annrecall` records the curve). */
+    * pins the floor; COVERAGE.md "Recall evidence (r6b)" records the
+    * curve). */
   def pqTopKRerank(queries: DataFrame, corpus: DataFrame,
                    cos: (Column, Column) => Column, k: Int,
                    shortlist: Int = 100, m: Int = 8, ksub: Int = 16,
@@ -938,8 +940,9 @@ object Similarity {
     * both scale with the corpus (measured at the 100× clusterable point,
     * COVERAGE r14). IVF margin-rule routing (seed only the entries of the
     * insert's probed cells — the SPANN-style IVF+graph hybrid, composed in
-    * `Scratch clusterbuild`) makes seeds O(n_probed) per insert and returns
-    * the insert stage to ~linear with the recall band held. */
+    * the r14 clusterable-corpus build probe) makes seeds O(n_probed) per
+    * insert and returns the insert stage to ~linear with the recall band
+    * held. */
   def graphInsertSeeded(corpus: DataFrame, edges: DataFrame, batch: DataFrame,
                         seedsFor: DataFrame => DataFrame, beam: Int = 8,
                         rounds: Int = 3, m: Int = 5,
@@ -955,9 +958,10 @@ object Similarity {
 
   /** IVF MARGIN-ROUTED insert seeds — the SPANN-style IVF+graph hybrid's
     * routing stage as a reusable [[graphInsertSeeded]] seeder (extracted
-    * from the r14 `Scratch clusterbuild` measurement, where it returned the
-    * insert stage to ~linear at BETTER recall than all-entries seeding:
-    * 191–429→104 s at 200k, 70/123 vs 66/123). Base nodes are assigned to
+    * from the r14 clusterable-corpus build measurement, COVERAGE.md
+    * "Scaling evidence (r14)", where it returned the insert stage to
+    * ~linear at BETTER recall than all-entries seeding: 191–429→104 s at
+    * 200k, 70/123 vs 66/123). Base nodes are assigned to
     * stride-centroid cells; one entry node per cell (min vec_id —
     * deterministic); each insert's beam seeds from only the entries of its
     * margin-rule probe cells, so seeds are O(n_probed) per insert instead

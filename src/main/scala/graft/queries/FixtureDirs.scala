@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.DataFrame
 
@@ -53,8 +54,22 @@ object FixtureDirs {
     df.sparkSession.read.parquet(dir)
   }
 
-  private val roundTripCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Built fixture paths by key. The map only ever creates a key's slot;
+    * the build runs while holding that slot's monitor, outside every map
+    * bin, so a builder may itself use the cache for another key, unrelated
+    * keys build concurrently, and racing callers of one key build it once
+    * (the loser waits on the monitor, then reads the winner's path). A
+    * build that throws leaves the slot empty for the next caller. */
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[String, AtomicReference[String]]()
+
+  private def once(key: String)(build: => String): String = {
+    val slot = cache.computeIfAbsent(key, _ => new AtomicReference[String]())
+    slot.synchronized {
+      if (slot.get == null) slot.set(build)
+      slot.get
+    }
+  }
 
   /** Session-lifetime cached [[parquetRoundTrip]]: an m0x fixture is a
     * deterministic function of (query prefix, sf dir), so repeat
@@ -66,11 +81,11 @@ object FixtureDirs {
     * difference at ~half of each row's time). Cached dirs remain tracked
     * by the exit hook. */
   def cachedRoundTrip(df: DataFrame, prefix: String, sfDir: String): DataFrame = {
-    val dir = roundTripCache.computeIfAbsent(prefix + "|" + sfDir, _ => {
+    val dir = once(prefix + "|" + sfDir) {
       val d = create(prefix).toString
       df.write.mode("overwrite").parquet(d)
       d
-    })
+    }
     df.sparkSession.read.parquet(dir)
   }
 
@@ -82,9 +97,9 @@ object FixtureDirs {
     * directory the query MUTATES (checkpoints, sink tables) must stay
     * per-invocation or a repeat would observe the prior run's state. */
   def cachedDir(prefix: String, sfDir: String)(build: Path => Unit): Path =
-    Paths.get(roundTripCache.computeIfAbsent("dir|" + prefix + "|" + sfDir, _ => {
+    Paths.get(once("dir|" + prefix + "|" + sfDir) {
       val d = create(prefix)
       build(d)
       d.toString
-    }))
+    })
 }

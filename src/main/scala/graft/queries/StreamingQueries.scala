@@ -43,15 +43,15 @@ object StreamingQueries {
       .drop("ts")
   }
 
-  /** Profiling knobs (Scratch `drainprofile` A/Bs them; defaults are the
-    * measured-best local settings — see CLAUDE.md "Streaming drain floor").
-    * Checkpoints for these TEST drains are throwaway temp dirs, so tmpfs is
-    * an honest default when present (a production stream would point its
-    * checkpoint at durable storage instead); state partitions = 4 measured
-    * best at local scale (1 serializes the join, 8 doubles store count for
-    * no win). */
-  private[graft] var statePartitions: Int = 4
-  private[graft] var ckptRoot: Option[String] =
+  /** Streaming drain settings, the measured-best local values from the
+    * checkpoint-root × state-width A/Bs (the "Streaming drain floor"
+    * notes). Checkpoints for these TEST drains are throwaway temp dirs, so
+    * tmpfs is an honest root when present (a production stream would point
+    * its checkpoint at durable storage instead); state partitions = 4
+    * measured best at local scale (1 serializes the join, 8 doubles store
+    * count for no win). */
+  private val statePartitions: Int = 4
+  private val ckptRoot: Option[String] =
     Some("/dev/shm").filter(p => java.nio.file.Files.isWritable(java.nio.file.Paths.get(p)))
 
   private def newCkptDir(): String = ckptRoot match {
@@ -62,11 +62,11 @@ object StreamingQueries {
 
   /** State-partition width for a drain over `dir`'s events file: the
     * profiled local optimum ([[statePartitions]] = 4) at sf0.1, growing
-    * ~1 partition per 2 MB of input beyond that. The `streamsf1 widths`
-    * A/B measured the FIXED width as the super-linear stage at 10× volume
-    * (s02 8.6→3.8 s, s06 7.6→4.1 s moving 4→8 partitions) — state width
-    * must track per-batch volume like any other shuffle, it is not a
-    * constant of the machine. Capped at 64 locally; a cluster deployment
+    * ~1 partition per 2 MB of input beyond that. An A/B over a 10× time-
+    * and user-shifted events replica measured the FIXED width as the
+    * super-linear stage at 10× volume (s02 8.6→3.8 s, s06 7.6→4.1 s
+    * moving 4→8 partitions) — state width must track per-batch volume
+    * like any other shuffle, it is not a constant of the machine. Capped at 64 locally; a cluster deployment
     * sizes it from executor count the usual way. */
   private def stateWidthFor(dir: String): Int = {
     val bytes =
@@ -666,8 +666,13 @@ object StreamingQueries {
       }
       val evLanding = FixtureDirs.create("s13-ev-landing-")
       val ordLanding = FixtureDirs.create("s13-ord-landing-")
+      // Delivery order comes from the copy-time mtimes: set 2 is landed
+      // between the two runWaves() calls, after set 1's drain, so its
+      // files are newer than anything that drain consumed. The cached set
+      // files' own timestamps play no part (a copy does not keep them).
       def land(set: String, dirP: java.nio.file.Path, name: String): Unit =
-        java.nio.file.Files.copy(setStore.resolve(set), dirP.resolve(name))
+        java.nio.file.Files.copy(setStore.resolve(set), dirP.resolve(name),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
       val root = FixtureDirs.create("s13-tables-").toString
       val silverEvents = new LogTable(spark, s"$root/silver_events",

@@ -347,7 +347,8 @@ object VectorQueries {
     * (sub-partial sums added m-ascending — `list_sum(list(d ORDER BY
     * sub))`) from the data itself, no literals; a hash match pins the whole
     * PQ pipeline end-to-end. ProductQuantizationSpec covers recall floors
-    * vs brute force; Scratch `annrecall` records the curve. */
+    * vs brute force; COVERAGE.md "Recall evidence (r6b)" records the
+    * curve. */
   val v09 = QueryDef(
     "v09_ann_pq",
     (spark, dir) => {
@@ -3016,10 +3017,10 @@ object VectorQueries {
     * "Scaling evidence (r14)": linear build across two decades, mean
     * n_probed 2.65→2.99 over 100× of corpus), where the driver's
     * deliberately structureless embeddings force nprobe ∝ nlist. The r14
-    * evidence lived in `AdaptiveClusterSpec` + Scratch runs only; this row
-    * hash-verifies the whole path — corpus geometry, stride centroids,
-    * margin-rule routing, candidate ranking — in BOTH engines at every SF,
-    * and puts the adaptive build plan in the driver bench.
+    * evidence lived in `AdaptiveClusterSpec` + one-off probe runs only;
+    * this row hash-verifies the whole path — corpus geometry, stride
+    * centroids, margin-rule routing, candidate ranking — in BOTH engines at
+    * every SF, and puts the adaptive build plan in the driver bench.
     *
     * The corpus is planted OUTSIDE the engines' RNGs so DuckDB can mirror
     * it bit-for-bit ([[graft.sources.SyntheticEmbeddings]] uses MurmurHash3

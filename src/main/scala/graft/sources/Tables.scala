@@ -33,7 +33,7 @@ object Tables {
     * range); TIMESTAMP(MICROS) arrives as TimestampType or (isAdjustedToUTC
     * =false) TimestampNTZType, where `unix_micros` is exact by definition.
     * The NTZ→timestamp cast reads the naive value in the session timezone —
-    * every entry point (Bench/Verify/Scratch/specs) pins UTC, matching
+    * every entry point (Bench/Verify/PlanDump/Probe/Sf1Dir/specs) pins UTC, matching
     * DuckDB's `epoch_us(ts)` which treats naive timestamps as UTC epoch. */
   def tsToUs(spark: SparkSession, ts: Column, tsType: DataType): Column = {
     import org.apache.spark.sql.functions._

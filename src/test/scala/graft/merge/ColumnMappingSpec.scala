@@ -96,7 +96,7 @@ class ColumnMappingSpec extends SparkSpec {
     (0 until 3).foreach(g => t.append((1L to 10L).map(i =>
       (g * 10L + i, s"v$g-$i", i)).toDF("k", "v", "d")))                     // v1-v3
     t.renameColumn("v", "label")                                             // v4
-    // DV delete on the RENAMED column (readDataWithPos maps names too)
+    // DV delete on the RENAMED column (the positional scan maps names too)
     assert(t.deleteWhere(col("label") === "v0-1") == 1)                      // v5
     assert(t.read().count() == 29)
     // compact materializes DVs, writing under the current mapping
