@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
@@ -12,22 +12,23 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * the sf dir in `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` cores (default
   * 4). Run 1 pays codegen; later runs are warm. One line per run:
   * {{{
-  * [probe] <row> run<i>: <wall> s (<jobs> jobs, <in-job> s in-job)
+  * [probe] <row> run<i>: <wall> s (<jobs> jobs, <busy> s busy, <floor> s floor)
   * }}}
-  * In-job seconds sum the job durations, so jobs that overlap (thread
-  * waves) can add up to more than the wall time. */
+  * Busy seconds are the union of the run's job intervals (jobs that overlap
+  * in a thread wave count once); floor = wall − busy, the time no job ran. */
 object Probe {
-  /** Counts every job the session starts and sums their durations. */
+  /** Counts every job the session starts and keeps each finished job's
+    * [start, end) interval in epoch ms. */
   private final class JobClock extends SparkListener {
     val jobs = new AtomicInteger
-    val jobMs = new AtomicLong
+    private val finished = new ConcurrentLinkedQueue[(Long, Long)]()
     // boxed values: a missing key must read as null, not as an unboxed 0
     private val running = new ConcurrentHashMap[Int, java.lang.Long]()
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet(); running.put(j.jobId, j.time)
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
-      Option(running.remove(j.jobId)).foreach(t0 => jobMs.addAndGet(j.time - t0.longValue))
+      Option(running.remove(j.jobId)).foreach(t0 => finished.add((t0.longValue, j.time)))
     /** Wait (up to 10 s) for the listener bus to deliver the end of every
       * job it has reported started; the bus is asynchronous, so the last
       * job's end can arrive after the action returns. */
@@ -35,7 +36,17 @@ object Probe {
       val deadline = System.nanoTime() + 10000000000L
       while (!running.isEmpty && System.nanoTime() < deadline) Thread.sleep(1)
     }
+    /** The intervals finished since the last call. */
+    def drain(): Seq[(Long, Long)] =
+      Iterator.continually(finished.poll()).takeWhile(_ != null).toSeq
   }
+
+  /** Length of the union of `[start, end)` intervals: the time at least
+    * one of them covers. */
+  def busyMs(intervals: Seq[(Long, Long)]): Long =
+    intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+      if (e <= reach) (sum, reach) else (sum + e - math.max(s, reach), e)
+    }._1
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: Probe <row1,row2,...> [repeats]  (sf dir from SPARK_GRAFT_SF_DIR)"
@@ -54,12 +65,13 @@ object Probe {
     spark.sparkContext.addSparkListener(clock)
     try names.foreach { name =>
       (1 to repeats).foreach { i =>
-        val j0 = clock.jobs.get(); val m0 = clock.jobMs.get(); val t0 = System.nanoTime()
+        val j0 = clock.jobs.get(); val t0 = System.nanoTime()
         Bench.forceAll(rows(name)(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
         clock.settle()
+        val busy = busyMs(clock.drain()) / 1e3
         println(f"[probe] $name run$i: $wall%.2f s (${clock.jobs.get() - j0} jobs, " +
-          f"${(clock.jobMs.get() - m0) / 1e3}%.2f s in-job)")
+          f"$busy%.2f s busy, ${wall - busy}%.2f s floor)")
       }
     } finally {
       spark.sparkContext.removeSparkListener(clock)

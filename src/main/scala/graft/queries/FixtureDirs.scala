@@ -37,11 +37,13 @@ object FixtureDirs {
   }, "graft-fixture-dir-cleanup"))
 
   /** Create a tracked temp dir (deleted at JVM exit). */
-  def create(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    dirs.add(p)
-    p
-  }
+  def create(prefix: String): Path = track(Files.createTempDirectory(prefix))
+
+  /** Create a tracked temp dir under `under` (deleted at JVM exit). */
+  def create(prefix: String, under: Path): Path =
+    track(Files.createTempDirectory(under, prefix))
+
+  private def track(p: Path): Path = { dirs.add(p); p }
 
   /** The binary-ingest round trip shared by the m0x fixtures: write the
     * generated media to a throwaway parquet dir, read it back so the query

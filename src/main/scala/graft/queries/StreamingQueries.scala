@@ -51,14 +51,12 @@ object StreamingQueries {
     * measured best at local scale (1 serializes the join, 8 doubles store
     * count for no win). */
   private val statePartitions: Int = 4
-  private val ckptRoot: Option[String] =
-    Some("/dev/shm").filter(p => java.nio.file.Files.isWritable(java.nio.file.Paths.get(p)))
+  private val ckptRoot: Option[java.nio.file.Path] =
+    Some(java.nio.file.Paths.get("/dev/shm")).filter(Files.isWritable(_))
 
-  private def newCkptDir(): String = ckptRoot match {
-    case Some(root) => Files.createTempDirectory(
-      java.nio.file.Paths.get(root), "graft-ckpt-").toString
-    case None => Files.createTempDirectory("graft-ckpt-").toString
-  }
+  /** A fresh checkpoint dir per drain, removed at JVM exit. */
+  private def newCkptDir(): String =
+    ckptRoot.fold(FixtureDirs.create("graft-ckpt-"))(FixtureDirs.create("graft-ckpt-", _)).toString
 
   /** State-partition width for a drain over `dir`'s events file: the
     * profiled local optimum ([[statePartitions]] = 4) at sf0.1, growing

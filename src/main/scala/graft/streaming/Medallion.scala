@@ -68,8 +68,14 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
 
   /** Silver wave 1 (ref 05-silver.py:490-495): five streaming upsert jobs.
     * Each streams the append-only bronze parquet directory (file source ≡
-    * append-only Delta stream) through its transform + watermarked dedup into
-    * a foreachBatch MERGE.
+    * append-only Delta stream) through its transform into a foreachBatch
+    * MERGE, in append mode and without a state store: each micro-batch is
+    * deduplicated on the stream's keys, and a re-delivery in a later batch
+    * is absorbed by the idempotent merge (M1's anti-join, M2's logout guard,
+    * M3's strict recency guard) — Structured Streaming's exactly-once
+    * contract of a replayable source and an idempotent sink. The
+    * reference's 365-day watermark only bounds dedup state; with no state
+    * there is nothing to bound, and no trailing no-data batch per stream.
     *
     * Start-all-then-await, exactly like the reference (`05-silver.py:486-503`
     * starts every wave-1 stream and then `_await_queries` the active set):
@@ -80,43 +86,42 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "silver")
     val started = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.streaming.StreamingQuery]
-    def run(name: String, src: DataFrame, eventTime: String, keys: Seq[String])
+    def run(name: String, src: DataFrame, keys: Seq[String])
            (sink: DataFrame => Unit): Unit = {
-      started += Silver.streamingDedup(src, eventTime, keys)
-        .writeStream
+      started += src.writeStream
         .queryName(s"silver_$name")
         .option("checkpointLocation", s"$checkpointDir/silver_$name")
-        .outputMode("update")
-        .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
+        .outputMode("append")
+        .foreachBatch((batch: DataFrame, _: Long) => sink(batch.dropDuplicates(keys)))
         .trigger(Trigger.AvailableNow())
         .start()
     }
     val regUsers = spark.readStream
       .schema(Schemas.registeredUsersCsv.add("load_time", "timestamp").add("source_file", "string"))
       .parquet(bronzeDir("registered_users"))
-    run("users", Silver.usersTransform(regUsers), "registration_timestamp",
+    run("users", Silver.usersTransform(regUsers),
       Seq("user_id", "device_id"))(Silver.upsertInsertOnly(usersTable, Seq("user_id")))
 
     val gymBz = spark.readStream
       .schema(Schemas.gymLoginsCsv.add("load_time", "timestamp").add("source_file", "string"))
       .parquet(bronzeDir("gym_logins"))
     // dedup on the FULL row (not the reference's (mac,gym,login) key,
-    // 05-silver.py:126-127): with persistent dedup state, a key-only dedup
-    // would also swallow the logout-extension re-delivery that the M2 MERGE
-    // guard exists to handle. Exact-duplicate drops keep idempotency; the
-    // merge guard owns monotone logout extension.
-    run("gym_logs", Silver.gymLogsTransform(gymBz), "login",
+    // 05-silver.py:126-127): a key-only dedup would keep an arbitrary one of
+    // a batch's login row and its logout-extension re-delivery. Exact-
+    // duplicate drops keep idempotency; the M2 merge collapses to the max
+    // logout and owns monotone logout extension.
+    run("gym_logs", Silver.gymLogsTransform(gymBz),
       Seq("mac_address", "gym", "login", "logout"))(Silver.upsertGymLogs(gymLogsTable))
 
     def multiplexStream = spark.readStream
       .schema(Schemas.kafkaMultiplexJson
         .add("load_time", "timestamp").add("source_file", "string").add("week_part", "string"))
       .parquet(bronzeDir("multiplex"))
-    run("user_profile", Silver.userProfileTransform(multiplexStream), "updated",
+    run("user_profile", Silver.userProfileTransform(multiplexStream),
       Seq("user_id", "updated"))(Silver.upsertUserProfile(userProfileTable))
-    run("workouts", Silver.workoutsTransform(multiplexStream), "time",
+    run("workouts", Silver.workoutsTransform(multiplexStream),
       Seq("user_id", "time"))(Silver.upsertInsertOnly(workoutsTable, Seq("user_id", "time")))
-    run("heart_rate", Silver.heartRateTransform(multiplexStream), "time",
+    run("heart_rate", Silver.heartRateTransform(multiplexStream),
       Seq("device_id", "time"))(Silver.upsertInsertOnly(heartRateTable, Seq("device_id", "time")))
     started.foreach(_.awaitTermination())
   }

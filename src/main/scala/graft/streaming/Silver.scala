@@ -11,7 +11,13 @@ import graft.ops.Relational
   *   - an *upsert* implementing the job's MERGE flavor against a bucketed
   *     [[LogTable]] (the foreachBatch body; ref Upserter/CDCUpserter,
   *     `05-silver.py:6-33`). A micro-batch that touches no bucket cuts no
-  *     version, so each stream's closing no-data batch costs no commit.
+  *     version.
+  *
+  * Dedup: wave 1 drops duplicates within each micro-batch
+  * (`Medallion.runSilverWave1`) and keeps no streaming state; a duplicate
+  * re-delivered in a later batch is absorbed by the upsert — M1's anti-join,
+  * M2's logout guard, M3's strict recency guard — so every upsert is
+  * idempotent under re-delivery.
   *
   * Streaming wiring: bronze tables are append-only parquet directories, so
   * the silver sources are plain file streams over them — the OSS equivalent
@@ -61,17 +67,6 @@ object Silver {
       .select(from_json(col("value"), Schemas.bpmPayload).as("v"))
       .select(col("v.device_id"), col("v.time").cast("timestamp").as("time"),
         col("v.heartrate"), Relational.validityFlag(col("v.heartrate")).as("valid"))
-
-  /** Streaming dedup: watermark + dropDuplicates on natural keys
-    * (ref 05-silver.py:78-79 etc.). Watermark bounds state exactly as the
-    * reference's 365-day horizon does. */
-  def streamingDedup(df: DataFrame, eventTimeCol: String, keys: Seq[String],
-                     horizon: String = "365 days"): DataFrame =
-    df.withWatermark(eventTimeCol, horizon).dropDuplicates(keys)
-
-  /** Batch-side dedup with identical key semantics (deterministic tiebreak). */
-  def batchDedup(df: DataFrame, keys: Seq[String], tiebreak: Seq[Column]): DataFrame =
-    Relational.dedupKeyed(df, keys, tiebreak)
 
   // ── upserts (the foreachBatch bodies; ref MERGE statements in 05-silver.py) ──
 

@@ -33,14 +33,16 @@ object MedallionFixtures {
     Files.write(dir.resolve(name), lines.mkString("\n").getBytes)
   }
 
-  def set1(landing: Path): Unit = {
-    write(landing.resolve("registered_users"), "set1.csv", Seq(
+  /** Set 1's files, named `<name>.csv` / `<name>.json` (a re-delivery of
+    * the whole set lands the same content under another name). */
+  def set1(landing: Path, name: String = "set1"): Unit = {
+    write(landing.resolve("registered_users"), s"$name.csv", Seq(
       "user_id,device_id,mac_address,registration_timestamp",
       s"1,101,m1,${base - 1000}.0", s"2,102,m2,${base - 900}.0"))
-    write(landing.resolve("gym_logins"), "set1.csv", Seq(
+    write(landing.resolve("gym_logins"), s"$name.csv", Seq(
       "mac_address,gym,login,logout",
       s"m1,1,$base.0,${base + 5400}.0"))
-    write(landing.resolve("multiplex"), "set1.json",
+    write(landing.resolve("multiplex"), s"$name.json",
       Seq(
         userInfo(1, "new", base + 10, "06/01/1990", "Springfield"),
         userInfo(2, "new", base + 20, "02/14/1985", "Ogdenville"),

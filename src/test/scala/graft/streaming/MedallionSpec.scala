@@ -79,5 +79,18 @@ class MedallionSpec extends SparkSpec {
     val avg1 = m.summaryTable.read().filter($"session_id" === 1)
       .select("num_recordings").as[Long].collect()
     assert(avg1.toSeq == Seq(7L))
+
+    // ── run 3: set 1 re-delivered whole, under new file names ──
+    // Silver keeps no dedup state across micro-batches: the merges alone
+    // (M1 anti-join, M2 logout guard, M3 strict recency guard) must absorb
+    // every re-delivered row, leaving all nine tables as run 2 left them.
+    val tables = Seq(m.usersTable, m.gymLogsTable, m.userProfileTable, m.workoutsTable,
+      m.heartRateTable, m.completedWorkoutsTable, m.workoutBpmTable, m.userBinsTable,
+      m.summaryTable)
+    def content() = tables.map(_.read().collect().map(_.toString).sorted.toSeq)
+    val afterRun2 = content()
+    set1(landing, "set1-redelivered")
+    m.runAll(dateLookup)
+    assert(content() == afterRun2)
   }
 }
