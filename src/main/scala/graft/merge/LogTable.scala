@@ -421,8 +421,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     val prevDv = prev.map(_.dv).getOrElse(Seq.empty)
     val prevNames = prevFiles.map(_.name).toSet
     // ROW TRACKING: allocate contiguous base row ids to this commit's fresh
-    // files (those staged with a known row count) from the previous high-water
-    // mark, in (bucket, staged-part-index) order — the within-file sort is the
+    // files (those written with a known row count) from the previous high-water
+    // mark, in (bucket, part-index) order — the within-file sort is the
     // write discipline's, so when the caller's batch is range-partitioned and
     // sorted on a unique key the id assignment is fully deterministic. Files
     // without a count (OPTIMIZE rewrites) carry MATERIALIZED ids instead and
@@ -689,25 +689,17 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   // ── data-file writes ────────────────────────────────────────────────────
 
-  /** Materialize `df` into immutable uuid-named files under `files/`;
-    * returns the new entries (bucket tag from the hive partition dir,
-    * per-file stats from one grouped aggregate over the staged write).
-    * `coalesceTo` (unbucketed only) bounds the file count — the
-    * compaction knob. `clusterBy` (unbucketed only) range-partitions and
-    * sorts the rewrite on those keys, so each output file covers a tight
-    * key range and the manifest stats become selective — the clustering
-    * knob. */
+  /** Materialize `df` into immutable uuid-named files under `files/`,
+    * each written once under its final name ([[LogFiles.write]]); returns
+    * the new entries with their bucket and the per-file stats and row
+    * counts the write tasks took. `coalesceTo` (unbucketed only) bounds the
+    * file count — the compaction knob. `clusterBy` (unbucketed only)
+    * range-partitions and sorts the rewrite on those keys, so each output
+    * file covers a tight key range and the manifest stats become selective
+    * — the clustering knob. */
   private def writeFiles(df: DataFrame, as: StructType,
                          coalesceTo: Option[Int] = None,
                          clusterBy: Seq[String] = Nil): Seq[FileEntry] = {
-    val tmp = Files.createTempDirectory(rootPath, ".write-")
-    try writeFilesInto(df, as, tmp, coalesceTo, clusterBy)
-    catch { case e: Throwable => deleteRec(tmp); throw e }
-  }
-
-  private def writeFilesInto(df: DataFrame, as: StructType, tmp: Path,
-                             coalesceTo: Option[Int],
-                             clusterBy: Seq[String]): Seq[FileEntry] = {
     // files store PHYSICAL column names (stable across renames); `as` is the
     // logical schema governing this write (the commit snapshot's). A
     // materialized row-id column (OPTIMIZE rewrite under row tracking) rides
@@ -718,8 +710,17 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       else if (!mappingActive(as)) df
       else df.select((as.fields.map(f => col(f.name).as(physicalOf(f)))
         :+ col(LogTable.MatRowIdCol)).toIndexedSeq: _*)
+    // stats are keyed by PHYSICAL name — stable across renames, so stats on
+    // files written before a rename keep pruning after it
     val statsByPhys = statsBy.filter(c => as.fieldNames.contains(c))
       .map(c => physOf(as, c))
+    // per-file row counts: only needed to allocate base row ids, so only for
+    // tracked tables writing FRESH rows (a rewrite carrying materialized ids
+    // allocates nothing)
+    val needRows = trackingEnabled && !hasMat
+    def entries(out: DataFrame): Seq[FileEntry] =
+      LogFiles.write(out, filesDir.toString, "", BucketCol, statsByPhys).map(w =>
+        FileEntry(w.name, w.bucket, w.stats, rows = if (needRows) w.rows else -1L))
     bucketBy match {
       case None =>
         val cs = clusterBy.map(c => col(physOf(as, c)))
@@ -763,110 +764,21 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           case (Some(n), _) => pdf.repartition(n)
           case _ => pdf
         }
-        try out.write.mode("overwrite").parquet(tmp.toString)
+        try entries(out)
         finally mortonKeys.foreach(_ => pdf.unpersist())
       case Some((keys, n)) =>
         // one shuffle keyed by bucket → one file per touched bucket (without
         // it every task writes a sliver into every bucket); rows sorted on
         // the keys so parquet records tight per-row-group min/max stats and
         // keyed scans (merge probes, point lookups) skip whole row groups
-        // (PlanAuditSpec pins it)
+        // (PlanAuditSpec pins it). The sort leads with the bucket, which is
+        // the order the writer needs, so it stacks no sort of its own.
         val pKeys = keys.map(k => physOf(as, k))
         val pBucket = pmod(xxhash64(pKeys.map(col).toIndexedSeq: _*), lit(n)).cast("int")
-        pdf.withColumn(BucketCol, pBucket)
+        entries(pdf.withColumn(BucketCol, pBucket)
           .repartition(col(BucketCol))
-          .sortWithinPartitions((BucketCol +: pKeys).map(col).toIndexedSeq: _*)
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
+          .sortWithinPartitions((BucketCol +: pKeys).map(col).toIndexedSeq: _*))
     }
-    val staged: Seq[(Path, Int)] = LogTable.walkDir(tmp)
-      .filter(_.toString.endsWith(".parquet")).map { p =>
-        val b = p.getParent.getFileName.toString match {
-          case s if s.startsWith(s"$BucketCol=") =>
-            s.substring(BucketCol.length + 1).toInt
-          case _ => -1
-        }
-        (p, b)
-      }
-    // staged-file key for the per-file aggregates below: the BASENAME ALONE
-    // is ambiguous under bucketing (one task writing two buckets emits the
-    // same part-NNNNN name in both bucket dirs), so key by dir/name
-    def stagedKey(fullPath: String): String = {
-      val parts = fullPath.split('/')
-      parts.takeRight(2).mkString("/")
-    }
-    // per-file stats + row counts BEFORE the move, keyed by PHYSICAL name —
-    // stable across renames, so stats on files written before a rename keep
-    // pruning after it. Fast path: parquet FOOTERS, driver-side, no Spark
-    // job (r13 — the read-back aggregate was one full job per commit, the
-    // dominant cost of metadata-bound lifecycle paths); the Spark-aggregate
-    // path below remains the fallback for footer-unsupported column types
-    // (INT96 LTZ timestamps, decimals) and any footer read error.
-    val needStats = statsByPhys.nonEmpty && staged.nonEmpty
-    val needRows = trackingEnabled && !hasMat && staged.nonEmpty
-    val sessionZone = spark.sessionState.conf.sessionLocalTimeZone
-    val ltzAsInt64 = spark.sessionState.conf.parquetOutputTimestampType !=
-      org.apache.spark.sql.internal.SQLConf.ParquetOutputTimestampType.INT96
-    // footers always provide exact row counts regardless of column types —
-    // when the STATS types are unsupported (INT96 LTZ, decimals) the rows
-    // portion still reads footer-side with Nil stats columns, so a tracked
-    // table with an exotic stats column pays at most ONE aggregate job (for
-    // statsOf), never two (r13 ADVICE)
-    val statsViaFooter = needStats &&
-      FooterStats.supports(pdf.schema, statsByPhys, ltzAsInt64)
-    val footer: Option[Map[String, (Long, Map[String, (String, String)])]] =
-      if (!statsViaFooter && !needRows) None
-      else scala.util.Try(FooterStats.read(staged.map(_._1),
-        if (statsViaFooter) statsByPhys else Nil, pdf.schema, sessionZone,
-        p => stagedKey(p.toString))) match {
-        case scala.util.Success(f) => Some(f)
-        case scala.util.Failure(e) =>
-          // loud fallback: a silent one would hide a footer-path regression
-          // behind the (correct but slower) aggregate path forever
-          org.slf4j.LoggerFactory.getLogger(classOf[LogTable]).warn(
-            s"footer-stats read failed, falling back to aggregate: $e")
-          None
-      }
-    val statsOf: Map[String, Map[String, (String, String)]] =
-      if (!needStats) Map.empty
-      else footer.filter(_ => statsViaFooter) match {
-        case Some(f) => f.view.mapValues(_._2).toMap
-        case None =>
-          val aggs = statsByPhys.flatMap(c => Seq(
-            min(col(c)).cast("string").as(s"__lo_$c"),
-            max(col(c)).cast("string").as(s"__hi_$c")))
-          spark.read.schema(pdf.schema).parquet(staged.map(_._1.toString): _*)
-            .groupBy(input_file_name().as("__f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect().map { r =>
-              stagedKey(r.getAs[String]("__f")) -> statsByPhys.flatMap { c =>
-                val lo = r.getAs[String](s"__lo_$c"); val hi = r.getAs[String](s"__hi_$c")
-                if (lo == null || hi == null) None else Some(c -> (lo, hi))
-              }.toMap
-            }.toMap
-      }
-    // per-file row counts: only needed to allocate base row ids, so only for
-    // tracked tables writing FRESH rows (a rewrite carrying materialized ids
-    // allocates nothing)
-    val rowsOf: Map[String, Long] =
-      if (!needRows) Map.empty
-      else footer match {
-        case Some(f) => f.view.mapValues(_._1).toMap
-        case None => spark.read.schema(pdf.schema)
-          .parquet(staged.map(_._1.toString): _*)
-          .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("__n"))
-          .collect().map { r =>
-            stagedKey(r.getAs[String]("__f")) -> r.getAs[Long]("__n")
-          }.toMap
-      }
-    val entries = staged.map { case (p, b) =>
-      val key = stagedKey(p.toString)
-      val name = s"${java.util.UUID.randomUUID().toString.take(12)}-${p.getFileName}"
-      Files.move(p, filesDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      FileEntry(name, b, statsOf.getOrElse(key, Map.empty),
-        rows = rowsOf.getOrElse(key, -1L))
-    }
-    deleteRec(tmp)
-    entries
   }
 
   private def deleteRec(p: Path): Unit = if (Files.exists(p))
@@ -883,6 +795,12 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   private val DvName = "__dv_name"
   private val DvPos = "__dv_pos"
+  /** A DV sidecar's fixed schema: read with it, a sidecar costs no
+    * schema-inference job. */
+  private val DvSchema = StructType(Seq(StructField(DvName, StringType),
+    StructField(DvPos, LongType)))
+  private def readDv(names: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(names.map(d => filesDir.resolve(d).toString): _*)
 
   /** THE scan: `entries` read with `as` as the read schema — files written
     * before an [[evolve]] lack the newer columns and come back null-filled
@@ -903,9 +821,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   private def scan(entries: Seq[FileEntry], dv: Seq[String], as: StructType,
                    keepPos: Boolean = false, withIds: Boolean = false): DataFrame = {
     import spark.implicits._
-    val posFields =
-      if (keepPos) Seq(StructField(DvName, StringType), StructField(DvPos, LongType))
-      else Seq.empty
+    val posFields = if (keepPos) DvSchema.fields.toSeq else Seq.empty
     val idFields = if (withIds) Seq(StructField(LogTable.RowIdCol, LongType)) else Seq.empty
     if (entries.isEmpty) return emptyDf(StructType(as.fields ++ posFields ++ idFields))
     val readSchema =
@@ -927,7 +843,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       }
     val live = if (dv.isEmpty) ided
       else ided.join(
-        broadcast(spark.read.parquet(dv.map(d => filesDir.resolve(d).toString): _*)),
+        broadcast(readDv(dv)),
         Seq(DvName, DvPos), "left_anti")
     live.select((as.fields.map(f => col(physicalOf(f)).as(f.name)).toSeq ++
       (posFields ++ idFields).map(f => col(f.name))): _*)
@@ -936,7 +852,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   /** Live table with the stable `_row_id` column (requires
     * `rowTracking = true` at creation). Ids are unique across the table's
     * lifetime, contiguous per commit ([hwm+1, hwm+n] in (bucket,
-    * staged-part, row) order), stable across OPTIMIZE (materialized into
+    * part index, row) order), stable across OPTIMIZE (materialized into
     * the rewrite) and DV deletes (a deleted id is never reused), and fresh
     * for files written by full-rewrite commits (overwrite/merge) — the
     * Delta row-tracking contract. */
@@ -1257,14 +1173,9 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           deleted = live.count()
           if (deleted == 0) None // no matches: no version cut
           else {
-            val tmp = Files.createTempDirectory(rootPath, ".write-")
-            live.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val part = LogTable.walkDir(tmp)
-              .find(_.toString.endsWith(".parquet")).get
-            val name = s"dv-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
-            Files.move(part, filesDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-            deleteRec(tmp)
-            Some((m.files, m.dv :+ name, Seq.empty))
+            val sidecar = LogFiles.write(live.coalesce(1), filesDir.toString, "dv-",
+              BucketCol, Nil).map(_.name)
+            Some((m.files, m.dv ++ sidecar, Seq.empty))
           }
       }
     }
@@ -1547,8 +1458,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           parts += out(scan(d.add, Seq.empty, as, withIds = withRowIds), "insert", v)
         if (d.dvAdd.nonEmpty) {
           // the sidecar holds exactly this commit's deletions
-          val dvDf = spark.read.parquet(
-            d.dvAdd.map(n => filesDir.resolve(n).toString): _*)
+          val dvDf = readDv(d.dvAdd)
           val touched = dvDf.select(DvName).distinct()
             .as[String].collect().toSet
           val scanned = scan(prevFiles.filter(e => touched(e.name)), Seq.empty,
@@ -1941,12 +1851,6 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     c
   }
 
-  /** Retention GC: keep the newest `retainLast` versions; cut a checkpoint
-    * AT the oldest retained version first (so it stays reconstructible
-    * without the dropped prefix), then drop older manifests + checkpoints
-    * and every file no retained version references — including orphans
-    * from crashed writes (staged files whose commit never landed). Reads
-    * of vacuumed versions fail loudly. */
   /** `DESCRIBE HISTORY` rows, version-ascending: (version, in-commit
     * timestamp ms, operation, dataChange, files added, files removed).
     * The operation is INFERRED from the commit's action shape (the log
@@ -1979,10 +1883,18 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       (v, d.tsMs, op, d.dataChange, d.add.size, d.remove.size)
     }
 
-  /** Drop all but the newest `retainLast` versions, then every file no
-    * retained version references and every `.write-*` leftover. The live
-    * version always survives: `vacuum(0)` (Delta's `RETAIN 0`) empties the
-    * history exactly as `vacuum(1)` does. Returns the dropped versions. */
+  /** Retention GC: keep the newest `retainLast` versions; cut a checkpoint
+    * AT the oldest retained version first (so it stays reconstructible
+    * without the dropped prefix), then drop older manifests + checkpoints
+    * and every file in `files/` no retained version references — among
+    * them the files of a write whose commit never landed (a crash, a lost
+    * CAS race, a failed job), which are written straight into `files/`
+    * under their final names. `.write-*` staging dirs, which tables
+    * written by earlier versions of this engine may have left under the
+    * root, are deleted too. Reads of vacuumed versions fail loudly. The
+    * live version always survives: `vacuum(0)` (Delta's `RETAIN 0`)
+    * empties the history exactly as `vacuum(1)` does. Returns the dropped
+    * versions. */
   def vacuum(retainLast: Int = 1): Seq[Long] = {
     require(retainLast >= 0, s"retainLast must be >= 0, got $retainLast")
     val hs = history()
@@ -1999,7 +1911,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     LogTable.listDir(filesDir)
       .filterNot(p => referenced.contains(p.getFileName.toString))
       .foreach(Files.deleteIfExists(_))
-    // crashed-write leftovers (temp dirs that never committed)
+    // staging dirs an earlier engine's crashed writes left behind
     LogTable.listDir(rootPath)
       .filter(_.getFileName.toString.startsWith(".write-"))
       .foreach(deleteRec)

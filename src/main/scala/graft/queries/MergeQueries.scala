@@ -397,35 +397,36 @@ object MergeQueries {
 
   /** File-level data skipping — the manifest half of the lakehouse scan
     * story (Delta/Iceberg per-file stats), as a verified row. Orders are
-    * range-clustered by `o_orderdate` into a multi-file layout with a
-    * `_file_stats` manifest ([[graft.ops.DataSkipping.clusteredWrite]]);
-    * the half-year range scan then reads ONLY manifest-surviving files (the
-    * `require` makes the row FAIL LOUDLY if pruning ever stops happening —
-    * this row pins the mechanism, not just the answer). The oracle is the
-    * plain full-scan range aggregate, so the hash match proves pruning is a
-    * pure superset optimization: fewer files, identical rows.
+    * range-clustered by `o_orderdate` into a 16-file `LogTable` whose
+    * manifest carries per-file stats on `o_orderdate` (taken by the write
+    * tasks); the half-year [[graft.merge.LogTable.readRange]] then reads
+    * ONLY manifest-surviving files (the `require` makes the row FAIL LOUDLY
+    * if pruning ever stops happening — this row pins the mechanism, not
+    * just the answer). The oracle is the plain full-scan range aggregate,
+    * so the hash match proves pruning is a pure superset optimization:
+    * fewer files, identical rows.
     *
-    * Scale: manifest build is one distributed agg (#files rows); the scan
-    * reads ~7% of files for ~7% of the date domain. Row-group pruning
-    * (q43) still applies WITHIN the surviving files — the two layers
-    * compose exactly as in Delta. */
+    * Scale: the stats cost no job; the scan reads ~7% of files for ~7% of
+    * the date domain. Row-group pruning (q43) still applies WITHIN the
+    * surviving files — the two layers compose exactly as in Delta. */
   val skip = QueryDef(
     "q52_data_skipping",
     (spark, dir) => {
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
-      val root = FixtureDirs.create("q52-skip-").resolve("orders_c").toString
-      graft.ops.DataSkipping.clusteredWrite(o, "o_orderdate", root,
-        nFiles = 16, statCols = Seq("o_orderdate"))
+      val t = new graft.merge.LogTable(spark,
+        FixtureDirs.create("q52-skip-").resolve("orders_c").toString, o.schema,
+        statsBy = Seq("o_orderdate"))
+      t.overwrite(o.repartitionByRange(16, col("o_orderdate"))
+        .sortWithinPartitions(col("o_orderdate")))
       val lo = lit("1995-01-01").cast("timestamp")
       val hi = lit("1995-06-30").cast("timestamp")
-      val total = spark.read.parquet(root).inputFiles.length
-      val kept = graft.ops.DataSkipping.prunedFiles(spark, root, "o_orderdate", lo, hi)
-      require(kept.length < total,
-        s"data skipping pruned nothing (${kept.length} of $total files) — " +
-          "manifest or clustering broke")
-      graft.ops.DataSkipping.readRange(spark, root, "o_orderdate", lo, hi)
-        .groupBy(col("o_orderstatus"))
+      val kept = t.readRange("o_orderdate", lo, hi)
+      val total = t.liveFileNames().size
+      require(kept.inputFiles.length < total,
+        s"data skipping pruned nothing (${kept.inputFiles.length} of $total files) — " +
+          "manifest stats or clustering broke")
+      kept.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
         .orderBy(col("o_orderstatus"))
     },

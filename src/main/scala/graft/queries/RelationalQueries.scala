@@ -1000,7 +1000,7 @@ object RelationalQueries {
       val cols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
         "l_quantity").map(col)
       val li = Tables.lineitem(spark, dir).select(cols: _*)
-      val zDir = java.nio.file.Files.createTempDirectory("q43-zorder-").toString
+      val zDir = FixtureDirs.create("q43-zorder-").toString
       graft.ops.ZOrder.clusteredWrite(li, "l_partkey", "l_suppkey", zDir, nFiles = 4)
       spark.read.parquet(zDir)
         .filter(col("l_partkey").between(100, 300) &&

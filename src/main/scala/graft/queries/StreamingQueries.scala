@@ -200,7 +200,7 @@ object StreamingQueries {
   val s04 = QueryDef(
     "s04_stream_foreachbatch_merge",
     (spark, dir) => {
-      val tableDir = Files.createTempDirectory("graft-fb-").toString
+      val tableDir = FixtureDirs.create("graft-fb-").toString
       val table = new graft.merge.LogTable(spark, tableDir,
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_type string, n bigint, sum_value double"))
@@ -2134,7 +2134,7 @@ object StreamingQueries {
       val o = graft.sources.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
-      val root = Files.createTempDirectory("graft-dv-erasure-").toString
+      val root = FixtureDirs.create("graft-dv-erasure-").toString
       val t = new graft.merge.LogTable(spark, s"$root/orders", o.schema)
       t.overwrite(o)
       val before = t.liveFileNames()

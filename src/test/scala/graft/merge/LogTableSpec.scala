@@ -398,6 +398,19 @@ class LogTableSpec extends SparkSpec {
     assert(t.read().count() == 20L)
   }
 
+  test("after deleteWhere, read() and readVersion build without a Spark job") {
+    val t = new LogTable(spark, tmp("log-dv-plan-"), s2)
+    t.overwrite((1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"))
+    assert(t.deleteWhere(col("k") % 5 === 0) == 10L)
+    // the DV sidecars are read with their fixed schema: no inference job
+    val ((live, old), jobs) = org.apache.spark.JobCounter.jobsIn(spark.sparkContext) {
+      (t.read(), t.readVersion(2))
+    }
+    assert(jobs == 0)
+    assert(rows(live).map(_._1) == (1L to 50L).filter(_ % 5 != 0))
+    assert(rows(old) == rows(live))
+  }
+
   test("directory streams are closed: log listings hold no descriptors") {
     val t = new LogTable(spark, tmp("log-fds-"), s2)
     t.append(Seq((1L, "a")).toDF("k", "v"))
