@@ -10,6 +10,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** COMMIT-LOG TABLE — the repo's one table format: the Delta/Iceberg
   * metadata design (immutable data files + an append-only manifest log),
@@ -699,7 +700,14 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * — the clustering knob. */
   private def writeFiles(df: DataFrame, as: StructType,
                          coalesceTo: Option[Int] = None,
-                         clusterBy: Seq[String] = Nil): Seq[FileEntry] = {
+                         clusterBy: Seq[String] = Nil): Seq[FileEntry] =
+    writeFilesCounted(df, as, coalesceTo, clusterBy).map(_._1)
+
+  /** [[writeFiles]], each entry paired with the row count its write task
+    * took (the entry itself records it only under row tracking). */
+  private def writeFilesCounted(df: DataFrame, as: StructType,
+                                coalesceTo: Option[Int] = None,
+                                clusterBy: Seq[String] = Nil): Seq[(FileEntry, Long)] = {
     // files store PHYSICAL column names (stable across renames); `as` is the
     // logical schema governing this write (the commit snapshot's). A
     // materialized row-id column (OPTIMIZE rewrite under row tracking) rides
@@ -718,9 +726,9 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     // tracked tables writing FRESH rows (a rewrite carrying materialized ids
     // allocates nothing)
     val needRows = trackingEnabled && !hasMat
-    def entries(out: DataFrame): Seq[FileEntry] =
+    def entries(out: DataFrame): Seq[(FileEntry, Long)] =
       LogFiles.write(out, filesDir.toString, "", BucketCol, statsByPhys).map(w =>
-        FileEntry(w.name, w.bucket, w.stats, rows = if (needRows) w.rows else -1L))
+        FileEntry(w.name, w.bucket, w.stats, rows = if (needRows) w.rows else -1L) -> w.rows)
     bucketBy match {
       case None =>
         val cs = clusterBy.map(c => col(physOf(as, c)))
@@ -747,14 +755,22 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         val zc: Option[Column] = mortonKeys.map { pcs =>
           graft.ops.ZOrder.register(pdf.sparkSession)
           val ids = pcs.map(pc => graft.ops.ZOrder.bucketExpr(col(pc),
-            graft.ops.ZOrder.quantileBounds(pdf, pc, buckets = 64)))
+            graft.ops.ZOrder.quantileBounds(pdf, pc, buckets = 1 << MortonBits)))
           graft.ops.ZOrder.zkey(ids.head, ids(1))
         }
         val out = (coalesceTo, zc) match {
           // range exchange with sampled bounds — no global single-reducer
-          // sort — then a per-file sort for row-group stats
+          // sort — then a per-file sort for row-group stats. With a file
+          // count, the range keys are the cells of the coarsest Morton grid
+          // with at least n cells, so every file boundary falls on a cell
+          // edge and a file's min/max box is a few aligned squares. A
+          // boundary anywhere on the curve (an exact or a sampled z
+          // quantile) can give a file a box spanning one key's whole range;
+          // which one depended on the sample's seed, the RDD id.
           case (Some(n), Some(z)) =>
-            pdf.repartitionByRange(n, z).sortWithinPartitions(z +: cs: _*)
+            val level = (0 to MortonBits).find(k => (1L << (2 * k)) >= n).getOrElse(MortonBits)
+            pdf.repartitionByRange(n, shiftright(z, 2 * (MortonBits - level)))
+              .sortWithinPartitions(z +: cs: _*)
           case (None, Some(z)) =>
             pdf.repartitionByRange(z).sortWithinPartitions(z +: cs: _*)
           case (Some(n), _) if cs.nonEmpty =>
@@ -780,6 +796,10 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           .sortWithinPartitions((BucketCol +: pKeys).map(col).toIndexedSeq: _*))
     }
   }
+
+  /** Bits per key of a Morton-clustered rewrite: each key is cut into
+    * 2^MortonBits equi-depth buckets before the interleave. */
+  private val MortonBits = 6
 
   private def deleteRec(p: Path): Unit = if (Files.exists(p))
     LogTable.walkDir(p).reverse.foreach(Files.deleteIfExists(_))
@@ -1161,25 +1181,55 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * carries one more positions sidecar, so the delete is time-travelable
     * ("AS OF" the pre-delete version resurrects, the delete's own version
     * stays deleted). No data file is touched. Returns rows newly deleted
-    * (0 ⇒ no commit cut). */
+    * (0 ⇒ no commit cut). One pass: the sidecar is written straight from
+    * the filtered positions scan, and the write tasks count its rows. */
   def deleteWhere(cond: Column): Long = {
     var deleted = 0L
     commitLoop(5) { snap =>
       snap match {
         case None => deleted = 0L; None // empty table: nothing to commit
         case Some(m) =>
-          val live = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
-            .select(col(DvName), col(DvPos)).localCheckpoint(true)
-          deleted = live.count()
-          if (deleted == 0) None // no matches: no version cut
-          else {
-            val sidecar = LogFiles.write(live.coalesce(1), filesDir.toString, "dv-",
-              BucketCol, Nil).map(_.name)
-            Some((m.files, m.dv ++ sidecar, Seq.empty))
-          }
+          val pos = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
+            .select(col(DvName), col(DvPos))
+          val sidecar = LogFiles.write(pos.coalesce(1), filesDir.toString, "dv-",
+            BucketCol, Nil).map(w => FileEntry(w.name, -1, Map.empty) -> w.rows)
+          deleted = sidecar.map(_._2).sum
+          if (deleted == 0) { dropFiles(sidecar.map(_._1)); None } // no matches: no version cut
+          else Some((m.files, m.dv ++ sidecar.map(_._1.name), sidecar.map(_._1)))
       }
     }
     deleted
+  }
+
+  /** INSERT-ONLY MERGE as an APPEND (Delta's insert-only MERGE: a left-anti
+    * join against the target, then a plain append). The batch rows whose
+    * `keys` are absent from the live table — the null-safe anti-join of
+    * [[Merge.insertOnly]], against a key-only scan with the DVs applied —
+    * are written as new files beside the existing ones. There is no
+    * touched-bucket probe, no file is rewritten, and the commit is a pure
+    * add, so [[changesBetween]] reads it without `ignoreChanges`. The
+    * anti-join is derived inside the commit loop, against the snapshot the
+    * CAS expects: a writer that commits an overlapping key first makes the
+    * loser re-derive and skip that key. A batch with no surviving row cuts
+    * no version and leaves no file. Like [[Merge.insertOnly]], duplicate
+    * keys inside one batch are all inserted (callers de-duplicate). A
+    * bucketed table gains at most one file per touched bucket per commit,
+    * until [[compact]]. Returns the rows appended. */
+  def insertMissing(batch: DataFrame, keys: Seq[String], maxAttempts: Int = 5): Long = {
+    var added = 0L
+    commitLoop(maxAttempts) { snap =>
+      val survivors = snap.fold(batch) { m =>
+        Merge.antiByKey(batch, scan(m.files, m.dv, m.schema), keys)
+      }
+      val (fresh, empty) = writeFilesCounted(withChecks(survivors, snap),
+        snap.map(_.schema).getOrElse(schema)).partition(_._2 > 0)
+      dropFiles(empty.map(_._1))
+      added = fresh.map(_._2).sum
+      if (fresh.isEmpty) None // every key already present: no version cut
+      else Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh.map(_._1),
+        snap.map(_.dv).getOrElse(Seq.empty), fresh.map(_._1)))
+    }
+    added
   }
 
   /** OCC merge: the commit loop IS the protocol — staging runs lock-free
@@ -1205,11 +1255,21 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * [[Merge]] flavor is): output rows landing in a bucket the batch did
     * not touch would silently diverge from the unbucketed result, so the
     * merge fails loudly instead. DV entries referencing replaced files
-    * simply stop matching (the rewrite materialized them). */
+    * simply stop matching (the rewrite materialized them).
+    *
+    * The bucketed form reads the batch twice — the probe, then the rewrite
+    * — and once more per OCC retry. A batch that is not already in the
+    * driver (`batch.isLocal`: a local relation) and not already persisted
+    * by the caller is persisted once, before the commit loop, so every
+    * read shares one materialization; it is unpersisted on every exit.
+    * An insert-only sink needs neither read twice: [[insertMissing]]. */
   def occMerge(batch: DataFrame, maxAttempts: Int = 5,
                txn: Option[(String, Long)] = None)
-              (f: (DataFrame, DataFrame) => DataFrame): Int =
-    commitLoop(maxAttempts, txn = txn) { snap =>
+              (f: (DataFrame, DataFrame) => DataFrame): Int = {
+    val persistHere = bucketBy.isDefined && !batch.isLocal &&
+      batch.storageLevel == StorageLevel.NONE
+    if (persistHere) batch.persist()
+    try commitLoop(maxAttempts, txn = txn) { snap =>
       if (txn.exists { case (app, b) =>
           snap.exists(_.txns.getOrElse(app, -1L) >= b) })
         None // already delivered: no version cut
@@ -1220,13 +1280,25 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             snap.map(_.schema).getOrElse(schema))
           Some((fresh, Seq.empty, fresh))
         case Some(_) =>
-          // the touched-bucket probe deliberately re-reads the batch PLAN
-          // rather than a persisted copy: it projects only the bucket keys,
-          // so the un-persisted form is a column-pruned scan — measured
-          // CHEAPER than paying a full-row cache materialization that the
-          // probe then reads unpruned (r13 sf1 A/B)
-          val touched = batch.select(bucketExpr.as(BucketCol))
-            .distinct().collect().map(_.getInt(0)).toSet
+          // the probe and the rewrite read the one materialization of a
+          // non-local batch persisted above. The r13 sf1 A/B, where a
+          // column-pruned re-scan beat a full-row cache, predates the
+          // stateless Silver wave 1, whose batches end in a dedup shuffle
+          // that every read re-ran. With it (and M1 as insertMissing), a
+          // traced medallion-replay set on 4 shared cores ran 51 jobs
+          // instead of 74 and read 60,882 source rows instead of 91,323.
+          // Persisting local batches as well bought nothing in
+          // table-commits and cost peak RSS. Each task reports the buckets
+          // its rows hash to: one job and no shuffle (a distinct() adds an
+          // exchange and a second job).
+          val touched = {
+            import spark.implicits._
+            batch.select(bucketExpr.as(BucketCol)).as[Int].mapPartitions { ids =>
+              val seen = new java.util.BitSet
+              ids.foreach(seen.set)
+              Iterator.single(seen.stream().toArray)
+            }.collect().flatten.toSet
+          }
           if (touched.isEmpty) None // empty batch: nothing to rewrite
           else {
             val (hit, kept) = snap.map(_.files).getOrElse(Seq.empty)
@@ -1245,6 +1317,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           }
       }
     }
+    finally if (persistHere) batch.unpersist()
+  }
 
   /** OPTIMIZE: rewrite the live content into few large files — bucketed:
     * one file per bucket (writeFiles' discipline); unbucketed: coalesced to

@@ -22,9 +22,13 @@ object Merge {
   /** Null-safe (`<=>`) left-anti: rows of `from` whose key is absent from
     * `against`. Using-column anti-joins never match null keys, which would
     * re-insert a null-keyed row on every replay and break idempotency —
-    * all merge flavors use `<=>` key equality uniformly. */
-  private def antiByKey(from: DataFrame, against: DataFrame, keys: Seq[String]): DataFrame = {
-    val a = against.select(keys.map(k => col(k).as("__a_" + k)).toIndexedSeq: _*).distinct()
+    * all merge flavors use `<=>` key equality uniformly. Duplicate keys on
+    * the `against` side change no output row of a left-anti join, so the
+    * key projection is not de-duplicated (that would add an aggregate, and
+    * its exchange when the join is not broadcast, to every plan). */
+  private[merge] def antiByKey(from: DataFrame, against: DataFrame,
+                               keys: Seq[String]): DataFrame = {
+    val a = against.select(keys.map(k => col(k).as("__a_" + k)).toIndexedSeq: _*)
     val cond = keys.map(k => from(k) <=> a("__a_" + k)).reduce(_ && _)
     from.join(a, cond, "left_anti")
   }
@@ -33,6 +37,10 @@ object Merge {
     * reference `Silver/05-silver.py:50-55,208-213,254-259,359-364`).
     * Survivors = batch rows whose key is absent from target. Left-anti join:
     * one shuffle on `keys` (or broadcast of the smaller side under AQE).
+    * This form returns the whole new content, for [[LogTable.merge]] and
+    * for composition; a sink commits the same rows with
+    * [[LogTable.insertMissing]], which appends only the survivors and
+    * rewrites no file.
     */
   def insertOnly(target: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
     target.unionByName(antiByKey(batch, target, keys))

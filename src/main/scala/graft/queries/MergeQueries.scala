@@ -199,7 +199,7 @@ object MergeQueries {
         .withColumn("o_totalprice", round(col("o_totalprice") + 1000, 2))
         .withColumn("o_orderstatus", lit("R"))
       t.overwrite(target)                                                 // v1
-      t.merge(batch1)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey"))) // v2
+      t.insertMissing(batch1, Seq("o_orderkey"))                          // v2
       t.merge(batch2)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))  // v3
       t.history().map { v =>
         t.readVersion(v).agg(
@@ -260,7 +260,7 @@ object MergeQueries {
       .withColumn("o_totalprice", round(col("o_totalprice") + 1000, 2))
       .withColumn("o_orderstatus", lit("R"))
     t.overwrite(target)                                                      // v1
-    t.merge(batch1)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey"))) // v2
+    t.insertMissing(batch1, Seq("o_orderkey"))                               // v2
     t.merge(batch2)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))       // v3
     t.overwrite(t.read().filter(col("o_totalprice") <= 250000))              // v4 delete-where
     t
@@ -609,7 +609,7 @@ object MergeQueries {
         .withColumn("o_totalprice", round(col("o_totalprice") + 1000, 2))
         .withColumn("o_orderstatus", lit("R"))
       t.overwrite(target)                                                 // v1
-      t.merge(batch1)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey"))) // v2
+      t.insertMissing(batch1, Seq("o_orderkey"))                          // v2
       t.merge(batch2)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))  // v3
       t.restore(1)                                                        // v4 ≡ v1
       t.history().map { v =>
@@ -671,7 +671,7 @@ object MergeQueries {
         .withColumn("o_totalprice", round(col("o_totalprice") + 1000, 2))
         .withColumn("o_orderstatus", lit("R"))
       t.overwrite(target)                                                 // v1
-      t.merge(batch1)((cur, b) => Merge.insertOnly(cur, b, Seq("o_orderkey"))) // v2
+      t.insertMissing(batch1, Seq("o_orderkey"))                          // v2
       t.merge(batch2)((cur, b) => Merge.scd1(cur, b, Seq("o_orderkey")))  // v3
       val expired = t.vacuum(retainLast = 2)
       require(expired == Seq(1L),

@@ -712,8 +712,7 @@ object StreamingQueries {
             .writeStream.outputMode("update")
             .option("checkpointLocation", ckptSilverEv)
             .foreachBatch { (b: DataFrame, _: Long) =>
-              silverEvents.merge(b)((cur, bb) =>
-                Merge.insertOnly(cur, bb, Seq("event_id")))
+              silverEvents.insertMissing(b, Seq("event_id")); ()
             }),
           startDrain(spark.readStream.schema(ordDdl).parquet(bronzeOrd)
             .withColumn("upd_utc", timestamp_micros(col("updated_day") * 86400000000L))
@@ -843,8 +842,7 @@ object StreamingQueries {
                 col("doc_id"), col("source"))
             val collapsed = graft.ops.Relational.dedupKeyed(
               clean, Seq("fp"), Seq(col("doc_id").asc))
-            cleanTable.merge(collapsed)((cur, b) =>
-              Merge.insertOnly(cur, b, Seq("fp")))
+            cleanTable.insertMissing(collapsed, Seq("fp")); ()
           }
           .start()
         q.awaitTermination()
@@ -1654,10 +1652,10 @@ object StreamingQueries {
                     (coalesce(col("total_chars"), lit(0L)) + coalesce(col("_d_chars"), lit(0L))).as("total_chars"),
                     (coalesce(col("n_quality_ok"), lit(0L)) + coalesce(col("_d_quality"), lit(0L))).as("n_quality_ok"))
               },
-              () => fpSet.merge(b.select(col("source"), col("fp")).dropDuplicates())(
-                (cur, nb) => Merge.insertOnly(cur, nb, Seq("source", "fp"))),
-              () => langSet.merge(b.select(col("source"), col("lang")).dropDuplicates())(
-                (cur, nb) => Merge.insertOnly(cur, nb, Seq("source", "lang")))))
+              () => fpSet.insertMissing(
+                b.select(col("source"), col("fp")).dropDuplicates(), Seq("source", "fp")),
+              () => langSet.insertMissing(
+                b.select(col("source"), col("lang")).dropDuplicates(), Seq("source", "lang"))))
           }
           .start()
         q.awaitTermination()

@@ -21,10 +21,12 @@ import graft.ops.JobWave
 final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String,
                       checkpointDir: String, asOf: Column) {
 
-  /** Merged tables are hash-bucketed on (a subset of) their merge key so
-    * each foreachBatch MERGE rewrites only the buckets its batch touches —
-    * O(touched partitions) per micro-batch, the Delta file-skipping
-    * equivalent (see [[LogTable.occMerge]]). 16 buckets locally; size to
+  /** Merged tables are hash-bucketed on (a subset of) their merge key.
+    * An updating MERGE (M2, M3, M4, M5) rewrites only the buckets its batch
+    * touches — O(touched partitions) per micro-batch, the Delta
+    * file-skipping equivalent (see [[LogTable.occMerge]]). An insert-only
+    * MERGE (M1) rewrites nothing: it appends at most one file per touched
+    * bucket ([[LogTable.insertMissing]]). 16 buckets locally; size to
     * target file counts on a real cluster. */
   private val NBuckets = 16
   private def t(name: String, schema: org.apache.spark.sql.types.StructType,

@@ -17,7 +17,9 @@ import graft.ops.Relational
   * (`Medallion.runSilverWave1`) and keeps no streaming state; a duplicate
   * re-delivered in a later batch is absorbed by the upsert — M1's anti-join,
   * M2's logout guard, M3's strict recency guard — so every upsert is
-  * idempotent under re-delivery.
+  * idempotent under re-delivery. M1 commits as an append of the rows whose
+  * keys are new ([[LogTable.insertMissing]]): a re-delivered batch cuts no
+  * version, and no M1 commit rewrites a file.
   *
   * Streaming wiring: bronze tables are append-only parquet directories, so
   * the silver sources are plain file streams over them — the OSS equivalent
@@ -70,9 +72,13 @@ object Silver {
 
   // ── upserts (the foreachBatch bodies; ref MERGE statements in 05-silver.py) ──
 
-  /** M1 — users / workouts / heart_rate / completed_workouts insert-only. */
-  def upsertInsertOnly(table: LogTable, keys: Seq[String])(batch: DataFrame): Unit =
-    table.merge(batch)((cur, b) => Merge.insertOnly(cur, b, keys))
+  /** M1 — users / workouts / heart_rate / completed_workouts / workout_bpm
+    * insert-only: the batch rows whose keys the table lacks are APPENDED
+    * ([[LogTable.insertMissing]]) — one read of the batch, no touched-bucket
+    * probe, no file rewritten. */
+  def upsertInsertOnly(table: LogTable, keys: Seq[String])(batch: DataFrame): Unit = {
+    table.insertMissing(batch, keys); ()
+  }
 
   /** M2 — gym_logs logout extension (ref 05-silver.py:108-115). The batch is
     * first collapsed to max-logout per merge key: one micro-batch can carry

@@ -411,6 +411,107 @@ class LogTableSpec extends SparkSpec {
     assert(rows(old) == rows(live))
   }
 
+  private def filesOnDisk(root: String): Set[String] =
+    LogTable.listDir(java.nio.file.Paths.get(root, "files"))
+      .map(_.getFileName.toString).toSet
+
+  test("insertMissing: an all-duplicate batch cuts no version and writes no file") {
+    for (bucketBy <- Seq(None, Some((Seq("k"), 4)))) {
+      val root = tmp("log-m1-dup-")
+      val t = new LogTable(spark, root, s2, bucketBy = bucketBy)
+      t.overwrite((1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"))
+      val (v, onDisk) = (t.currentVersion, filesOnDisk(root))
+      val dup = (1L to 20L by 3).map(i => (i, "again")).toDF("k", "v")
+      assert(t.insertMissing(dup, Seq("k")) == 0L)
+      assert(t.insertMissing(Seq.empty[(Long, String)].toDF("k", "v"), Seq("k")) == 0L)
+      assert(t.currentVersion == v, s"bucketBy=$bucketBy")
+      assert(filesOnDisk(root) == onDisk, s"bucketBy=$bucketBy")
+      // a batch with one new key appends one file and rewrites none
+      assert(t.insertMissing(Seq((5L, "again"), (21L, "new")).toDF("k", "v"), Seq("k")) == 1L)
+      assert(filesOnDisk(root) -- onDisk == t.liveFileNames().toSet -- onDisk)
+      assert((filesOnDisk(root) -- onDisk).size == 1 && onDisk.subsetOf(t.liveFileNames().toSet))
+      assert(rows(t.read()) == (1L to 20L).map(i => (i, s"v$i")) :+ ((21L, "new")))
+    }
+  }
+
+  test("insertMissing under a forced interleaving: a key committed between " +
+      "derive and CAS is seen by the retry, and no key is duplicated") {
+    val root = tmp("log-m1-race-")
+    val bucketBy = Some((Seq("k"), 4))
+    val other = new LogTable(spark, root, s2, bucketBy = bucketBy)
+    other.overwrite(Seq((1L, "base")).toDF("k", "v"))                      // v1
+    // the in-commit clock runs inside the CAS attempt, after the anti-join
+    // was derived: on the first call the other writer commits key 3 first
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val t = new LogTable(spark, root, s2, bucketBy = bucketBy, clock = () => {
+      if (fired.compareAndSet(false, true))
+        other.append(Seq((3L, "other")).toDF("k", "v"))                    // v2
+      System.currentTimeMillis()
+    })
+    val added = t.insertMissing(Seq((2L, "mine"), (3L, "mine")).toDF("k", "v"), Seq("k"))
+    assert(fired.get())
+    assert(added == 1L, "the retry must re-derive against the other writer's key")
+    assert(t.history() == Seq(1L, 2L, 3L))
+    assert(rows(t.read()) == Seq((1L, "base"), (2L, "mine"), (3L, "other")))
+    // the losing attempt's files were dropped
+    assert(filesOnDisk(root) == t.liveFileNames().toSet)
+  }
+
+  test("an insertMissing commit is a pure add: changesBetween reads it " +
+      "without ignoreChanges") {
+    val t = new LogTable(spark, tmp("log-m1-feed-"), s2, bucketBy = Some((Seq("k"), 4)))
+    t.overwrite((1L to 10L).map(i => (i, "base")).toDF("k", "v"))         // v1
+    t.insertMissing((8L to 14L).map(i => (i, "b2")).toDF("k", "v"), Seq("k"))  // v2
+    t.insertMissing((12L to 16L).map(i => (i, "b3")).toDF("k", "v"), Seq("k")) // v3
+    assert(rows(t.changesBetween(1L, 3L)) ==
+      (11L to 14L).map(i => (i, "b2")) ++ (15L to 16L).map(i => (i, "b3")))
+  }
+
+  test("a bucketed occMerge leaves no persisted RDD and no cached plan: on " +
+      "success, an empty batch, a CHECK failure and a lost-CAS retry") {
+    spark.catalog.clearCache()
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def clean(what: String): Unit = {
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, what)
+      assert(cacheManager.isEmpty, what)
+    }
+    val t = new LogTable(spark, tmp("log-persist-"), s2, bucketBy = Some((Seq("k"), 4)))
+    t.overwrite((1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"))
+    // a non-local batch: the merge persists it for the probe and the rewrite
+    def batch(from: Long, to: Long) =
+      spark.range(from, to).select(col("id").as("k"), lit("B").as("v"))
+    var persistedInside = false
+    val scd1 = (cur: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) => {
+      persistedInside = b.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      Merge.scd1(cur, b, Seq("k"))
+    }
+    assert(t.occMerge(batch(15, 25))(scd1) == 1)
+    assert(persistedInside, "the non-local batch was not persisted during the merge")
+    clean("success")
+    assert(rows(t.read()).map(_._1) == (1L to 24L))
+    val v = t.currentVersion
+    t.merge(batch(0, 0))(scd1)
+    assert(t.currentVersion == v)
+    clean("empty batch")
+    t.addConstraint("k_small", "k < 100")
+    intercept[Exception](t.merge(batch(99, 102))(scd1))
+    clean("CHECK failure")
+    val interloped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    assert(t.occMerge(batch(30, 33)) { (cur, b) =>
+      if (interloped.compareAndSet(false, true)) t.append(Seq((50L, "x")).toDF("k", "v"))
+      scd1(cur, b)
+    } == 2)
+    clean("lost-CAS retry")
+    // a batch the caller persisted stays persisted: the caller owns it
+    val mine = batch(40, 42).persist()
+    t.merge(mine)(scd1)
+    assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    mine.unpersist()
+    assert(rows(t.read()).map(_._1) == (1L to 24L) ++ (30L to 32L) ++ (40L to 41L) :+ 50L)
+  }
+
   test("directory streams are closed: log listings hold no descriptors") {
     val t = new LogTable(spark, tmp("log-fds-"), s2)
     t.append(Seq((1L, "a")).toDF("k", "v"))

@@ -38,6 +38,71 @@ class MergePropertiesSpec extends SparkSpec {
     }
   }
 
+  test("property: insertOnly with duplicated TARGET keys equals the multiset model") {
+    cases.foreach { case (t, b) =>
+      // the target keeps its duplicate keys: the anti-join's right side
+      // carries each key several times, which must not change the survivors
+      val tKeys = t.map(_._1).toSet
+      val expected = (t ++ dedupByKey(b).filterNot(r => tKeys(r._1))).sorted
+      val got = Merge.insertOnly(t.toDF("k", "ord", "v"),
+          dedupByKey(b).toDF("k", "ord", "v"), Seq("k"))
+        .as[(Int, Int, String)].collect().toSeq.sorted
+      assert(got == expected)
+    }
+  }
+
+  test("an M1 plan anti-joins against the raw key projection: no aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.functions.col
+    def aggregates(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+    val target = spark.range(0, 100).select((col("id") % 10).as("k"), col("id").as("v"))
+    val batch = spark.range(50, 150).select((col("id") % 20).as("k"), col("id").as("v"))
+    // the former plan: the same anti-join over a de-duplicated key side
+    val keysDistinct = target.select(col("k").as("__a_k")).distinct()
+    val former = target.unionByName(
+      batch.join(keysDistinct, batch("k") <=> keysDistinct("__a_k"), "left_anti"))
+    assert(aggregates(former) == 1)
+    val m1 = Merge.insertOnly(target, batch, Seq("k"))
+    assert(aggregates(m1) == 0, m1.queryExecution.optimizedPlan.treeString)
+    assert(m1.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).sorted ==
+      former.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).sorted)
+  }
+
+  test("insertMissing equals merge(insertOnly) on bucketed and unbucketed " +
+      "tables: null keys, duplicate keys in one batch, a target with a DV") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("ord", IntegerType), StructField("v", StringType)))
+    // every fourth row gets a NULL key; batches are NOT de-duplicated
+    def withNulls(rows: List[(Int, Int, String)]): Seq[(Option[Int], Int, String)] =
+      rows.zipWithIndex.map { case ((k, o, v), i) => (if (i % 4 == 0) None else Some(k), o, v) }
+    def contents(t: LogTable) =
+      t.read().as[(Option[Int], Int, String)].collect().toSeq.sortBy(r => (r._1, r._2, r._3))
+    for (bucketed <- Seq(false, true); (tr, br) <- cases.take(4)) {
+      val bucketBy = if (bucketed) Some((Seq("k"), 4)) else None
+      def table(tag: String) = new LogTable(spark,
+        java.nio.file.Files.createTempDirectory(s"m1-$tag-").toString, schema, bucketBy)
+      val (viaMerge, viaAppend) = (table("merge"), table("append"))
+      val target = withNulls(tr).toDF("k", "ord", "v")
+      val batch = withNulls(br ++ br.take(3)).toDF("k", "ord", "v")
+      for (t <- Seq(viaMerge, viaAppend)) {
+        t.overwrite(target)
+        t.deleteWhere(col("ord") < 30) // the live keys exclude DV-deleted rows
+      }
+      viaMerge.merge(batch)((cur, b) => Merge.insertOnly(cur, b, Seq("k")))
+      val before = viaAppend.read().count()
+      val added = viaAppend.insertMissing(batch, Seq("k"))
+      assert(contents(viaAppend) == contents(viaMerge), s"bucketed=$bucketed")
+      assert(added == contents(viaAppend).size - before)
+      // re-delivery: every key is present now, nothing is appended
+      val v = viaAppend.currentVersion
+      assert(viaAppend.insertMissing(batch, Seq("k")) == 0L)
+      assert(viaAppend.currentVersion == v)
+    }
+  }
+
   test("property: scd1 equals batch-wins map merge") {
     cases.foreach { case (t, b) =>
       val tm = dedupByKey(t).map(r => r._1 -> r).toMap
