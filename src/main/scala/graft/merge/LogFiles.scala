@@ -1,31 +1,75 @@
 package graft.merge
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker,
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, WriteJobStatsTracker,
   WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
-/** The one way a [[LogTable]] writes data: Spark's `FileFormatWriter` runs
-  * the frame's physical plan and writes each parquet file ONCE, under its
-  * final name in the table's `files/` dir — Delta's `TransactionalWrite`
-  * (a `DelayedCommitProtocol` plus a write-side statistics tracker). No
-  * staging dir, no task or job rename, no `_SUCCESS`, no `.crc`, and no
-  * read-back of the written files: the row counts and min/max stats the
-  * manifest records are taken by the write tasks as they write each row.
+/** The one way a [[LogTable]] writes and reads data files. Writes: Spark's
+  * `FileFormatWriter` runs the frame's physical plan and writes each
+  * parquet file ONCE, under its final name in the table's `files/` dir —
+  * Delta's `TransactionalWrite` (a `DelayedCommitProtocol` plus a
+  * write-side statistics tracker). No staging dir, no task or job rename,
+  * no `_SUCCESS`, no `.crc`, and no read-back of the written files: the row
+  * counts and min/max stats the manifest records are taken by the write
+  * tasks as they write each row. Reads: the files the log names, through a
+  * file index built from those names — nothing is listed.
   */
 private[merge] object LogFiles {
+
+  /** `names` under `dir`, read with `schema` as the read schema. Each file
+    * costs one stat on the driver. `spark.read.parquet(paths)` would list
+    * the paths instead, and for more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * that listing is a Spark job of its own. */
+  def read(spark: SparkSession, dir: Path, names: Seq[String], schema: StructType): DataFrame = {
+    val files = names.map { n =>
+      val p = dir.resolve(n)
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis, new HPath(p.toUri))
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(ListedFiles(files), new StructType,
+      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** `t` with every field, element and value nullable, as a file source's
+    * read schema always is: a column that a file lacks reads as null. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** A file index that is a fixed list of files, all in one unpartitioned
+    * directory. Equal lists give equal indexes, so equal reads share a
+    * cached plan as `InMemoryFileIndex` reads of the same paths do. */
+  private final case class ListedFiles(files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[HPath] = files.map(_.getPath)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType
+  }
 
   /** One written file: name under the files dir, bucket (-1 = none), its
     * row count, and (min, max) per stats column as strings — absent for a

@@ -692,22 +692,16 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   /** Materialize `df` into immutable uuid-named files under `files/`,
     * each written once under its final name ([[LogFiles.write]]); returns
-    * the new entries with their bucket and the per-file stats and row
-    * counts the write tasks took. `coalesceTo` (unbucketed only) bounds the
+    * the new entries with their bucket and the per-file stats the write
+    * tasks took, each paired with its row count (the entry itself records
+    * it only under row tracking). `coalesceTo` (unbucketed only) bounds the
     * file count — the compaction knob. `clusterBy` (unbucketed only)
     * range-partitions and sorts the rewrite on those keys, so each output
     * file covers a tight key range and the manifest stats become selective
     * — the clustering knob. */
   private def writeFiles(df: DataFrame, as: StructType,
                          coalesceTo: Option[Int] = None,
-                         clusterBy: Seq[String] = Nil): Seq[FileEntry] =
-    writeFilesCounted(df, as, coalesceTo, clusterBy).map(_._1)
-
-  /** [[writeFiles]], each entry paired with the row count its write task
-    * took (the entry itself records it only under row tracking). */
-  private def writeFilesCounted(df: DataFrame, as: StructType,
-                                coalesceTo: Option[Int] = None,
-                                clusterBy: Seq[String] = Nil): Seq[(FileEntry, Long)] = {
+                         clusterBy: Seq[String] = Nil): Seq[(FileEntry, Long)] = {
     // files store PHYSICAL column names (stable across renames); `as` is the
     // logical schema governing this write (the commit snapshot's). A
     // materialized row-id column (OPTIMIZE rewrite under row tracking) rides
@@ -762,13 +756,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           // range exchange with sampled bounds — no global single-reducer
           // sort — then a per-file sort for row-group stats. With a file
           // count, the range keys are the cells of the coarsest Morton grid
-          // with at least n cells, so every file boundary falls on a cell
-          // edge and a file's min/max box is a few aligned squares. A
-          // boundary anywhere on the curve (an exact or a sampled z
-          // quantile) can give a file a box spanning one key's whole range;
-          // which one depended on the sample's seed, the RDD id.
+          // with at least 2n OCCUPIED cells (correlated keys occupy about
+          // 2^level of its 4^level; with only n, the sampled bounds can
+          // merge two cells and miss a file), so every file boundary falls
+          // on a cell edge and a file's min/max box is a few aligned
+          // squares. A boundary anywhere on the curve (an exact or a
+          // sampled z quantile) can give a file a box spanning one key's
+          // whole range; which one depended on the sample's seed, the RDD id.
           case (Some(n), Some(z)) =>
-            val level = (0 to MortonBits).find(k => (1L << (2 * k)) >= n).getOrElse(MortonBits)
+            val level = mortonLevel(pdf.select(z), n)
             pdf.repartitionByRange(n, shiftright(z, 2 * (MortonBits - level)))
               .sortWithinPartitions(z +: cs: _*)
           case (None, Some(z)) =>
@@ -801,6 +797,22 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * 2^MortonBits equi-depth buckets before the interleave. */
   private val MortonBits = 6
 
+  /** The coarsest Morton grid level whose occupied cells number at least
+    * `2n` (the finest level when none does), from the one-column frame of
+    * z-codes `zs`: one job without a shuffle, each task reporting the
+    * codes it saw (at most 4^MortonBits). */
+  private def mortonLevel(zs: DataFrame, n: Int): Int = {
+    import spark.implicits._
+    val codes = zs.as[Long].mapPartitions { it =>
+      val seen = new java.util.BitSet
+      it.foreach(z => seen.set(z.toInt))
+      Iterator.single(seen.stream().toArray)
+    }.collect().flatten.distinct
+    (0 to MortonBits).find { k =>
+      codes.map(_ >> (2 * (MortonBits - k))).distinct.length >= 2 * n
+    }.getOrElse(MortonBits)
+  }
+
   private def deleteRec(p: Path): Unit = if (Files.exists(p))
     LogTable.walkDir(p).reverse.foreach(Files.deleteIfExists(_))
 
@@ -820,7 +832,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   private val DvSchema = StructType(Seq(StructField(DvName, StringType),
     StructField(DvPos, LongType)))
   private def readDv(names: Seq[String]): DataFrame =
-    spark.read.schema(DvSchema).parquet(names.map(d => filesDir.resolve(d).toString): _*)
+    LogFiles.read(spark, filesDir, names, DvSchema)
 
   /** THE scan: `entries` read with `as` as the read schema — files written
     * before an [[evolve]] lack the newer columns and come back null-filled
@@ -847,8 +859,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     val readSchema =
       if (!withIds) physicalSchema(as)
       else StructType(physicalSchema(as).fields :+ StructField(LogTable.MatRowIdCol, LongType))
-    val raw = spark.read.schema(readSchema)
-      .parquet(entries.map(e => filesDir.resolve(e.name).toString): _*)
+    val raw = LogFiles.read(spark, filesDir, entries.map(_.name), readSchema)
     val located = if (!keepPos && !withIds && dv.isEmpty) raw
       else raw
         .withColumn(DvName, regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
@@ -1038,14 +1049,14 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   /** Replace the table content (cuts a new version). */
   def overwrite(df: DataFrame): Unit =
     commitLoop(5) { snap =>
-      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema))
+      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
       Some((fresh, Seq.empty, fresh))
     }
 
   /** Append-only write: prior files + the new ones, DVs carried forward. */
   def append(df: DataFrame): Unit =
     commitLoop(5) { snap =>
-      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema))
+      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
       Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh,
         snap.map(_.dv).getOrElse(Seq.empty), fresh))
     }
@@ -1073,7 +1084,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         lit(true)))
       snap match {
         case None =>
-          val fresh = writeFiles(validated, schema)
+          val fresh = writeFiles(validated, schema).map(_._1)
           Some((fresh, Seq.empty, fresh))
         case Some(m) =>
           // one predicate scan to find the touched files (live rows only —
@@ -1087,7 +1098,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           // loss); coalesce to false mirrors SQL DELETE / deleteWhere
           val remainder = scan(rewrite, m.dv, m.schema)
             .filter(!coalesce(cond, lit(false)))
-          val fresh = writeFiles(remainder.unionByName(validated), m.schema)
+          val fresh = writeFiles(remainder.unionByName(validated), m.schema).map(_._1)
           // stale DV rows for removed files are inert (fresh files get new
           // uuid names) and purge on the next compact — deleteWhere's rule
           Some((keep ++ fresh, m.dv, fresh))
@@ -1131,7 +1142,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
                   .map(v => when(c, v.cast(f.dataType)).otherwise(col(f.name)))
                   .getOrElse(col(f.name)).as(f.name)
               }.toIndexedSeq: _*)
-            val fresh = writeFiles(withChecks(upd, snap), m.schema)
+            val fresh = writeFiles(withChecks(upd, snap), m.schema).map(_._1)
             Some((keep ++ fresh, m.dv, fresh))
           }
       }
@@ -1162,7 +1173,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       if (snap.exists(_.txns.getOrElse(appId, -1L) >= batchId)) {
         committed = false; None // already delivered: no version cut
       } else {
-        val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema))
+        val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
         committed = true
         Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh,
           snap.map(_.dv).getOrElse(Seq.empty), fresh))
@@ -1182,7 +1193,10 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * ("AS OF" the pre-delete version resurrects, the delete's own version
     * stays deleted). No data file is touched. Returns rows newly deleted
     * (0 ⇒ no commit cut). One pass: the sidecar is written straight from
-    * the filtered positions scan, and the write tasks count its rows. */
+    * the filtered positions scan, and the write task counts its rows. The
+    * scan runs in parallel; one shuffle hands its positions to the single
+    * task that writes the one sidecar (a coalesce would pull the scan
+    * itself into that task). */
   def deleteWhere(cond: Column): Long = {
     var deleted = 0L
     commitLoop(5) { snap =>
@@ -1191,7 +1205,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         case Some(m) =>
           val pos = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
             .select(col(DvName), col(DvPos))
-          val sidecar = LogFiles.write(pos.coalesce(1), filesDir.toString, "dv-",
+          val sidecar = LogFiles.write(pos.repartition(1), filesDir.toString, "dv-",
             BucketCol, Nil).map(w => FileEntry(w.name, -1, Map.empty) -> w.rows)
           deleted = sidecar.map(_._2).sum
           if (deleted == 0) { dropFiles(sidecar.map(_._1)); None } // no matches: no version cut
@@ -1215,13 +1229,13 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * keys inside one batch are all inserted (callers de-duplicate). A
     * bucketed table gains at most one file per touched bucket per commit,
     * until [[compact]]. Returns the rows appended. */
-  def insertMissing(batch: DataFrame, keys: Seq[String], maxAttempts: Int = 5): Long = {
+  def insertMissing(batch: DataFrame, keys: Seq[String]): Long = {
     var added = 0L
-    commitLoop(maxAttempts) { snap =>
+    commitLoop(5) { snap =>
       val survivors = snap.fold(batch) { m =>
         Merge.antiByKey(batch, scan(m.files, m.dv, m.schema), keys)
       }
-      val (fresh, empty) = writeFilesCounted(withChecks(survivors, snap),
+      val (fresh, empty) = writeFiles(withChecks(survivors, snap),
         snap.map(_.schema).getOrElse(schema)).partition(_._2 > 0)
       dropFiles(empty.map(_._1))
       added = fresh.map(_._2).sum
@@ -1277,20 +1291,12 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         case None =>
           val cur = snap.map(m => scan(m.files, m.dv, m.schema)).getOrElse(emptyDf)
           val fresh = writeFiles(withChecks(f(cur, batch), snap),
-            snap.map(_.schema).getOrElse(schema))
+            snap.map(_.schema).getOrElse(schema)).map(_._1)
           Some((fresh, Seq.empty, fresh))
         case Some(_) =>
-          // the probe and the rewrite read the one materialization of a
-          // non-local batch persisted above. The r13 sf1 A/B, where a
-          // column-pruned re-scan beat a full-row cache, predates the
-          // stateless Silver wave 1, whose batches end in a dedup shuffle
-          // that every read re-ran. With it (and M1 as insertMissing), a
-          // traced medallion-replay set on 4 shared cores ran 51 jobs
-          // instead of 74 and read 60,882 source rows instead of 91,323.
-          // Persisting local batches as well bought nothing in
-          // table-commits and cost peak RSS. Each task reports the buckets
-          // its rows hash to: one job and no shuffle (a distinct() adds an
-          // exchange and a second job).
+          // the probe and the rewrite must read one materialization of a
+          // non-local batch (persisted above). Each task reports the
+          // buckets its rows hash to: one job and no shuffle.
           val touched = {
             import spark.implicits._
             batch.select(bucketExpr.as(BucketCol)).as[Int].mapPartitions { ids =>
@@ -1306,7 +1312,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             val dv = snap.map(_.dv).getOrElse(Seq.empty)
             val as = snap.map(_.schema).getOrElse(schema)
             val cur = if (hit.isEmpty) emptyDf(as) else scan(hit, dv, as)
-            val fresh = writeFiles(withChecks(f(cur, batch), snap), as)
+            val fresh = writeFiles(withChecks(f(cur, batch), snap), as).map(_._1)
             val stray = fresh.map(_.bucket).toSet -- touched
             if (stray.nonEmpty) dropFiles(fresh)
             require(stray.isEmpty,
@@ -1364,7 +1370,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             val fresh = writeFiles(src, m.schema,
               coalesceTo = if (bucketBy.isEmpty) Some(want) else None,
               clusterBy = clusterBy)
-              .map(e => if (clusterBy.nonEmpty) e.copy(clustered = true) else e)
+              .map { case (e, _) => if (clusterBy.nonEmpty) e.copy(clustered = true) else e }
             removed = m.files.size
             Some((fresh, Seq.empty, fresh))
           }
@@ -1405,7 +1411,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
             val src = scan(todo, m.dv, m.schema, withIds = trackingEnabled)
               .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
             val fresh = writeFiles(src, m.schema, coalesceTo = Some(want),
-              clusterBy = clusterBy).map(_.copy(clustered = true))
+              clusterBy = clusterBy).map(_._1.copy(clustered = true))
             rewritten = todo.size
             // kept files' DV rows must survive: pass the sidecars through
             Some((keep ++ fresh, m.dv, fresh))

@@ -66,6 +66,26 @@ class LiquidClusteringSpec extends SparkSpec {
     assert(t.read().as[(Long, Long)].collect().toSet == grid.toSet)
   }
 
+  test("two correlated keys (a = b): a Morton rewrite writes the file count " +
+      "its target size asks for, and each file covers a short diagonal run") {
+    val s = StructType(Seq(
+      StructField("a", LongType), StructField("b", LongType)))
+    val root = Files.createTempDirectory("lc-diag-")
+    val t = new LogTable(spark, root.toString, s, statsBy = Seq("a", "b"))
+    t.append((0L until 4096L).map(i => (i, i)).toDF("a", "b").repartition(2))
+    val bytes = t.liveFileNames().map(f => Files.size(root.resolve("files").resolve(f))).sum
+    val target = (bytes + 15) / 16
+    val want = math.ceil(bytes.toDouble / target).toInt
+    assert(t.compact(targetFileBytes = target, clusterBy = Seq("a", "b")) == 2)
+    // the keys fill only the grid's diagonal: of the 16 cells of a grid 4
+    // cells a side they occupy 4, and a rewrite keyed on those cells could
+    // write no more than 4 files
+    assert(t.liveFileNames().size == want)
+    assert(t.readRange("a", lit(0L), lit(255L)).inputFiles.length <= 2)
+    assert(t.read().as[(Long, Long)].collect().toSet ==
+      (0L until 4096L).map(i => (i, i)).toSet)
+  }
+
   test("two NON-NUMERIC keys fall back to lexicographic clustering instead " +
       "of throwing in the Morton quantile pass; leading-key pruning works") {
     // the Morton path needs quantile-sketchable keys (approxQuantile);

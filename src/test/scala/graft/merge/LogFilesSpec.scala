@@ -210,7 +210,7 @@ class LogFilesSpec extends SparkSpec {
     assert(jobs == 5)
   }
 
-  test("deleteWhere on a table-commits-shaped table runs 1 Spark job and " +
+  test("deleteWhere on a table-commits-shaped table runs 2 Spark jobs and " +
       "leaves no sidecar when nothing matches") {
     val root = tmp("lf-del-jobs-")
     val t = new LogTable(spark, root,
@@ -221,14 +221,26 @@ class LogFilesSpec extends SparkSpec {
     def oneDevice(dev: Long, lo: Long) =
       col("device_id") === dev && col("time").between(timestamp_seconds(lit(lo)),
         timestamp_seconds(lit(lo + 6000)))
-    // the positions scan writes the sidecar directly; the write tasks count
-    // its rows (the former eager checkpoint and count added two jobs)
+    // the parallel positions scan, then one shuffle into the single task
+    // that writes the sidecar and counts its rows (the former eager
+    // checkpoint and count added two jobs)
     val (n, jobs) = JobCounter.jobsIn(spark.sparkContext)(t.deleteWhere(oneDevice(7L, 1000L)))
-    assert(n == 60L && jobs == 1)
+    assert(n == 60L && jobs == 2)
     val (v, onDisk) = (t.currentVersion, filesIn(root))
     assert(t.deleteWhere(oneDevice(7L, 1000L)) == 0L) // already deleted
     assert(t.currentVersion == v && filesIn(root) == onDisk)
     assert(t.read().count() == 20000L - 60L)
+  }
+
+  test("a read of more than 32 files runs no listing job") {
+    val t = new LogTable(spark, tmp("lf-many-"), StructType.fromDDL("k bigint"))
+    t.append(spark.range(0, 480, 1, 48).toDF("k"))
+    assert(t.liveFileNames().size == 48)
+    assert(t.deleteWhere(col("k") % 10 === 0L) == 48L)
+    // spark.read.parquet of this many paths lists them in a Spark job
+    val (live, jobs) = JobCounter.jobsIn(spark.sparkContext)(t.read())
+    assert(jobs == 0)
+    assert(live.inputFiles.length == 48 + 1 && live.count() == 432L) // + the sidecar
   }
 
   test("the bucketed write stacks no second sort over the bucket sort") {
