@@ -208,10 +208,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   // checkpoint, and the snapshot fold ORs it up.
   @volatile private var trackedKnown: Boolean = rowTracking
   private def trackingEnabled: Boolean = {
-    if (!trackedKnown) {
-      val v = currentVersion
-      if (v > 0 && snapshotAt(v).rowTracking) trackedKnown = true
-    }
+    if (!trackedKnown && live.rowTracking) trackedKnown = true
     trackedKnown
   }
 
@@ -402,25 +399,36 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     catch { case _: FileAlreadyExistsException => Files.delete(tmp); false }
   }
 
-  /** The CAS: atomically create `_log/<expected+1>.json` holding the DELTA
-    * from `prev` to the new (files, dv) state. False = another commit
-    * landed first (caller discards orphan files and re-derives). On
-    * success, cuts a checkpoint when the version hits the interval. */
   private val PartIdx = """part-(\d+)""".r
 
-  private def tryCommit(prev: Option[Snapshot], newFiles0: Seq[FileEntry],
-                        newDv: Seq[String], dataChange: Boolean,
-                        newSchema: Option[StructType] = None,
-                        txn: Option[(String, Long)] = None,
-                        constraintAdd: Option[(String, String)] = None,
-                        constraintDrop: Option[String] = None,
-                        rowIdHwmFloor: Long = 0L,
-                        featureAdd: Option[String] = None): Boolean = {
-    val expected = prev.map(_.version).getOrElse(0L)
-    val v = expected + 1
-    val prevFiles = prev.map(_.files).getOrElse(Seq.empty)
-    val prevDv = prev.map(_.dv).getOrElse(Seq.empty)
-    val prevNames = prevFiles.map(_.name).toSet
+  /** THE commit (the CAS): atomically create `_log/<prev.version + 1>.json`
+    * holding the difference `next − prev`, and nothing else:
+    *   - `add` / `remove`: the files of `next` not in `prev`, and the names
+    *     of `prev`'s files not in `next`; `dvAdd` / `dvRemove` likewise for
+    *     the DV sidecars;
+    *   - `schema`: `next.schema` when it differs from `prev.schema`, and
+    *     always on the first commit (Delta writes metaData in commit 0, so
+    *     the log is self-describing and SQL/batch readers need no
+    *     constructor schema);
+    *   - `constraintAdd` / `constraintDrop`: the difference of the
+    *     constraint maps; `featureAdd`: the difference of the feature sets
+    *     (a manifest records at most one of each);
+    *   - `txn`: the caller's (appId, batchId) watermark, if any.
+    * The commit stamps its own version, in-commit timestamp and row-id
+    * high-water mark; `next`'s are ignored. False = another commit landed
+    * first (the caller drops its fresh files and re-derives). On success
+    * the committed state seeds the snapshot cache and, at the interval,
+    * cuts a checkpoint. */
+  private def tryCommit(prev: Snapshot, next: Snapshot, dataChange: Boolean,
+                        txn: Option[(String, Long)]): Boolean = {
+    val v = prev.version + 1
+    val prevNames = prev.files.map(_.name).toSet
+    val constraintAdd = next.constraints.toSet -- prev.constraints.toSet
+    val constraintDrop = prev.constraints.keySet -- next.constraints.keySet
+    val featureAdd = next.features -- prev.features
+    require(constraintAdd.size <= 1 && constraintDrop.size <= 1 &&
+      featureAdd.size <= 1 && prev.features.subsetOf(next.features),
+      "a commit adds and drops at most one constraint and adds at most one feature")
     // ROW TRACKING: allocate contiguous base row ids to this commit's fresh
     // files (those written with a known row count) from the previous high-water
     // mark, in (bucket, part-index) order — the within-file sort is the
@@ -429,40 +437,35 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     // without a count (OPTIMIZE rewrites) carry MATERIALIZED ids instead and
     // are skipped. Allocation happens INSIDE the commit attempt, against the
     // snapshot being CAS'd on, so an OCC retry re-allocates correctly.
-    val prevHwm = math.max(prev.map(_.rowIdHwm).getOrElse(0L), rowIdHwmFloor)
     // effective tracking: this handle's flag OR the logged table feature
-    val tracked = rowTracking || prev.exists(_.rowTracking)
+    val tracked = rowTracking || prev.rowTracking
     if (tracked) trackedKnown = true
-    val newFiles: Seq[FileEntry] =
-      if (!tracked) newFiles0
+    val fresh = next.files.filterNot(e => prevNames.contains(e.name))
+    val files: Seq[FileEntry] =
+      if (!tracked) next.files
       else {
-        var next = prevHwm
-        val assigned = newFiles0
-          .filter(e => !prevNames.contains(e.name) && e.rows >= 0 && e.baseRowId < 0)
+        var hwm = prev.rowIdHwm
+        val assigned = fresh.filter(e => e.rows >= 0 && e.baseRowId < 0)
           .sortBy(e => (e.bucket,
             PartIdx.findFirstMatchIn(e.name).map(_.group(1).toInt).getOrElse(0),
             e.name))
-          .map { e => val b = next + 1; next += e.rows; e.name -> e.copy(baseRowId = b) }
+          .map { e => val b = hwm + 1; hwm += e.rows; e.name -> e.copy(baseRowId = b) }
           .toMap
-        newFiles0.map(e => assigned.getOrElse(e.name, e))
+        next.files.map(e => assigned.getOrElse(e.name, e))
       }
-    val newHwm = prevHwm +
-      newFiles.filter(e => !prevNames.contains(e.name) && e.rows >= 0).map(_.rows).sum
-    val newNames = newFiles.map(_.name).toSet
+    val newHwm = prev.rowIdHwm + fresh.filter(_.rows >= 0).map(_.rows).sum
+    val nextNames = next.files.map(_.name).toSet
     // in-commit timestamp: strictly monotone even when the wall clock is
     // coarse or steps backwards (Delta's inCommitTimestamp clamp)
-    val ts = math.max(prev.map(_.tsMs).getOrElse(0L) + 1, clock())
+    val ts = math.max(prev.tsMs + 1, clock())
     val node: ObjectNode = mapper.createObjectNode()
     node.put("version", v)
     node.put("dataChange", dataChange)
     node.put("ts", ts)
     if (tracked) { node.put("rowIdHwm", newHwm); node.put("rowTracking", true) }
     featureAdd.foreach(node.put("featureAdd", _))
-    // the FIRST commit always embeds the schema (Delta writes metaData in
-    // commit 0) — the log is self-describing, so SQL/batch readers can
-    // resolve the schema without the constructor contract
-    newSchema.orElse(if (prev.isEmpty) Some(schema) else None)
-      .foreach(s => node.put("schema", s.json))
+    if (prev.version == 0 || next.schema != prev.schema)
+      node.put("schema", next.schema.json)
     txn.foreach { case (app, batch) =>
       val t = node.putObject("txn"); t.put("app", app); t.put("batch", batch)
     }
@@ -470,26 +473,20 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       val c = node.putObject("constraintAdd"); c.put("name", cn); c.put("expr", ce)
     }
     constraintDrop.foreach(node.put("constraintDrop", _))
-    writeFileEntries(node.putArray("add"),
-      newFiles.filterNot(e => prevNames.contains(e.name)))
+    writeFileEntries(node.putArray("add"), files.filterNot(e => prevNames.contains(e.name)))
     val rm: ArrayNode = node.putArray("remove")
-    prevFiles.map(_.name).filterNot(newNames.contains).foreach(rm.add)
+    prev.files.map(_.name).filterNot(nextNames.contains).foreach(rm.add)
     val da: ArrayNode = node.putArray("dvAdd")
-    newDv.filterNot(prevDv.contains).foreach(da.add)
+    next.dv.filterNot(prev.dv.contains).foreach(da.add)
     val dr: ArrayNode = node.putArray("dvRemove")
-    prevDv.filterNot(newDv.contains).foreach(dr.add)
+    prev.dv.filterNot(next.dv.contains).foreach(dr.add)
     val won = createExclusive(manifestPath(v), mapper.writeValueAsBytes(node))
     if (won) {
       // the committed state IS the fold at v (this same construction backs
       // the checkpoints that serve reads) — seed the snapshot cache so the
       // next resolution skips the re-fold (r13)
-      val committed = Snapshot(v, newFiles, newDv,
-        newSchema.orElse(prev.map(_.schema)).getOrElse(schema),
-        prev.map(_.txns).getOrElse(Map.empty) ++ txn,
-        (prev.map(_.constraints).getOrElse(Map.empty) ++ constraintAdd)
-          -- constraintDrop.toSeq,
-        ts, newHwm, tracked,
-        prev.map(_.features).getOrElse(Set.empty) ++ featureAdd)
+      val committed = next.copy(version = v, files = files, txns = prev.txns ++ txn,
+        tsMs = ts, rowIdHwm = newHwm, rowTracking = tracked)
       snapCache.put(v, committed)
       if (v % checkpointInterval == 0) writeCheckpoint(committed)
     }
@@ -601,6 +598,17 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   private val deltaCache = new LruCache[Long, Delta](256)
   private[merge] def cachedDeltas: Int = deltaCache.size
 
+  /** Version 0, before the first commit: no files, the construction
+    * schema. Every verb derives from a snapshot, this one included. */
+  private val version0 =
+    Snapshot(0L, Seq.empty, Seq.empty, schema, Map.empty, Map.empty, 0L)
+
+  /** The state as of version `v`, version 0 included. */
+  private def stateAt(v: Long): Snapshot = if (v == 0) version0 else snapshotAt(v)
+
+  /** The live state: the newest committed version, or [[version0]]. */
+  private def live: Snapshot = stateAt(currentVersion)
+
   /** Fold the log to the state as of version `v`: newest checkpoint ≤ v,
     * then at most `checkpointInterval` delta replays. Throws (require) when
     * `v` was vacuumed away. */
@@ -619,9 +627,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         case None =>
           require(avail.headOption.contains(1L),
             s"version $v not reconstructible: no checkpoint and the log prefix was vacuumed")
-          (1L to v).foldLeft(
-              Snapshot(0L, Seq.empty, Seq.empty, schema, Map.empty, Map.empty, 0L))(
-            (s, x) => applyDelta(s, readDelta(x)))
+          (1L to v).foldLeft(version0)((s, x) => applyDelta(s, readDelta(x)))
       }
       snapCache.put(v, folded)
       folded
@@ -662,31 +668,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(LogTable.SupportedFeatures.contains(name),
       s"unknown protocol feature '$name' (supported: " +
         s"${LogTable.SupportedFeatures.toSeq.sorted.mkString(", ")})")
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      if (snap.exists(_.features.contains(name))) return // idempotent
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          featureAdd = Some(name))) return
-    }
-    throw new IllegalStateException("feature commit lost the race 5 times")
+    alterMeta(prev => prev.copy(features = prev.features + name)) // idempotent
   }
 
   /** Protocol features the live table requires. */
-  def features: Set[String] = {
-    val v = currentVersion
-    if (v == 0) Set.empty else snapshotAt(v).features
-  }
+  def features: Set[String] = live.features
 
   /** Schema AS OF the live version (the log's metaData fold — equals the
     * construction schema until [[evolve]] commits a wider one). */
-  def currentSchema: StructType = {
-    val v = currentVersion
-    if (v == 0) schema else snapshotAt(v).schema
-  }
+  def currentSchema: StructType = live.schema
 
   // ── data-file writes ────────────────────────────────────────────────────
 
@@ -695,10 +685,10 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * the new entries with their bucket and the per-file stats the write
     * tasks took, each paired with its row count (the entry itself records
     * it only under row tracking). `coalesceTo` (unbucketed only) bounds the
-    * file count — the compaction knob. `clusterBy` (unbucketed only)
+    * file count, as compaction needs. `clusterBy` (unbucketed only)
     * range-partitions and sorts the rewrite on those keys, so each output
-    * file covers a tight key range and the manifest stats become selective
-    * — the clustering knob. */
+    * file covers a tight key range and the manifest stats become
+    * selective. */
   private def writeFiles(df: DataFrame, as: StructType,
                          coalesceTo: Option[Int] = None,
                          clusterBy: Seq[String] = Nil): Seq[(FileEntry, Long)] = {
@@ -889,10 +879,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * Delta row-tracking contract. */
   def readWithRowIds(): DataFrame = {
     require(trackingEnabled, "table was not created with rowTracking = true")
-    val v = currentVersion
-    if (v == 0) emptyDf(StructType(schema.fields :+
-      StructField(LogTable.RowIdCol, LongType)))
-    else { val s = snapshotAt(v); scan(s.files, s.dv, s.schema, withIds = true) }
+    val s = live
+    scan(s.files, s.dv, s.schema, withIds = true)
   }
 
   /** Version `v` with row ids — time travel composes with row tracking
@@ -906,16 +894,12 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   /** Highest allocated row-tracking id (0 before any tracked write) — the
     * logged high-water mark identity columns allocate from. */
-  private[merge] def rowIdHighWaterMark: Long = {
-    val v = currentVersion
-    if (v == 0) 0L else snapshotAt(v).rowIdHwm
-  }
+  private[merge] def rowIdHighWaterMark: Long = live.rowIdHwm
 
   /** Live table (empty frame before the first commit). */
   def read(): DataFrame = {
-    val v = currentVersion
-    if (v == 0) emptyDf
-    else { val s = snapshotAt(v); scan(s.files, s.dv, s.schema) }
+    val s = live
+    scan(s.files, s.dv, s.schema)
   }
 
   /** The table as of version `v` — INCLUDING that version's deletion
@@ -952,33 +936,28 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   def readTimestamp(tsMs: Long): DataFrame =
     readVersion(versionAtTimestamp(tsMs))
 
-  /** Manifest-stats file skipping: read only files whose [lo, hi] for `c`
-    * intersects the bound (files without stats are kept — pruning is a
-    * pure superset optimization); residual filter stays on the scan.
-    * Works on BUCKETED tables — the composition the directory-swap
-    * design's root-manifest could not serve. */
   /** Columns with per-file stats available for pruning: the writer's
     * statsBy, else whatever the live manifest carries (batch readers open
     * a table without knowing the writer's configuration — the stats are IN
     * the log, not in the constructor). */
   def statsColumns: Seq[String] = {
-    val v = currentVersion
-    val live = if (v == 0) schema else snapshotAt(v).schema
+    val m = live
     // manifests key stats by PHYSICAL name; surface them under the LIVE
     // logical names (stats survive a rename; dropped columns vanish)
-    val reverse = live.fields.map(f => physicalOf(f) -> f.name).toMap
-    val discovered =
-      if (v == 0) Nil
-      else snapshotAt(v).files.flatMap(_.stats.keys).distinct.flatMap(reverse.get)
-    (statsBy.filter(c => live.fieldNames.contains(c)) ++ discovered).distinct
+    val reverse = m.schema.fields.map(f => physicalOf(f) -> f.name).toMap
+    val discovered = m.files.flatMap(_.stats.keys).distinct.flatMap(reverse.get)
+    (statsBy.filter(c => m.schema.fieldNames.contains(c)) ++ discovered).distinct
   }
 
+  /** Manifest-stats file skipping: read only files whose [lo, hi] for `c`
+    * intersects the bound (files without stats are kept — pruning is a
+    * pure superset optimization); residual filter stays on the scan.
+    * Works on BUCKETED tables — the composition the directory-swap
+    * design's root-manifest could not serve. */
   def readRange(c: String, lo: Column, hi: Column): DataFrame = {
     require(statsColumns.contains(c),
       s"no file stats for column '$c' (stats present: ${statsColumns.mkString(",")})")
-    val v = currentVersion
-    if (v == 0) return emptyDf.filter(col(c) >= lo && col(c) <= hi)
-    val m = snapshotAt(v)
+    val m = live
     val dt = m.schema(c).dataType
     val pc = physOf(m.schema, c) // stats are keyed by physical name
     // one overlap evaluation for ALL stats-carrying files (Spark's own
@@ -1015,30 +994,35 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   }
 
   /** Number of files the live version references (spec hook). */
-  def liveFileNames(): Seq[String] = {
-    val v = currentVersion
-    if (v == 0) Seq.empty else snapshotAt(v).files.map(_.name).sorted
-  }
+  def liveFileNames(): Seq[String] = live.files.map(_.name).sorted
 
   // ── commits ─────────────────────────────────────────────────────────────
 
-  /** Generic optimistic commit loop: derive the new state from the current
-    * snapshot, CAS the delta in; on a lost race discard the orphan files
-    * and re-derive against the new snapshot. `derive` returning None means
-    * "nothing to commit" (no version is cut). Returns attempts. */
+  /** THE commit loop — the one optimistic-concurrency protocol every write
+    * verb runs. Each attempt takes the live snapshot `prev` (version 0 is
+    * [[version0]]) and asks `derive` for the next state plus the fresh
+    * files it wrote; [[tryCommit]] then CASes the difference `next − prev`
+    * in as version `prev.version + 1`. On a lost race the fresh files are
+    * dropped and `derive` runs again against the newer snapshot, so every
+    * check inside it re-validates. `derive` returning None cuts no version.
+    * With `txn = Some((appId, batchId))`, a batch at or below appId's
+    * committed watermark is already delivered: nothing is derived and no
+    * version is cut, and a race between redundant deliveries resolves
+    * through the CAS. Returns the attempts made and whether a version was
+    * cut. */
   private def commitLoop(maxAttempts: Int, dataChange: Boolean = true,
                          txn: Option[(String, Long)] = None)
-                        (derive: Option[Snapshot] => Option[(Seq[FileEntry], Seq[String], Seq[FileEntry])])
-      : Int = {
+                        (derive: Snapshot => Option[(Snapshot, Seq[FileEntry])])
+      : (Int, Boolean) = {
     var attempts = 0
     while (attempts < maxAttempts) {
       attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      derive(snap) match {
-        case None => return attempts
-        case Some((files, dv, fresh)) =>
-          if (tryCommit(snap, files, dv, dataChange, txn = txn)) return attempts
+      val prev = live
+      val delivered = txn.exists { case (app, b) => prev.txns.getOrElse(app, -1L) >= b }
+      (if (delivered) None else derive(prev)) match {
+        case None => return (attempts, false)
+        case Some((next, fresh)) =>
+          if (tryCommit(prev, next, dataChange, txn)) return (attempts, true)
           dropFiles(fresh)
       }
     }
@@ -1046,19 +1030,33 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       s"commit lost the race $maxAttempts times — writer storm; raise maxAttempts")
   }
 
+  /** A metadata commit (`dataChange = false`, no file written): `derive`
+    * maps the live snapshot to the next one and runs again after a lost
+    * race, so its checks re-validate. A next state equal to the snapshot
+    * cuts no version. */
+  private def alterMeta(derive: Snapshot => Snapshot): Unit =
+    commitLoop(5, dataChange = false) { prev =>
+      Some(derive(prev)).filter(_ != prev).map(_ -> Seq.empty[FileEntry])
+    }
+
+  /** `df` written as fresh files under `prev`'s schema, with `prev`'s
+    * defaults, generated columns and CHECK constraints enforced in the
+    * write pass. */
+  private def writeChecked(df: DataFrame, prev: Snapshot): Seq[FileEntry] =
+    writeFiles(withChecks(df, prev), prev.schema).map(_._1)
+
   /** Replace the table content (cuts a new version). */
   def overwrite(df: DataFrame): Unit =
-    commitLoop(5) { snap =>
-      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
-      Some((fresh, Seq.empty, fresh))
+    commitLoop(5) { prev =>
+      val fresh = writeChecked(df, prev)
+      Some((prev.copy(files = fresh, dv = Seq.empty), fresh))
     }
 
   /** Append-only write: prior files + the new ones, DVs carried forward. */
   def append(df: DataFrame): Unit =
-    commitLoop(5) { snap =>
-      val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
-      Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh,
-        snap.map(_.dv).getOrElse(Seq.empty), fresh))
+    commitLoop(5) { prev =>
+      val fresh = writeChecked(df, prev)
+      Some((prev.copy(files = prev.files ++ fresh), fresh))
     }
 
   /** PREDICATE-SCOPED ATOMIC OVERWRITE (Delta's `replaceWhere`): in ONE
@@ -1077,32 +1075,30 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * rewritten remainder + batch re-id above the watermark (the documented
     * full-rewrite rule); kept files keep their ids. */
   def replaceWhere(cond: Column, df: DataFrame): Unit =
-    commitLoop(5) { snap =>
-      val validated = withChecks(df, snap).filter(coalesce(
+    commitLoop(5) { prev =>
+      val validated = withChecks(df, prev).filter(coalesce(
         assert_true(cond,
           lit("replaceWhere: batch row does not satisfy the predicate")),
         lit(true)))
-      snap match {
-        case None =>
-          val fresh = writeFiles(validated, schema).map(_._1)
-          Some((fresh, Seq.empty, fresh))
-        case Some(m) =>
+      val (keep, rows) =
+        if (prev.files.isEmpty) (Seq.empty[FileEntry], validated)
+        else {
           // one predicate scan to find the touched files (live rows only —
           // a file whose sole matches are DV-deleted is kept verbatim)
-          val matched = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
+          val matched = scan(prev.files, prev.dv, prev.schema, keepPos = true).filter(cond)
             .select(col(DvName)).distinct()
             .collect().map(_.getString(0)).toSet
-          val (rewrite, keep) = m.files.partition(e => matched(e.name))
+          val (rewrite, keep) = prev.files.partition(e => matched(e.name))
           // keep rows where the predicate is NOT SATISFIED — `!cond` alone
           // drops NULL-valued rows (neither matched nor kept, silent data
           // loss); coalesce to false mirrors SQL DELETE / deleteWhere
-          val remainder = scan(rewrite, m.dv, m.schema)
-            .filter(!coalesce(cond, lit(false)))
-          val fresh = writeFiles(remainder.unionByName(validated), m.schema).map(_._1)
-          // stale DV rows for removed files are inert (fresh files get new
-          // uuid names) and purge on the next compact — deleteWhere's rule
-          Some((keep ++ fresh, m.dv, fresh))
-      }
+          (keep, scan(rewrite, prev.dv, prev.schema)
+            .filter(!coalesce(cond, lit(false))).unionByName(validated))
+        }
+      val fresh = writeFiles(rows, prev.schema).map(_._1)
+      // stale DV rows for removed files are inert (fresh files get new uuid
+      // names) and purge on the next compact — deleteWhere's rule
+      Some((prev.copy(files = keep ++ fresh), fresh))
     }
 
   /** UPDATE … SET … WHERE — Delta's UPDATE, file-scoped like
@@ -1120,31 +1116,31 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(!bucketBy.exists(_._1.exists(set.contains)),
       "cannot UPDATE a bucket key (rows never migrate buckets)")
     var updated = 0L
-    commitLoop(5) { snap =>
-      snap match {
-        case None => updated = 0L; None // empty table: nothing to commit
-        case Some(m) =>
-          set.keys.foreach(k => require(m.schema.fieldNames.contains(k),
-            s"updateWhere: unknown column '$k'"))
-          // one scan: touched files AND the matched-row count together
-          val perFile = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
-            .groupBy(col(DvName)).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1))
-          updated = perFile.map(_._2).sum
-          if (perFile.isEmpty) None
-          else {
-            val matched = perFile.map(_._1).toSet
-            val (rewrite, keep) = m.files.partition(e => matched(e.name))
-            val c = coalesce(cond, lit(false)) // NULL predicate = not matched
-            val upd = scan(rewrite, m.dv, m.schema)
-              .select(m.schema.fields.map { f =>
-                set.get(f.name)
-                  .map(v => when(c, v.cast(f.dataType)).otherwise(col(f.name)))
-                  .getOrElse(col(f.name)).as(f.name)
-              }.toIndexedSeq: _*)
-            val fresh = writeFiles(withChecks(upd, snap), m.schema).map(_._1)
-            Some((keep ++ fresh, m.dv, fresh))
-          }
+    commitLoop(5) { prev =>
+      updated = 0L
+      if (prev.files.isEmpty) None // empty table: nothing to commit
+      else {
+        set.keys.foreach(k => require(prev.schema.fieldNames.contains(k),
+          s"updateWhere: unknown column '$k'"))
+        // one scan: touched files AND the matched-row count together
+        val perFile = scan(prev.files, prev.dv, prev.schema, keepPos = true).filter(cond)
+          .groupBy(col(DvName)).agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1))
+        updated = perFile.map(_._2).sum
+        if (perFile.isEmpty) None
+        else {
+          val matched = perFile.map(_._1).toSet
+          val (rewrite, keep) = prev.files.partition(e => matched(e.name))
+          val c = coalesce(cond, lit(false)) // NULL predicate = not matched
+          val upd = scan(rewrite, prev.dv, prev.schema)
+            .select(prev.schema.fields.map { f =>
+              set.get(f.name)
+                .map(v => when(c, v.cast(f.dataType)).otherwise(col(f.name)))
+                .getOrElse(col(f.name)).as(f.name)
+            }.toIndexedSeq: _*)
+          val fresh = writeChecked(upd, prev)
+          Some((prev.copy(files = keep ++ fresh), fresh))
+        }
       }
     }
     updated
@@ -1152,10 +1148,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   /** Newest batchId `appId` has committed, -1 = none (Delta's `txn`
     * watermark read — the idempotent-sink handshake). */
-  def lastTxn(appId: String): Long = {
-    val v = currentVersion
-    if (v == 0) -1L else snapshotAt(v).txns.getOrElse(appId, -1L)
-  }
+  def lastTxn(appId: String): Long = live.txns.getOrElse(appId, -1L)
 
   /** IDEMPOTENT APPEND (Delta's `txn` action — the exactly-once streaming
     * SINK protocol): commit `df` tagged (appId, batchId); a batchId at or
@@ -1167,20 +1160,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * where an idempotent MERGE sink pays O(table) per batch for the same
     * guarantee. */
   def appendOnce(df: DataFrame, appId: String, batchId: Long,
-                 maxAttempts: Int = 5): Boolean = {
-    var committed = false
-    commitLoop(maxAttempts, txn = Some((appId, batchId))) { snap =>
-      if (snap.exists(_.txns.getOrElse(appId, -1L) >= batchId)) {
-        committed = false; None // already delivered: no version cut
-      } else {
-        val fresh = writeFiles(withChecks(df, snap), snap.map(_.schema).getOrElse(schema)).map(_._1)
-        committed = true
-        Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh,
-          snap.map(_.dv).getOrElse(Seq.empty), fresh))
-      }
-    }
-    committed
-  }
+                 maxAttempts: Int = 5): Boolean =
+    commitLoop(maxAttempts, txn = Some((appId, batchId))) { prev =>
+      val fresh = writeChecked(df, prev)
+      Some((prev.copy(files = prev.files ++ fresh), fresh))
+    }._2
 
   /** MERGE: [[occMerge]] without a transaction id — unbucketed = full
     * rewrite of `f(live, batch)`; bucketed = the partition-scoped form. */
@@ -1199,17 +1183,17 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * itself into that task). */
   def deleteWhere(cond: Column): Long = {
     var deleted = 0L
-    commitLoop(5) { snap =>
-      snap match {
-        case None => deleted = 0L; None // empty table: nothing to commit
-        case Some(m) =>
-          val pos = scan(m.files, m.dv, m.schema, keepPos = true).filter(cond)
-            .select(col(DvName), col(DvPos))
-          val sidecar = LogFiles.write(pos.repartition(1), filesDir.toString, "dv-",
-            BucketCol, Nil).map(w => FileEntry(w.name, -1, Map.empty) -> w.rows)
-          deleted = sidecar.map(_._2).sum
-          if (deleted == 0) { dropFiles(sidecar.map(_._1)); None } // no matches: no version cut
-          else Some((m.files, m.dv ++ sidecar.map(_._1.name), sidecar.map(_._1)))
+    commitLoop(5) { prev =>
+      deleted = 0L
+      if (prev.files.isEmpty) None // empty table: nothing to commit
+      else {
+        val pos = scan(prev.files, prev.dv, prev.schema, keepPos = true).filter(cond)
+          .select(col(DvName), col(DvPos))
+        val sidecar = LogFiles.write(pos.repartition(1), filesDir.toString, "dv-",
+          BucketCol, Nil).map(w => FileEntry(w.name, -1, Map.empty) -> w.rows)
+        deleted = sidecar.map(_._2).sum
+        if (deleted == 0) { dropFiles(sidecar.map(_._1)); None } // no matches: no version cut
+        else Some((prev.copy(dv = prev.dv ++ sidecar.map(_._1.name)), sidecar.map(_._1)))
       }
     }
     deleted
@@ -1231,17 +1215,16 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * until [[compact]]. Returns the rows appended. */
   def insertMissing(batch: DataFrame, keys: Seq[String]): Long = {
     var added = 0L
-    commitLoop(5) { snap =>
-      val survivors = snap.fold(batch) { m =>
-        Merge.antiByKey(batch, scan(m.files, m.dv, m.schema), keys)
-      }
-      val (fresh, empty) = writeFiles(withChecks(survivors, snap),
-        snap.map(_.schema).getOrElse(schema)).partition(_._2 > 0)
+    commitLoop(5) { prev =>
+      val survivors =
+        if (prev.files.isEmpty) batch
+        else Merge.antiByKey(batch, scan(prev.files, prev.dv, prev.schema), keys)
+      val (fresh, empty) = writeFiles(withChecks(survivors, prev), prev.schema)
+        .partition(_._2 > 0)
       dropFiles(empty.map(_._1))
       added = fresh.map(_._2).sum
       if (fresh.isEmpty) None // every key already present: no version cut
-      else Some((snap.map(_.files).getOrElse(Seq.empty) ++ fresh.map(_._1),
-        snap.map(_.dv).getOrElse(Seq.empty), fresh.map(_._1)))
+      else Some((prev.copy(files = prev.files ++ fresh.map(_._1)), fresh.map(_._1)))
     }
     added
   }
@@ -1283,16 +1266,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     val persistHere = bucketBy.isDefined && !batch.isLocal &&
       batch.storageLevel == StorageLevel.NONE
     if (persistHere) batch.persist()
-    try commitLoop(maxAttempts, txn = txn) { snap =>
-      if (txn.exists { case (app, b) =>
-          snap.exists(_.txns.getOrElse(app, -1L) >= b) })
-        None // already delivered: no version cut
-      else bucketBy match {
+    try commitLoop(maxAttempts, txn = txn) { prev =>
+      bucketBy match {
         case None =>
-          val cur = snap.map(m => scan(m.files, m.dv, m.schema)).getOrElse(emptyDf)
-          val fresh = writeFiles(withChecks(f(cur, batch), snap),
-            snap.map(_.schema).getOrElse(schema)).map(_._1)
-          Some((fresh, Seq.empty, fresh))
+          val fresh = writeChecked(f(scan(prev.files, prev.dv, prev.schema), batch), prev)
+          Some((prev.copy(files = fresh, dv = Seq.empty), fresh))
         case Some(_) =>
           // the probe and the rewrite must read one materialization of a
           // non-local batch (persisted above). Each task reports the
@@ -1307,23 +1285,40 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           }
           if (touched.isEmpty) None // empty batch: nothing to rewrite
           else {
-            val (hit, kept) = snap.map(_.files).getOrElse(Seq.empty)
-              .partition(e => touched.contains(e.bucket))
-            val dv = snap.map(_.dv).getOrElse(Seq.empty)
-            val as = snap.map(_.schema).getOrElse(schema)
-            val cur = if (hit.isEmpty) emptyDf(as) else scan(hit, dv, as)
-            val fresh = writeFiles(withChecks(f(cur, batch), snap), as).map(_._1)
+            val (hit, kept) = prev.files.partition(e => touched.contains(e.bucket))
+            val fresh = writeChecked(f(scan(hit, prev.dv, prev.schema), batch), prev)
             val stray = fresh.map(_.bucket).toSet -- touched
             if (stray.nonEmpty) dropFiles(fresh)
             require(stray.isEmpty,
               s"merge emitted rows outside the batch's buckets " +
                 s"(${stray.toSeq.sorted.mkString(",")}) — the merge function " +
                 "must be keyed on the table's bucket keys")
-            Some((kept ++ fresh, dv, fresh))
+            Some((prev.copy(files = kept ++ fresh), fresh))
           }
       }
-    }
+    }._1
     finally if (persistHere) batch.unpersist()
+  }
+
+  /** The file count a rewrite of `files` targets: ceil(bytes /
+    * targetFileBytes), at least 1. */
+  private def targetFileCount(files: Seq[FileEntry], targetFileBytes: Long): Int = {
+    val bytes = files.map(e => Files.size(filesDir.resolve(e.name))).sum
+    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+  }
+
+  /** The OPTIMIZE rewrite shared by [[compact]] and [[compactIncremental]]:
+    * `files`' live rows (`m`'s DVs applied) written afresh, marked
+    * `clustered` when `clusterBy` is given. Under row tracking the rewrite
+    * MATERIALIZES each row's id into the new files (Delta's materialized
+    * row-id column), so ids survive the re-layout — the rewritten entries
+    * carry no base/rows and allocate nothing. */
+  private def rewriteFiles(m: Snapshot, files: Seq[FileEntry], coalesceTo: Option[Int],
+                           clusterBy: Seq[String]): Seq[FileEntry] = {
+    val src = scan(files, m.dv, m.schema, withIds = trackingEnabled)
+      .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
+    writeFiles(src, m.schema, coalesceTo, clusterBy)
+      .map { case (e, _) => if (clusterBy.nonEmpty) e.copy(clustered = true) else e }
   }
 
   /** OPTIMIZE: rewrite the live content into few large files — bucketed:
@@ -1347,33 +1342,20 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(clusterBy.isEmpty || bucketBy.isEmpty,
       "clusterBy applies to unbucketed tables (bucketed layout is fixed by the bucket keys)")
     var removed = 0
-    commitLoop(5, dataChange = false) { snap =>
-      snap match {
-        case None => removed = 0; None
-        case Some(m) =>
-          val bytes = m.files.map(e =>
-            Files.size(filesDir.resolve(e.name))).sum
-          val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          val worthIt = m.files.nonEmpty && (m.dv.nonEmpty || clusterBy.nonEmpty ||
-            (bucketBy match {
-              case Some((_, n)) => m.files.size > n
-              case None => m.files.size > want
-            }))
-          if (!worthIt) { removed = 0; None }
-          else {
-            // row tracking: the rewrite MATERIALIZES each row's id into the
-            // new files (Delta's materialized row-id column), so ids survive
-            // the re-layout — the rewritten entries carry no base/rows and
-            // allocate nothing
-            val src = scan(m.files, m.dv, m.schema, withIds = trackingEnabled)
-              .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
-            val fresh = writeFiles(src, m.schema,
-              coalesceTo = if (bucketBy.isEmpty) Some(want) else None,
-              clusterBy = clusterBy)
-              .map { case (e, _) => if (clusterBy.nonEmpty) e.copy(clustered = true) else e }
-            removed = m.files.size
-            Some((fresh, Seq.empty, fresh))
-          }
+    commitLoop(5, dataChange = false) { prev =>
+      removed = 0
+      val want = targetFileCount(prev.files, targetFileBytes)
+      val worthIt = prev.files.nonEmpty && (prev.dv.nonEmpty || clusterBy.nonEmpty ||
+        (bucketBy match {
+          case Some((_, n)) => prev.files.size > n
+          case None => prev.files.size > want
+        }))
+      if (!worthIt) None
+      else {
+        val fresh = rewriteFiles(prev, prev.files,
+          if (bucketBy.isEmpty) Some(want) else None, clusterBy)
+        removed = prev.files.size
+        Some((prev.copy(files = fresh, dv = Seq.empty), fresh))
       }
     }
     removed
@@ -1391,7 +1373,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * on the next full compact). Row-tracked ids materialize into the
     * rewrite as in [[compact]]. TWO keys cluster on the Morton interleave
     * of their equi-depth bucket ids (multi-column liquid clustering —
-    * stats prune on either key; see writeFilesInto). Returns the number
+    * stats prune on either key; see [[writeFiles]]). Returns the number
     * of files rewritten. */
   def compactIncremental(clusterBy: Seq[String],
                          targetFileBytes: Long = 128L << 20): Int = {
@@ -1399,23 +1381,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(bucketBy.isEmpty,
       "clusterBy applies to unbucketed tables (bucketed layout is fixed by the bucket keys)")
     var rewritten = 0
-    commitLoop(5, dataChange = false) { snap =>
-      snap match {
-        case None => rewritten = 0; None
-        case Some(m) =>
-          val (keep, todo) = m.files.partition(_.clustered)
-          if (todo.isEmpty) { rewritten = 0; None }
-          else {
-            val bytes = todo.map(e => Files.size(filesDir.resolve(e.name))).sum
-            val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-            val src = scan(todo, m.dv, m.schema, withIds = trackingEnabled)
-              .withColumnRenamed(LogTable.RowIdCol, LogTable.MatRowIdCol)
-            val fresh = writeFiles(src, m.schema, coalesceTo = Some(want),
-              clusterBy = clusterBy).map(_._1.copy(clustered = true))
-            rewritten = todo.size
-            // kept files' DV rows must survive: pass the sidecars through
-            Some((keep ++ fresh, m.dv, fresh))
-          }
+    commitLoop(5, dataChange = false) { prev =>
+      val (keep, todo) = prev.files.partition(_.clustered)
+      rewritten = todo.size
+      if (todo.isEmpty) None
+      else {
+        val fresh = rewriteFiles(prev, todo,
+          Some(targetFileCount(todo, targetFileBytes)), clusterBy)
+        // kept files' DV rows must survive: the sidecars pass through
+        Some((prev.copy(files = keep ++ fresh), fresh))
       }
     }
     rewritten
@@ -1508,7 +1482,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     import spark.implicits._
     require(!withRowIds || trackingEnabled,
       "withRowIds requires a rowTracking = true table")
-    val as = if (toVersion == 0) schema else snapshotAt(toVersion).schema
+    val as = stateAt(toVersion).schema
     val plumb = Seq(DvName, DvPos)
     def out(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.drop(plumb: _*)
@@ -1526,14 +1500,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(span.forall(avail.contains),
       s"versions ${span.filterNot(avail.contains).mkString(",")} were vacuumed; " +
         "cannot serve changes — restart the consumer from a full snapshot")
-    var prev: Option[Snapshot] =
-      if (fromVersion == 0) None else Some(snapshotAt(fromVersion))
+    var prev = stateAt(fromVersion)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     span.foreach { v =>
       val d = readDelta(v)
       if (d.dataChange) {
-        val prevFiles = prev.map(_.files).getOrElse(Seq.empty)
-        val prevDv = prev.map(_.dv).getOrElse(Seq.empty)
         if (d.add.nonEmpty)
           parts += out(scan(d.add, Seq.empty, as, withIds = withRowIds), "insert", v)
         if (d.dvAdd.nonEmpty) {
@@ -1541,7 +1512,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           val dvDf = readDv(d.dvAdd)
           val touched = dvDf.select(DvName).distinct()
             .as[String].collect().toSet
-          val scanned = scan(prevFiles.filter(e => touched(e.name)), Seq.empty,
+          val scanned = scan(prev.files.filter(e => touched(e.name)), Seq.empty,
             as, keepPos = true, withIds = withRowIds)
           parts += out(scanned.join(broadcast(dvDf), plumb, "left_semi"),
             "delete", v)
@@ -1549,13 +1520,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
         if (d.remove.nonEmpty) {
           // rewrite: removed files' LIVE rows (pre-commit DV applied)
           val rm = d.remove.toSet
-          parts += out(scan(prevFiles.filter(e => rm(e.name)), prevDv, as,
+          parts += out(scan(prev.files.filter(e => rm(e.name)), prev.dv, as,
             withIds = withRowIds), "delete", v)
         }
       }
-      prev = Some(applyDelta(prev.getOrElse(
-        Snapshot(0L, Seq.empty, Seq.empty, schema, Map.empty, Map.empty, 0L)),
-        d))
+      prev = applyDelta(prev, d)
     }
     if (parts.isEmpty) empty else parts.reduce(_ unionByName _)
   }
@@ -1564,26 +1533,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
 
   /** Active CHECK constraints (name → SQL condition) as of the live
     * version. */
-  def constraints: Map[String, String] = {
-    val v = currentVersion
-    if (v == 0) Map.empty else snapshotAt(v).constraints
-  }
+  def constraints: Map[String, String] = live.constraints
 
-  /** Enforce `cs` on every row of `df` IN the write pass itself: each
-    * constraint becomes a filter whose condition is
-    * `coalesce(assert_true(cond), true)` — always true for conforming rows,
-    * throws (failing the write before any commit) on the first violating
-    * row. Single pass, no pre-count scan; NULL conditions count as
-    * violations (a constraint must hold, not merely not-fail — Delta's
-    * CHECK semantics). */
   /** GENERATED COLUMNS in the write pass (Delta `GENERATED ALWAYS AS`):
     * for each schema field carrying a generation expression, a frame that
     * OMITS the column gets it computed; a frame that SUPPLIES it gets every
     * row validated (null-safe equality) via the same assert_true-in-filter
     * shape as CHECK constraints — one pass, throws before any commit. */
-  private def withGenerated(df: DataFrame, snap: Option[Snapshot]): DataFrame = {
-    val s = snap.map(_.schema).getOrElse(schema)
-    s.fields.filter(_.metadata.contains(LogTable.GenKey)).foldLeft(df) { (d, f) =>
+  private def withGenerated(df: DataFrame, snap: Snapshot): DataFrame =
+    snap.schema.fields.filter(_.metadata.contains(LogTable.GenKey)).foldLeft(df) { (d, f) =>
       val gen = expr(f.metadata.getString(LogTable.GenKey)).cast(f.dataType)
       if (!d.columns.contains(f.name)) d.withColumn(f.name, gen)
       else d.filter(coalesce(
@@ -1591,36 +1549,30 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           lit(s"GENERATED column '${f.name}' does not match its expression")),
         lit(true)))
     }
-  }
 
   /** COLUMN DEFAULTS in the write pass (Delta `allowColumnDefaults`): a
     * frame that OMITS a defaulted column gets the default computed; a
     * frame that SUPPLIES it — explicit NULL included — wins verbatim (no
     * validation, unlike generated columns). Runs BEFORE generated columns
     * and CHECK constraints so both may reference defaulted columns. */
-  private def withDefaults(df: DataFrame, snap: Option[Snapshot]): DataFrame = {
-    val s = snap.map(_.schema).getOrElse(schema)
-    s.fields.filter(_.metadata.contains(LogTable.DefaultKey)).foldLeft(df) {
+  private def withDefaults(df: DataFrame, snap: Snapshot): DataFrame =
+    snap.schema.fields.filter(_.metadata.contains(LogTable.DefaultKey)).foldLeft(df) {
       (d, f) =>
         if (d.columns.contains(f.name)) d
         else d.withColumn(f.name,
           expr(f.metadata.getString(LogTable.DefaultKey)).cast(f.dataType))
     }
-  }
 
   /** `ALTER COLUMN ... SET DEFAULT` / `DROP DEFAULT` — a metadata commit
     * (`dataChange = false`): the default travels IN the versioned schema,
     * so each era's writes use the default that era declared and history
-    * reads back unchanged. */
-  def setDefault(name: String, exprSql: Option[String]): Unit = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      val cur = snap.map(_.schema).getOrElse(schema)
+    * reads back unchanged. Setting the default a column already has cuts
+    * no version. */
+  def setDefault(name: String, exprSql: Option[String]): Unit =
+    alterMeta { prev =>
+      val cur = prev.schema
       require(cur.fieldNames.contains(name), s"no such column '$name'")
-      val updated = StructType(cur.fields.map { f =>
+      prev.copy(schema = StructType(cur.fields.map { f =>
         if (f.name != name) f
         else {
           require(!f.metadata.contains(LogTable.GenKey),
@@ -1630,65 +1582,48 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           exprSql.foreach(e => mb.putString(LogTable.DefaultKey, e))
           f.copy(metadata = mb.build())
         }
-      })
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          newSchema = Some(updated))) return
+      }))
     }
-    throw new IllegalStateException("default commit lost the race 5 times")
-  }
 
-  private def withChecks(df: DataFrame, snap: Option[Snapshot]): DataFrame = {
-    val cs = snap.map(_.constraints).getOrElse(Map.empty)
-    cs.foldLeft(withGenerated(withDefaults(df, snap), snap)) { case (d, (cn, ce)) =>
+  /** Enforce `snap`'s CHECK constraints on every row of `df` IN the write
+    * pass itself, after its defaults and generated columns: each
+    * constraint becomes a filter whose condition is
+    * `coalesce(assert_true(cond), true)` — always true for conforming rows,
+    * throws (failing the write before any commit) on the first violating
+    * row. Single pass, no pre-count scan; NULL conditions count as
+    * violations (a constraint must hold, not merely not-fail — Delta's
+    * CHECK semantics). */
+  private def withChecks(df: DataFrame, snap: Snapshot): DataFrame =
+    snap.constraints.foldLeft(withGenerated(withDefaults(df, snap), snap)) { case (d, (cn, ce)) =>
       d.filter(coalesce(
         assert_true(coalesce(expr(ce), lit(false)),
           lit(s"CHECK constraint '$cn' ($ce) violated")),
         lit(true)))
     }
-  }
 
   /** ADD CONSTRAINT as a metadata commit (`dataChange = false`): validates
     * the EXISTING content first (Delta's ALTER TABLE ADD CONSTRAINT scans
     * the table — a constraint that does not hold now is rejected, not
     * recorded), then folds (name → cond) into the log. Subsequent writes
     * through ANY verb enforce it in their write pass. */
-  def addConstraint(name: String, cond: String): Unit = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      require(!snap.exists(_.constraints.contains(name)),
-        s"constraint '$name' already exists")
-      snap.foreach { m =>
-        val bad = scan(m.files, m.dv, m.schema)
+  def addConstraint(name: String, cond: String): Unit =
+    alterMeta { prev =>
+      require(!prev.constraints.contains(name), s"constraint '$name' already exists")
+      if (prev.files.nonEmpty) {
+        val bad = scan(prev.files, prev.dv, prev.schema)
           .filter(not(coalesce(expr(cond), lit(false)))).count()
         require(bad == 0,
           s"cannot add CHECK constraint '$name' ($cond): $bad existing row(s) violate it")
       }
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          constraintAdd = Some((name, cond)))) return
+      prev.copy(constraints = prev.constraints + (name -> cond))
     }
-    throw new IllegalStateException("constraint commit lost the race 5 times")
-  }
 
   /** DROP CONSTRAINT (metadata commit; no-op error if absent). */
-  def dropConstraint(name: String): Unit = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      require(snap.exists(_.constraints.contains(name)),
-        s"no such constraint '$name'")
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          constraintDrop = Some(name))) return
+  def dropConstraint(name: String): Unit =
+    alterMeta { prev =>
+      require(prev.constraints.contains(name), s"no such constraint '$name'")
+      prev.copy(constraints = prev.constraints - name)
     }
-    throw new IllegalStateException("constraint commit lost the race 5 times")
-  }
 
   /** SCHEMA EVOLUTION as a LOG ACTION (Delta's metaData commit): widen the
     * schema additive-only — existing columns keep name and type, new ones
@@ -1700,13 +1635,9 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * `dataChange = false`: no rows changed, so change-feed consumers skip
     * it. No data file is touched or rewritten. No-op (no version cut) when
     * the schema is already `wider`. */
-  def evolve(wider: StructType): Unit = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      val cur = snap.map(_.schema).getOrElse(schema)
+  def evolve(wider: StructType): Unit =
+    alterMeta { prev =>
+      val cur = prev.schema
       cur.fields.foreach { f =>
         val nf = wider.fields.find(_.name == f.name).getOrElse(
           throw new IllegalArgumentException(
@@ -1716,9 +1647,6 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
           s"schema evolution cannot change types: '${f.name}' ${f.dataType.simpleString} " +
             s"-> ${nf.dataType.simpleString} (type changes need a rewrite)")
       }
-      if (cur.fields.map(f => (f.name, f.dataType)).toSeq ==
-          wider.fields.map(f => (f.name, f.dataType)).toSeq)
-        return // already there: no version cut
       wider.fields.foreach(nf => require(
         cur.fieldNames.contains(nf.name) || !nf.metadata.contains(LogTable.GenKey),
         s"generated column '${nf.name}' must be declared at table creation " +
@@ -1728,17 +1656,11 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       // evolve); added fields get FRESH physical names once the mapping is
       // active, so a re-added logical name can never read a dropped
       // column's bytes (Delta's columnMapping id discipline)
-      val merged = StructType(wider.fields.map { nf =>
+      prev.copy(schema = StructType(wider.fields.map { nf =>
         cur.fields.find(_.name == nf.name).getOrElse(
-          if (mappingActive(cur)) withPhysical(nf, s"${nf.name}#${v + 1}") else nf)
-      })
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          newSchema = Some(merged))) return
+          if (mappingActive(cur)) withPhysical(nf, s"${nf.name}#${prev.version + 1}") else nf)
+      }))
     }
-    throw new IllegalStateException(
-      "schema-evolution commit lost the race 5 times — writer storm")
-  }
 
   /** TYPE WIDENING as a METADATA COMMIT (Delta's `typeWidening` feature):
     * change a column's type along a LOSSLESS widening chain without
@@ -1778,46 +1700,38 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     }
     require(!bucketBy.exists(_._1.contains(name)),
       s"cannot widen bucket key '$name' (the bucket hash is type-sensitive)")
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      val cur = snap.map(_.schema).getOrElse(schema)
+    alterMeta { prev =>
+      val cur = prev.schema
       require(cur.fieldNames.contains(name), s"no such column '$name'")
       val f = cur(name)
-      if (f.dataType == to) return // already there: no version cut
-      require(widens(f.dataType, to),
-        s"'$name' ${f.dataType.simpleString} -> ${to.simpleString} is not a " +
-          "lossless widening (lossy/narrowing changes need a rewrite)")
-      require(!f.metadata.contains(LogTable.GenKey),
-        s"cannot widen generated column '$name' (its type is the declared " +
-          "contract of the generation expression)")
-      val refs = referencingConstraints(snap, name)
-      require(refs.isEmpty,
-        s"cannot widen '$name': referenced by ${refs.mkString(", ")}")
-      val widened = StructType(cur.fields.map(g =>
-        if (g.name == name) g.copy(dataType = to) else g))
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          newSchema = Some(widened))) return
+      if (f.dataType == to) prev // already there: no version cut
+      else {
+        require(widens(f.dataType, to),
+          s"'$name' ${f.dataType.simpleString} -> ${to.simpleString} is not a " +
+            "lossless widening (lossy/narrowing changes need a rewrite)")
+        require(!f.metadata.contains(LogTable.GenKey),
+          s"cannot widen generated column '$name' (its type is the declared " +
+            "contract of the generation expression)")
+        val refs = referencingConstraints(prev, name)
+        require(refs.isEmpty,
+          s"cannot widen '$name': referenced by ${refs.mkString(", ")}")
+        prev.copy(schema = StructType(cur.fields.map(g =>
+          if (g.name == name) g.copy(dataType = to) else g)))
+      }
     }
-    throw new IllegalStateException(
-      "type-widening commit lost the race 5 times — writer storm")
   }
 
   /** Constraint names whose stored SQL references column `c` (conservative
     * word-boundary match — renames/drops of referenced columns are rejected
     * rather than silently breaking the stored expr). */
-  private def referencingConstraints(snap: Option[Snapshot], c: String): Seq[String] = {
+  private def referencingConstraints(snap: Snapshot, c: String): Seq[String] = {
     val word = ("\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-    val fromChecks = snap.map(_.constraints).getOrElse(Map.empty).collect {
+    val fromChecks = snap.constraints.collect {
       case (n, e) if word.findFirstIn(e).isDefined => n
     }.toSeq
     // generation expressions reference columns by logical name too — a
     // rename/drop of a referenced column would silently break them
-    val s = snap.map(_.schema).getOrElse(schema)
-    val fromGenerated = s.fields.collect {
+    val fromGenerated = snap.schema.fields.collect {
       case f if f.metadata.contains(LogTable.GenKey) && f.name != c &&
         word.findFirstIn(f.metadata.getString(LogTable.GenKey)).isDefined =>
         s"generated:${f.name}"
@@ -1839,24 +1753,16 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     require(oldName != newName, "rename to the same name is a no-op")
     require(!bucketBy.exists(_._1.contains(oldName)),
       s"cannot rename bucket key '$oldName' (bucketBy is a logical-name contract)")
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      val cur = snap.map(_.schema).getOrElse(schema)
+    alterMeta { prev =>
+      val cur = prev.schema
       require(cur.fieldNames.contains(oldName), s"no such column '$oldName'")
       require(!cur.fieldNames.contains(newName), s"column '$newName' already exists")
-      val refs = referencingConstraints(snap, oldName)
+      val refs = referencingConstraints(prev, oldName)
       require(refs.isEmpty, s"cannot rename '$oldName': CHECK constraint(s) " +
         s"${refs.mkString(", ")} reference it — drop them first")
-      val renamed = StructType(activateMapping(cur).fields.map(f =>
-        if (f.name == oldName) f.copy(name = newName) else f))
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          newSchema = Some(renamed))) return
+      prev.copy(schema = StructType(activateMapping(cur).fields.map(f =>
+        if (f.name == oldName) f.copy(name = newName) else f)))
     }
-    throw new IllegalStateException("rename commit lost the race 5 times")
   }
 
   /** DROP COLUMN as a METADATA COMMIT (Delta column-mapping drop): the
@@ -1868,23 +1774,15 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * (schema-in-the-log). Same rejections as rename. */
   def dropColumn(name: String): Unit = {
     require(!bucketBy.exists(_._1.contains(name)), s"cannot drop bucket key '$name'")
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val v = currentVersion
-      val snap = if (v == 0) None else Some(snapshotAt(v))
-      val cur = snap.map(_.schema).getOrElse(schema)
+    alterMeta { prev =>
+      val cur = prev.schema
       require(cur.fieldNames.contains(name), s"no such column '$name'")
       require(cur.fields.length > 1, "cannot drop the only column")
-      val refs = referencingConstraints(snap, name)
+      val refs = referencingConstraints(prev, name)
       require(refs.isEmpty, s"cannot drop '$name': CHECK constraint(s) " +
         s"${refs.mkString(", ")} reference it — drop them first")
-      val dropped = StructType(activateMapping(cur).fields.filterNot(_.name == name))
-      if (tryCommit(snap, snap.map(_.files).getOrElse(Seq.empty),
-          snap.map(_.dv).getOrElse(Seq.empty), dataChange = false,
-          newSchema = Some(dropped))) return
+      prev.copy(schema = StructType(activateMapping(cur).fields.filterNot(_.name == name)))
     }
-    throw new IllegalStateException("drop-column commit lost the race 5 times")
   }
 
   /** Roll FORWARD to the content of version `v` (history preserved).
@@ -1909,9 +1807,8 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * The clone starts a fresh history: version 1 is the clone point
     * (Delta clones don't inherit source history either). */
   def cloneTo(dest: String): LogTable = {
-    val v = currentVersion
-    require(v > 0, "cannot clone an empty table (no commits)")
-    val s = snapshotAt(v)
+    val s = live
+    require(s.version > 0, "cannot clone an empty table (no commits)")
     val c = new LogTable(spark, dest, s.schema, bucketBy, statsBy,
       checkpointInterval, clock, trackingEnabled)
     (s.files.map(_.name) ++ s.dv).foreach { n =>
@@ -1920,13 +1817,13 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     }
     // row tracking carries over: bases ride the entries verbatim (rows is
     // dropped so the clone's first commit re-allocates nothing) and the
-    // clone's high-water mark is seeded from the source, so post-clone
-    // appends on either side never reuse a shared id
+    // clone commits against an empty state holding the source's high-water
+    // mark, so post-clone appends on either side never reuse a shared id
     val entries = s.files.map(f =>
       c.FileEntry(f.name, f.bucket, f.stats, -1L, f.baseRowId, f.clustered))
-    require(c.tryCommit(None, entries, s.dv, dataChange = true,
-      newSchema = Some(s.schema), rowIdHwmFloor = s.rowIdHwm),
-      "clone target is not empty")
+    val empty = c.version0.copy(rowIdHwm = s.rowIdHwm)
+    require(c.tryCommit(empty, empty.copy(files = entries, dv = s.dv), dataChange = true,
+      txn = None), "clone target is not empty")
     s.constraints.foreach { case (n, e) => c.addConstraint(n, e) }
     c
   }

@@ -16,8 +16,15 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  private def keyCond(a: DataFrame, b: DataFrame, keys: Seq[String]): Column =
-    keys.map(k => a(k) <=> b(k)).reduce(_ && _)
+  /** `batch` with every column renamed `__b_<name>`, so it joins `target`
+    * without ambiguity; the null-safe (`<=>`) key condition between the
+    * two; and a batch column by its original name. */
+  private def aliasBatch(target: DataFrame, batch: DataFrame, keys: Seq[String])
+      : (DataFrame, Column, String => Column) = {
+    val b = batch.select(batch.columns.map(c => col(c).as("__b_" + c)).toIndexedSeq: _*)
+    val bc: String => Column = c => b("__b_" + c)
+    (b, keys.map(k => target(k) <=> bc(k)).reduce(_ && _), bc)
+  }
 
   /** Null-safe (`<=>`) left-anti: rows of `from` whose key is absent from
     * `against`. Using-column anti-joins never match null keys, which would
@@ -63,14 +70,13 @@ object Merge {
     */
   def cdcUpsert(target: DataFrame, batch: DataFrame, keys: Seq[String],
                 recencyCol: String): DataFrame = {
-    val b = batch.select(batch.columns.map(c => col(c).as("__b_" + c)).toIndexedSeq: _*)
-    val cond = keys.map(k => target(k) <=> b("__b_" + k)).reduce(_ && _)
+    val (b, cond, bc) = aliasBatch(target, batch, keys)
     val joined = target.join(b, cond, "full_outer")
     // For each output column: batch value when (no target row) OR (newer), else target value.
     val takeBatch = target(keys.head).isNull ||
-      (b("__b_" + recencyCol).isNotNull && target(recencyCol) < b("__b_" + recencyCol))
+      (bc(recencyCol).isNotNull && target(recencyCol) < bc(recencyCol))
     joined.select(target.columns.map { c =>
-      when(takeBatch, b("__b_" + c)).otherwise(target(c)).as(c)
+      when(takeBatch, bc(c)).otherwise(target(c)).as(c)
     }.toIndexedSeq: _*)
   }
 
@@ -83,12 +89,10 @@ object Merge {
   def conditionalUpdate(target: DataFrame, batch: DataFrame, keys: Seq[String],
                         updateCol: String,
                         guard: (String => Column, String => Column) => Column): DataFrame = {
-    val b = batch.select(batch.columns.map(c => col(c).as("__b_" + c)).toIndexedSeq: _*)
-    val cond = keys.map(k => target(k) <=> b("__b_" + k)).reduce(_ && _)
+    val (b, cond, bc) = aliasBatch(target, batch, keys)
     val joined = target.join(b, cond, "full_outer")
     val tc: String => Column = c => target(c)
-    val bc: String => Column = c => b("__b_" + c)
-    val matched = target(keys.head).isNotNull && b("__b_" + keys.head).isNotNull
+    val matched = target(keys.head).isNotNull && bc(keys.head).isNotNull
     joined.select(target.columns.map { c =>
       val out =
         if (c == updateCol)
@@ -116,11 +120,8 @@ object Merge {
     guard match {
       case None => antiByKey(target, batch, keys)
       case Some(g) =>
-        val b = batch.select(batch.columns.map(c => col(c).as("__b_" + c)).toIndexedSeq: _*)
-        val cond = keys.map(k => target(k) <=> b("__b_" + k)).reduce(_ && _)
-        val tc: String => Column = c => target(c)
-        val bc: String => Column = c => b("__b_" + c)
-        target.join(b, cond && g(tc, bc), "left_anti")
+        val (b, cond, bc) = aliasBatch(target, batch, keys)
+        target.join(b, cond && g(c => target(c), bc), "left_anti")
     }
 
   /** M7 — SCD Type-2 history-tracking merge (`WHEN MATCHED AND <attrs
@@ -208,15 +209,14 @@ object Merge {
     */
   def upsertColumns(target: DataFrame, batch: DataFrame, keys: Seq[String],
                     updateCols: Seq[String]): DataFrame = {
-    val b = batch.select(batch.columns.map(c => col(c).as("__b_" + c)).toIndexedSeq: _*)
-    val cond = keys.map(k => target(k) <=> b("__b_" + k)).reduce(_ && _)
+    val (b, cond, bc) = aliasBatch(target, batch, keys)
     val joined = target.join(b, cond, "full_outer")
     val inserted = target(keys.head).isNull
     joined.select(target.columns.map { c =>
       val out =
         if (updateCols.contains(c) || keys.contains(c))
-          coalesce(b("__b_" + c), target(c))
-        else when(inserted, b("__b_" + c)).otherwise(target(c))
+          coalesce(bc(c), target(c))
+        else when(inserted, bc(c)).otherwise(target(c))
       out.as(c)
     }.toIndexedSeq: _*)
   }
