@@ -11,9 +11,9 @@ import graft.ops.JobWave
   * → Silver in three awaited waves → Gold. `availableNow` drain mode, exactly
   * like the reference's batch runs (`04-bronze.py:39-40`).
   *
-  * Every Silver and Gold table is a [[LogTable]] — the commit-log form of
-  * the reference's Delta tables, maintained by the same MERGE flavors
-  * (`Silver/05-silver.py`). Single-writer-per-table discipline matches the
+  * Every Silver and Gold table is an unbucketed [[LogTable]] — the
+  * commit-log form of the reference's Delta tables, maintained by the same
+  * MERGE flavors (`Silver/05-silver.py`). Single-writer-per-table discipline matches the
   * reference; re-running the whole pipeline over re-delivered + new files
   * is idempotent end-to-end (MERGE semantics absorb duplicates) — that is
   * the two-set replay invariant its tests pin (`Test Scripts/08-batch-test.py`).
@@ -21,27 +21,26 @@ import graft.ops.JobWave
 final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String,
                       checkpointDir: String, asOf: Column) {
 
-  /** Merged tables are hash-bucketed on (a subset of) their merge key.
-    * An updating MERGE (M2, M3, M4, M5) rewrites only the buckets its batch
-    * touches — O(touched partitions) per micro-batch, the Delta
-    * file-skipping equivalent (see [[LogTable.occMerge]]). An insert-only
-    * MERGE (M1) rewrites nothing: it appends at most one file per touched
-    * bucket ([[LogTable.insertMissing]]). 16 buckets locally; size to
-    * target file counts on a real cluster. */
-  private val NBuckets = 16
-  private def t(name: String, schema: org.apache.spark.sql.types.StructType,
-                bucketKeys: Seq[String]) =
-    new LogTable(spark, s"$tablesDir/$name", schema, Some((bucketKeys, NBuckets)))
+  /** Unbucketed tables. In a medallion set each merge's batch carries keys
+    * from all of its table: with 16 hash buckets, set 2's M2–M4 merges each
+    * replaced 16 of 16 and every M1 commit wrote 16 files. The buckets
+    * bought a touched-bucket probe, a batch persist and a bucket shuffle per
+    * merge and nothing else. Unbucketed, M1 appends one file per non-empty
+    * write partition ([[LogTable.insertMissing]]) and M2–M5 rewrite the
+    * table's few files in one plan ([[LogTable.occMerge]]). Scoping a
+    * rewrite below O(table) is the work of a file- or DV-scoped MERGE. */
+  private def t(name: String, schema: org.apache.spark.sql.types.StructType) =
+    new LogTable(spark, s"$tablesDir/$name", schema)
 
-  val usersTable = t("users", Schemas.users, Seq("user_id"))
-  val gymLogsTable = t("gym_logs", Schemas.gymLogs, Seq("mac_address"))
-  val userProfileTable = t("user_profile", Schemas.userProfile, Seq("user_id"))
-  val heartRateTable = t("heart_rate", Schemas.heartRate, Seq("device_id"))
-  val workoutsTable = t("workouts", Schemas.workouts, Seq("user_id"))
-  val userBinsTable = t("user_bins", Schemas.userBins, Seq("user_id"))
-  val completedWorkoutsTable = t("completed_workouts", Schemas.completedWorkouts, Seq("user_id"))
-  val workoutBpmTable = t("workout_bpm", Schemas.workoutBpm, Seq("user_id"))
-  val summaryTable = t("workout_bpm_summary", Schemas.workoutBpmSummary, Seq("user_id"))
+  val usersTable = t("users", Schemas.users)
+  val gymLogsTable = t("gym_logs", Schemas.gymLogs)
+  val userProfileTable = t("user_profile", Schemas.userProfile)
+  val heartRateTable = t("heart_rate", Schemas.heartRate)
+  val workoutsTable = t("workouts", Schemas.workouts)
+  val userBinsTable = t("user_bins", Schemas.userBins)
+  val completedWorkoutsTable = t("completed_workouts", Schemas.completedWorkouts)
+  val workoutBpmTable = t("workout_bpm", Schemas.workoutBpm)
+  val summaryTable = t("workout_bpm_summary", Schemas.workoutBpmSummary)
 
   private def bronzeDir(name: String) = s"$tablesDir/bronze_$name"
 

@@ -8,10 +8,10 @@ import graft.ops.Relational
 /** Silver layer — typed, deduplicated business entities
   * (ref `Silver/05-silver.py`). Each job is split into
   *   - a pure *transform* (stream- and batch-applicable DataFrame program) and
-  *   - an *upsert* implementing the job's MERGE flavor against a bucketed
-  *     [[LogTable]] (the foreachBatch body; ref Upserter/CDCUpserter,
-  *     `05-silver.py:6-33`). A micro-batch that touches no bucket cuts no
-  *     version.
+  *   - an *upsert* implementing the job's MERGE flavor against an
+  *     unbucketed [[LogTable]] (the foreachBatch body; ref
+  *     Upserter/CDCUpserter, `05-silver.py:6-33`). M1 appends the batch's
+  *     new keys; M2–M4 rewrite the table's few files in one plan.
   *
   * Dedup: wave 1 drops duplicates within each micro-batch
   * (`Medallion.runSilverWave1`) and keeps no streaming state; a duplicate
@@ -74,8 +74,8 @@ object Silver {
 
   /** M1 — users / workouts / heart_rate / completed_workouts / workout_bpm
     * insert-only: the batch rows whose keys the table lacks are APPENDED
-    * ([[LogTable.insertMissing]]) — one read of the batch, no touched-bucket
-    * probe, no file rewritten. */
+    * ([[LogTable.insertMissing]]) — one read of the batch, no file
+    * rewritten. */
   def upsertInsertOnly(table: LogTable, keys: Seq[String])(batch: DataFrame): Unit = {
     table.insertMissing(batch, keys); ()
   }

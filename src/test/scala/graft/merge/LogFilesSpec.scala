@@ -191,13 +191,15 @@ class LogFilesSpec extends SparkSpec {
     assert(t.read().count() == 100L)
   }
 
+  /** `n` heart-rate rows from id `from`, 100 devices, revision `rev`. */
+  private def frame(from: Long, n: Long, rev: Long) = spark.range(from, from + n).select(
+    (col("id") % 100).as("device_id"), timestamp_seconds(col("id")).as("time"),
+    (col("id") % 90 + 50).cast("double").as("heartrate"), lit(rev).as("rev"))
+
   test("a bucketed merge with an LTZ statsBy runs 5 Spark jobs") {
     val t = new LogTable(spark, tmp("lf-jobs-"),
       StructType.fromDDL("device_id bigint, time timestamp, heartrate double, rev bigint"),
       bucketBy = Some((Seq("device_id"), 16)), statsBy = Seq("time"))
-    def frame(from: Long, n: Long, rev: Long) = spark.range(from, from + n).select(
-      (col("id") % 100).as("device_id"), timestamp_seconds(col("id")).as("time"),
-      (col("id") % 90 + 50).cast("double").as("heartrate"), lit(rev).as("rev"))
     t.append(frame(0, 20000, 0))
     val (_, jobs) = JobCounter.jobsIn(spark.sparkContext) {
       t.merge(frame(19600, 500, 1))((cur, b) =>
@@ -208,6 +210,23 @@ class LogFilesSpec extends SparkSpec {
     // files with an aggregate adds two jobs (its shuffle and its result),
     // and a probe with a distinct() one more
     assert(jobs == 5)
+  }
+
+  test("an unbucketed merge (the medallion's) runs 3 Spark jobs and persists nothing") {
+    val t = new LogTable(spark, tmp("lf-jobs-flat-"),
+      StructType.fromDDL("device_id bigint, time timestamp, heartrate double, rev bigint"))
+    t.append(frame(0, 20000, 0))
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, jobs) = JobCounter.jobsIn(spark.sparkContext) {
+      t.merge(frame(19600, 500, 1))((cur, b) =>
+        Merge.cdcUpsert(cur, b, Seq("device_id", "time"), "rev"))
+    }
+    // the join's two shuffle-map stages (AQE runs each as a job) and the
+    // write: no touched-bucket probe, no batch persist, no bucket shuffle,
+    // and the small rewrite lands in one file
+    assert(jobs == 3)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+    assert(t.liveFileNames().size == 1 && t.read().count() == 20100L)
   }
 
   test("deleteWhere on a table-commits-shaped table runs 2 Spark jobs and " +

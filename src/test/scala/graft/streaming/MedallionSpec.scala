@@ -1,6 +1,9 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -80,14 +83,34 @@ class MedallionSpec extends SparkSpec {
       .select("num_recordings").as[Long].collect()
     assert(avg1.toSeq == Seq(7L))
 
+    // layout: the nine tables are unbucketed (every file is in bucket -1),
+    // and each updating MERGE replaces its table's files in one commit
+    val named = Seq("users" -> m.usersTable, "gym_logs" -> m.gymLogsTable,
+      "user_profile" -> m.userProfileTable, "workouts" -> m.workoutsTable,
+      "heart_rate" -> m.heartRateTable, "completed_workouts" -> m.completedWorkoutsTable,
+      "workout_bpm" -> m.workoutBpmTable, "user_bins" -> m.userBinsTable,
+      "workout_bpm_summary" -> m.summaryTable)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def adds(name: String, v: Long) = {
+      val manifest = Paths.get(s"$root/tables/$name/_log").resolve(f"$v%020d.json")
+      mapper.readTree(Files.readAllBytes(manifest)).get("add").elements().asScala
+        .map(a => a.get("name").asText() -> a.get("bucket").asInt()).toMap
+    }
+    named.foreach { case (name, table) =>
+      val buckets = table.history().flatMap(v => adds(name, v)).toMap
+      val live = table.liveFileNames()
+      assert(live.nonEmpty && live.forall(f => buckets(f) == -1), name)
+    }
+    Seq("gym_logs", "user_profile", "user_bins", "workout_bpm_summary").foreach { name =>
+      val table = named.toMap.apply(name)
+      assert(table.liveFileNames().toSet == adds(name, table.currentVersion).keySet, name)
+    }
+
     // ── run 3: set 1 re-delivered whole, under new file names ──
     // Silver keeps no dedup state across micro-batches: the merges alone
     // (M1 anti-join, M2 logout guard, M3 strict recency guard) must absorb
     // every re-delivered row, leaving all nine tables as run 2 left them.
-    val tables = Seq(m.usersTable, m.gymLogsTable, m.userProfileTable, m.workoutsTable,
-      m.heartRateTable, m.completedWorkoutsTable, m.workoutBpmTable, m.userBinsTable,
-      m.summaryTable)
-    def content() = tables.map(_.read().collect().map(_.toString).sorted.toSeq)
+    def content() = named.map(_._2).map(_.read().collect().map(_.toString).sorted.toSeq)
     val afterRun2 = content()
     set1(landing, "set1-redelivered")
     m.runAll(dateLookup)
