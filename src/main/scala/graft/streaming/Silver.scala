@@ -11,7 +11,10 @@ import graft.ops.Relational
   *   - an *upsert* implementing the job's MERGE flavor against an
   *     unbucketed [[LogTable]] (the foreachBatch body; ref
   *     Upserter/CDCUpserter, `05-silver.py:6-33`). M1 appends the batch's
-  *     new keys; M2–M4 rewrite the table's few files in one plan.
+  *     new keys; M2–M4 rewrite the table's few files in one plan. An empty
+  *     batch into M2–M4 (or Gold's M5) rewrites the table unchanged and
+  *     cuts a version: O(table), where a bucketed table cut none. A
+  *     medallion set hands each of them one non-empty batch.
   *
   * Dedup: wave 1 drops duplicates within each micro-batch
   * (`Medallion.runSilverWave1`) and keeps no streaming state; a duplicate
