@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool: time named registry rows the way [[Bench]] does (forced over
@@ -12,10 +13,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * the sf dir in `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` cores (default
   * 4). Run 1 pays codegen; later runs are warm. One line per run:
   * {{{
-  * [probe] <row> run<i>: <wall> s (<jobs> jobs, <busy> s busy, <floor> s floor)
+  * [probe] <row> run<i>: <wall> s (<jobs> jobs, <busy> s busy, <floor> s floor, <n> compiles)
   * }}}
   * Busy seconds are the union of the run's job intervals (jobs that overlap
-  * in a thread wave count once); floor = wall − busy, the time no job ran. */
+  * in a thread wave count once); floor = wall − busy, the time no job ran.
+  * Compiles are the Janino compiles of generated classes during the run
+  * ([[compiles]]): a class found in Spark's codegen cache is not counted. */
 object Probe {
   /** Counts every job the session starts and keeps each finished job's
     * [start, end) interval in epoch ms. */
@@ -48,6 +51,11 @@ object Probe {
       if (e <= reach) (sum, reach) else (sum + e - math.max(s, reach), e)
     }._1
 
+  /** Janino compiles of generated classes in this JVM so far: the count of
+    * Spark's compile-time histogram, which `CodeGenerator` updates once per
+    * cache miss. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val usage = "usage: Probe <row1,row2,...> [repeats]  (sf dir from SPARK_GRAFT_SF_DIR)"
     require(args.nonEmpty, usage)
@@ -65,13 +73,14 @@ object Probe {
     spark.sparkContext.addSparkListener(clock)
     try names.foreach { name =>
       (1 to repeats).foreach { i =>
-        val j0 = clock.jobs.get(); val t0 = System.nanoTime()
+        val j0 = clock.jobs.get(); val c0 = compiles(); val t0 = System.nanoTime()
         Bench.forceAll(rows(name)(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiled = compiles() - c0
         clock.settle()
         val busy = busyMs(clock.drain()) / 1e3
         println(f"[probe] $name run$i: $wall%.2f s (${clock.jobs.get() - j0} jobs, " +
-          f"$busy%.2f s busy, ${wall - busy}%.2f s floor)")
+          f"$busy%.2f s busy, ${wall - busy}%.2f s floor, $compiled compiles)")
       }
     } finally {
       spark.sparkContext.removeSparkListener(clock)

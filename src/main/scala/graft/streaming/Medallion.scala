@@ -17,6 +17,14 @@ import graft.ops.JobWave
   * reference; re-running the whole pipeline over re-delivered + new files
   * is idempotent end-to-end (MERGE semantics absorb duplicates) — that is
   * the two-set replay invariant its tests pin (`Test Scripts/08-batch-test.py`).
+  *
+  * The four layer calls run on Spark's interpreted path (`interpreted`): a
+  * set's plans each run once over few rows, so compiling them costs more
+  * than it saves. At a tenth of the reference volume (25,380 bpm rows a
+  * set, 4 cores) a codegen'd set ran 161–198 Janino compiles and used about
+  * 34 CPU-s, most of it outside its tasks. Interpreted, a set runs 5–7
+  * compiles and about 27 CPU-s, and medallion-replay's op_gmean_ms fell
+  * from 9.39 to 7.55 s (10 of 10 alternating pairs).
   */
 final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String,
                       checkpointDir: String, asOf: Column) {
@@ -44,9 +52,28 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
 
   private def bronzeDir(name: String) = s"$tablesDir/bronze_$name"
 
+  /** Run one layer call with whole-stage codegen and generated expression
+    * classes off on the session, restoring the caller's values (set or
+    * unset) afterwards, also when the call throws. Streams started inside
+    * clone the session's conf, so they run interpreted too, as do the
+    * [[LogTable]] merges and reads the call plans. The settings are set on
+    * the caller's session, not on a clone, so its listeners keep seeing the
+    * medallion's queries; other work on that session during the call runs
+    * interpreted too. */
+  private def interpreted[T](body: => T): T = {
+    val set = spark.conf.getAll
+    val before = Medallion.Interpreted.map { case (k, _) => k -> set.get(k) }
+    Medallion.Interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Bronze: three file-stream ingestion jobs (ref 04-bronze.py:107-117),
     * drained with availableNow and awaited. */
-  def runBronze(dateLookup: DataFrame): Unit = {
+  def runBronze(dateLookup: DataFrame): Unit = interpreted {
     // FAIR pool per layer (ref 05-silver.py:92 etc. scheduler pools)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "bronze")
     val jobs = Seq(
@@ -83,7 +110,7 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     * the five targets are distinct tables, so the concurrent foreachBatch
     * MERGEs never contend, and the five availableNow micro-batch floors
     * overlap instead of summing. */
-  def runSilverWave1(): Unit = {
+  def runSilverWave1(): Unit = interpreted {
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "silver")
     val started = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.streaming.StreamingQuery]
@@ -134,7 +161,7 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     * = workout_bpm, which reads completed_workouts and so must wait for the
     * wave-2 barrier. Concurrent Spark actions from two threads are safe
     * (separate jobs, separate target tables). */
-  def runSilverWave2(): Unit = {
+  def runSilverWave2(): Unit = interpreted {
     JobWave.run(Seq(
       () => Silver.upsertUserBins(userBinsTable)(
         Silver.userBins(userProfileTable.read(), usersTable.read(), asOf)),
@@ -148,9 +175,10 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
   }
 
   /** Gold (ref 06-gold.py:100-112): summary recompute + M5 upsert. */
-  def runGold(): Unit =
+  def runGold(): Unit = interpreted {
     Gold.upsertSummary(summaryTable)(
       Gold.workoutBpmSummary(workoutBpmTable.read(), userBinsTable.read()))
+  }
 
   /** One full batch run over whatever is in the landing zone. */
   def runAll(dateLookup: DataFrame): Unit = {
@@ -166,4 +194,15 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
   /** Stream management (ref 04-bronze.py:114-116, 05-silver.py:481-484):
     * stop every active streaming query on this session. */
   def stopAllStreams(): Unit = spark.streams.active.foreach(_.stop())
+}
+
+object Medallion {
+  /** The session settings of [[Medallion]]'s layer calls. `factoryMode` is
+    * an internal Spark conf. `wholeStage=false` alone still compiled 151
+    * classes in MedallionInterpretedSpec's set 1 (7 with both): operators
+    * outside whole-stage codegen compile their own projections, predicates
+    * and orderings unless `factoryMode` says not to. */
+  private val Interpreted = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 }

@@ -32,6 +32,13 @@ import graft.ops.Relational
   * completed_workouts, workout_bpm) consume the upstream table's *current*
   * content per wave — batch recompute, matching the reference's
   * wave-awaited orchestration (`05-silver.py:486-503`).
+  *
+  * Execution: every plan here runs inside one of `Medallion`'s layer calls,
+  * on Spark's interpreted path. A set hands each plan its rows once, and
+  * few of them: 100 users, 200 workout events and 25,380 bpm readings at a
+  * tenth of the reference volume. Codegen'd, wave 1 alone compiled 107–132
+  * generated classes a set, many of them code compiled before, and took
+  * 3.5–3.7 s; interpreted it compiles 1–2 and takes 2.0–2.7 s (4 cores).
   */
 object Silver {
 
