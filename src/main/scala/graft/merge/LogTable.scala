@@ -1045,6 +1045,14 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
   private def writeChecked(df: DataFrame, prev: Snapshot): Seq[FileEntry] =
     writeFiles(withChecks(df, prev), prev.schema).map(_._1)
 
+  /** [[writeChecked]] for appends that cut no version on no rows: the
+    * files that hold rows, with their row counts; 0-row files are dropped. */
+  private def writeRows(df: DataFrame, prev: Snapshot): Seq[(FileEntry, Long)] = {
+    val (fresh, empty) = writeFiles(withChecks(df, prev), prev.schema).partition(_._2 > 0)
+    dropFiles(empty.map(_._1))
+    fresh
+  }
+
   /** Replace the table content (cuts a new version). */
   def overwrite(df: DataFrame): Unit =
     commitLoop(5) { prev =>
@@ -1158,12 +1166,16 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
     * re-derives, sees the watermark advanced, and drops out. This is what
     * makes a foreachBatch APPEND sink exactly-once — O(batch) per commit,
     * where an idempotent MERGE sink pays O(table) per batch for the same
-    * guarantee. */
+    * guarantee. The write is the batch's only read: 0-row files are
+    * dropped, and a batch that writes no row cuts no version and leaves
+    * the watermark where it was ([[insertMissing]]'s rule), so a later
+    * batchId still commits. */
   def appendOnce(df: DataFrame, appId: String, batchId: Long,
                  maxAttempts: Int = 5): Boolean =
     commitLoop(maxAttempts, txn = Some((appId, batchId))) { prev =>
-      val fresh = writeChecked(df, prev)
-      Some((prev.copy(files = prev.files ++ fresh), fresh))
+      val fresh = writeRows(df, prev).map(_._1)
+      if (fresh.isEmpty) None
+      else Some((prev.copy(files = prev.files ++ fresh), fresh))
     }._2
 
   /** MERGE: [[occMerge]] without a transaction id — unbucketed = full
@@ -1219,9 +1231,7 @@ final class LogTable(spark: SparkSession, root: String, schema: StructType,
       val survivors =
         if (prev.files.isEmpty) batch
         else Merge.antiByKey(batch, scan(prev.files, prev.dv, prev.schema), keys)
-      val (fresh, empty) = writeFiles(withChecks(survivors, prev), prev.schema)
-        .partition(_._2 > 0)
-      dropFiles(empty.map(_._1))
+      val fresh = writeRows(survivors, prev)
       added = fresh.map(_._2).sum
       if (fresh.isEmpty) None // every key already present: no version cut
       else Some((prev.copy(files = prev.files ++ fresh.map(_._1)), fresh.map(_._1)))

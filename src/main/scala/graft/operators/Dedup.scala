@@ -514,12 +514,12 @@ object Dedup {
     // Size ∝ rows/64k keeps partitions meaningful at any scale: 8 locally,
     // thousands at 100 TB. Restored before returning.
     val spark = pairs.sparkSession
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val width = math.max(8L, seedLabels.count() / 65536L).toString
-    if (width.toLong < prevShuffle.toLong)
-      spark.conf.set("spark.sql.shuffle.partitions", width)
-    try propagateLoop(pairs, seedLabels, maxIters, reliableCheckpoint)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val key = "spark.sql.shuffle.partitions"
+    val width = math.max(8L, seedLabels.count() / 65536L)
+    val narrower = if (width < spark.conf.get(key).toLong) Seq(key -> width.toString) else Nil
+    graft.ops.SessionConf.scoped(spark, narrower: _*) {
+      propagateLoop(pairs, seedLabels, maxIters, reliableCheckpoint)
+    }
   }
 
   private def propagateLoop(pairs: DataFrame, seedLabels: DataFrame,

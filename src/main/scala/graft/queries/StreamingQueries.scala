@@ -76,13 +76,10 @@ object StreamingQueries {
   /** Run `body` with test-scale streaming state partitioning: state-store
     * count = shuffle partitions at query start (a stream-stream join opens 4
     * stores per partition); fewer, larger state partitions beat many tiny
-    * checkpoint files locally. Restored afterwards. */
+    * checkpoint files locally. Restored afterwards (set or unset). */
   private def withStreamConf[T](spark: SparkSession, width: Int = statePartitions)
-                               (body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+                               (body: => T): T =
+    graft.ops.SessionConf.scoped(spark, "spark.sql.shuffle.partitions" -> width.toString)(body)
 
   /** Run a streaming transform of the events table to completion, return the
     * collected sink table. */
@@ -552,25 +549,22 @@ object StreamingQueries {
       import spark.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val winUs = 72L * 3600 * 1000000
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = spark.conf.getOption(provKey)
-      spark.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val perUser = try drain(spark, dir, "append") { ev =>
-        val idx = when(col("event_type") === "view", 0)
-          .when(col("event_type") === "click", 1).otherwise(2)
-        ev.filter(col("event_type").isin("view", "click", "purchase"))
-          .withWatermark("ts_utc", "0 seconds")
-          .select(col("user_id"), idx.cast("int").as("type_idx"), col("ts_us"))
-          .as[graft.streaming.StreamingFunnel.FunnelEvent]
-          .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-          .transformWithState(
-            new graft.streaming.FunnelProcessor(3, winUs),
-            TimeMode.EventTime(), OutputMode.Append())
-          .toDF()
-      } finally prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
+      val perUser = graft.ops.SessionConf.scoped(spark,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        drain(spark, dir, "append") { ev =>
+          val idx = when(col("event_type") === "view", 0)
+            .when(col("event_type") === "click", 1).otherwise(2)
+          ev.filter(col("event_type").isin("view", "click", "purchase"))
+            .withWatermark("ts_utc", "0 seconds")
+            .select(col("user_id"), idx.cast("int").as("type_idx"), col("ts_us"))
+            .as[graft.streaming.StreamingFunnel.FunnelEvent]
+            .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
+            .transformWithState(
+              new graft.streaming.FunnelProcessor(3, winUs),
+              TimeMode.EventTime(), OutputMode.Append())
+            .toDF()
+        }
       }
       val names = array(lit("view"), lit("click"), lit("purchase"))
       perUser.select(explode(sequence(lit(1), col("reached"))).as("i"))
@@ -603,9 +597,11 @@ object StreamingQueries {
     * pinned simultaneously) — phrased over testdata and EXECUTED THROUGH
     * THE REAL STREAMING WAVES, not batch ops:
     *
-    * landing (two parquet sets) → bronze (file-stream append sink +
-    * checkpoint, run 2 reads only the new set) → silver (streaming
-    * watermarked dedup → foreachBatch MERGE into bucketed [[LogTable]]s:
+    * landing (two parquet sets) → bronze (file stream into an append-only
+    * [[LogTable]] through the `graft-logtable` sink, one txn commit per
+    * micro-batch; run 2 reads only the new set) → silver (the Bronze log
+    * streamed by version → watermarked dedup → foreachBatch MERGE into
+    * bucketed [[LogTable]]s:
     * events M1 insert-only on event_id, orders M3 CDC upsert with
     * updated_day recency guard) → gold (per-user summary recompute + M5
     * column-list upsert) — the `Medallion.runAll` wave order on the
@@ -695,17 +691,16 @@ object StreamingQueries {
         // Start-all-then-await per wave (ref 05-silver.py:486-503): the two
         // streams of each wave write distinct targets, so their micro-batch
         // floors overlap instead of summing.
-        // bronze: landing → append-only parquet (file sink + checkpoint)
+        // bronze: landing → append-only LogTable (one txn commit per batch)
+        def bronze(landing: java.nio.file.Path, ddl: String, table: String, ckpt: String) =
+          startDrain(spark.readStream.schema(ddl).parquet(landing.toString)
+            .writeStream.format("graft-logtable").option("path", table)
+            .option("appId", "s13-bronze").option("checkpointLocation", ckpt))
+        awaitAll(bronze(evLanding, evDdl, bronzeEv, ckptBronzeEv),
+          bronze(ordLanding, ordDdl, bronzeOrd, ckptBronzeOrd))
+        // silver wave: bronze log stream → watermarked dedup → foreachBatch MERGE
         awaitAll(
-          startDrain(spark.readStream.schema(evDdl).parquet(evLanding.toString)
-            .writeStream.format("parquet").option("path", bronzeEv)
-            .option("checkpointLocation", ckptBronzeEv).outputMode("append")),
-          startDrain(spark.readStream.schema(ordDdl).parquet(ordLanding.toString)
-            .writeStream.format("parquet").option("path", bronzeOrd)
-            .option("checkpointLocation", ckptBronzeOrd).outputMode("append")))
-        // silver wave: bronze stream → watermarked dedup → foreachBatch MERGE
-        awaitAll(
-          startDrain(spark.readStream.schema(evDdl).parquet(bronzeEv)
+          startDrain(spark.readStream.format("graft-logtable").schema(evDdl).load(bronzeEv)
             .withColumn("ts_utc", timestamp_micros(col("ts_us")))
             .withWatermark("ts_utc", "3650 days")
             .dropDuplicates(Seq("event_id")).drop("ts_utc")
@@ -714,7 +709,7 @@ object StreamingQueries {
             .foreachBatch { (b: DataFrame, _: Long) =>
               silverEvents.insertMissing(b, Seq("event_id")); ()
             }),
-          startDrain(spark.readStream.schema(ordDdl).parquet(bronzeOrd)
+          startDrain(spark.readStream.format("graft-logtable").schema(ordDdl).load(bronzeOrd)
             .withColumn("upd_utc", timestamp_micros(col("updated_day") * 86400000000L))
             .withWatermark("upd_utc", "36500 days")
             .dropDuplicates(Seq("o_orderkey", "updated_day")).drop("upd_utc")

@@ -194,14 +194,13 @@ object LogTableSourceProvider {
 
 /** Streaming sink over a [[graft.merge.LogTable]]: each micro-batch is one
   * [[LogTable.appendOnce]] txn commit — replays no-op, so the sink is
-  * exactly-once without any state beside the log itself. */
+  * exactly-once without any state beside the log itself. The write reads
+  * the batch once; an empty batch cuts no version. */
 private[sources] final class LogTableSink(sqlContext: SQLContext, path: String,
                                           appId: String) extends Sink {
   override def addBatch(batchId: Long, data: org.apache.spark.sql.DataFrame): Unit = {
-    val batch = GraftStreamingBridge.asBatch(data)
-    if (batch.isEmpty) return // no empty commits; a later batch advances the watermark
-    val t = new LogTable(sqlContext.sparkSession, path, data.schema)
-    t.appendOnce(batch, appId, batchId)
+    new LogTable(sqlContext.sparkSession, path, data.schema)
+      .appendOnce(GraftStreamingBridge.asBatch(data), appId, batchId)
     ()
   }
   override def toString: String = s"LogTableSink[$path]"

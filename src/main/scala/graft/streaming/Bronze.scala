@@ -2,39 +2,43 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Bronze layer — incremental file ingestion with lineage columns
   * (ref `Bronze/04-bronze.py`). Databricks Auto Loader (`cloudFiles`) is
   * replaced by Spark's built-in file streaming source, which gives the same
   * incremental-discovery semantics (offsets = already-processed files,
-  * tracked in the checkpoint).
+  * tracked in the checkpoint). The streams land in Bronze
+  * [[graft.merge.LogTable]]s through the `graft-logtable` sink
+  * (`Medallion.runBronze`): one txn commit per micro-batch, the append-only
+  * Delta table of the reference, and Silver streams them back by version.
   *
-  * Scale: file listing is the bottleneck at very large landing zones — the
-  * option `maxFilesPerTrigger` bounds per-batch work exactly like the
-  * reference (`04-bronze.py:22`); for 100 TB landing zones, partition the
-  * landing directory by arrival date so the source lists only fresh prefixes.
+  * Scale: file listing is the bottleneck at very large landing zones —
+  * [[MaxFilesPerTrigger]] bounds per-batch work like the reference
+  * (`04-bronze.py:22`); for 100 TB landing zones, partition the landing
+  * directory by arrival date so the source lists only fresh prefixes.
   */
 object Bronze {
 
+  /** Files one micro-batch admits: the reference's config default
+    * (`Config/01-config.py:8`). */
+  private val MaxFilesPerTrigger = 1000
+
   /** Streaming CSV source with explicit schema + lineage columns
     * (ref `04-bronze.py:19-28`: load_time, source_file). */
-  def csvStream(spark: SparkSession, dir: String, schema: StructType,
-                maxFilesPerTrigger: Int = 1000): DataFrame =
+  def csvStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream
       .schema(schema)
       .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .csv(dir)
       .transform(withLineage)
 
   /** Streaming JSON source (ref `04-bronze.py:79-84`). */
-  def jsonStream(spark: SparkSession, dir: String, schema: StructType,
-                 maxFilesPerTrigger: Int = 1000): DataFrame =
+  def jsonStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .json(dir)
       .transform(withLineage)
 
@@ -53,23 +57,4 @@ object Bronze {
       to_date((col("timestamp") / 1000).cast("timestamp")) === col("date"),
       "left")
       .drop("date")
-
-  /** Append sink with checkpoint + query name (ref `04-bronze.py:31-42`);
-    * parquet replaces Delta. Caller picks the trigger: availableNow for
-    * batch-drain runs, processing-time for continuous. */
-  def appendSink(df: DataFrame, table: String, checkpoint: String,
-                 queryName: String, availableNow: Boolean = true,
-                 partitionBy: Seq[String] = Seq.empty): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w0 = df.writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .option("path", table)
-      .queryName(queryName)
-    // physical partitioning drives downstream partition pruning, mirroring
-    // the reference's PARTITIONED BY (topic, week_part) multiplex table
-    // (Setup/02-setup.py:71) + topic filters (Silver/05-silver.py:177)
-    val w = if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0
-    if (availableNow) w.trigger(Trigger.AvailableNow()) else w.trigger(Trigger.ProcessingTime("5 seconds"))
-  }
 }

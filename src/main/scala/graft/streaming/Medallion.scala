@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import graft.merge.LogTable
 import graft.ops.JobWave
 
@@ -11,9 +12,11 @@ import graft.ops.JobWave
   * → Silver in three awaited waves → Gold. `availableNow` drain mode, exactly
   * like the reference's batch runs (`04-bronze.py:39-40`).
   *
-  * Every Silver and Gold table is an unbucketed [[LogTable]] — the
-  * commit-log form of the reference's Delta tables, maintained by the same
-  * MERGE flavors (`Silver/05-silver.py`). Single-writer-per-table discipline matches the
+  * Every table is an unbucketed [[LogTable]] — the commit-log form of the
+  * reference's Delta tables. Bronze's are appended by the `graft-logtable`
+  * streaming sink and streamed into Silver by version; Silver's and Gold's
+  * are maintained by the reference's MERGE flavors (`Silver/05-silver.py`).
+  * Single-writer-per-table discipline matches the
   * reference; re-running the whole pipeline over re-delivered + new files
   * is idempotent end-to-end (MERGE semantics absorb duplicates) — that is
   * the two-set replay invariant its tests pin (`Test Scripts/08-batch-test.py`).
@@ -37,7 +40,7 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     * write partition ([[LogTable.insertMissing]]) and M2–M5 rewrite the
     * table's few files in one plan ([[LogTable.occMerge]]). Scoping a
     * rewrite below O(table) is the work of a file- or DV-scoped MERGE. */
-  private def t(name: String, schema: org.apache.spark.sql.types.StructType) =
+  private def t(name: String, schema: StructType) =
     new LogTable(spark, s"$tablesDir/$name", schema)
 
   val usersTable = t("users", Schemas.users)
@@ -53,26 +56,16 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
   private def bronzeDir(name: String) = s"$tablesDir/bronze_$name"
 
   /** Run one layer call with whole-stage codegen and generated expression
-    * classes off on the session, restoring the caller's values (set or
-    * unset) afterwards, also when the call throws. Streams started inside
-    * clone the session's conf, so they run interpreted too, as do the
-    * [[LogTable]] merges and reads the call plans. The settings are set on
-    * the caller's session, not on a clone, so its listeners keep seeing the
-    * medallion's queries; other work on that session during the call runs
-    * interpreted too. */
-  private def interpreted[T](body: => T): T = {
-    val set = spark.conf.getAll
-    val before = Medallion.Interpreted.map { case (k, _) => k -> set.get(k) }
-    Medallion.Interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+    * classes off on the caller's session ([[graft.ops.SessionConf.scoped]]).
+    * Streams started inside clone the session's conf, so they run
+    * interpreted too, as do the [[LogTable]] merges and reads the call
+    * plans. */
+  private def interpreted[T](body: => T): T =
+    graft.ops.SessionConf.scoped(spark, Medallion.Interpreted: _*)(body)
 
   /** Bronze: three file-stream ingestion jobs (ref 04-bronze.py:107-117),
-    * drained with availableNow and awaited. */
+    * each appending to its Bronze [[LogTable]] through the `graft-logtable`
+    * sink, drained with availableNow and awaited. */
   def runBronze(dateLookup: DataFrame): Unit = interpreted {
     // FAIR pool per layer (ref 05-silver.py:92 etc. scheduler pools)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "bronze")
@@ -85,19 +78,22 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
         Bronze.jsonStream(spark, s"$landingDir/multiplex", Schemas.kafkaMultiplexJson),
         dateLookup) -> "multiplex")
     val queries = jobs.map { case (df, name) =>
-      // mirrors the reference's PARTITIONED BY (topic, week_part)
-      // (Setup/02-setup.py:71): topic demux AND week_part filters both prune
-      val parts = if (name == "multiplex") Seq("topic", "week_part") else Seq.empty[String]
-      Bronze.appendSink(df, bronzeDir(name), s"$checkpointDir/bronze_$name",
-        s"bronze_$name", partitionBy = parts).start()
+      df.writeStream.format("graft-logtable")
+        .queryName(s"bronze_$name")
+        .option("appId", s"bronze_$name")
+        .option("checkpointLocation", s"$checkpointDir/bronze_$name")
+        .trigger(Trigger.AvailableNow())
+        .start(bronzeDir(name))
     }
     queries.foreach(_.awaitTermination())
   }
 
   /** Silver wave 1 (ref 05-silver.py:490-495): five streaming upsert jobs.
-    * Each streams the append-only bronze parquet directory (file source ≡
-    * append-only Delta stream) through its transform into a foreachBatch
-    * MERGE, in append mode and without a state store: each micro-batch is
+    * Each streams its Bronze [[LogTable]] through the `graft-logtable`
+    * source (version offsets, the log read as an append-only Delta stream)
+    * through its transform into a foreachBatch MERGE. The three multiplex
+    * streams each read every multiplex row and keep their `topic`. They
+    * run in append mode and without a state store: each micro-batch is
     * deduplicated on the stream's keys, and a re-delivery in a later batch
     * is absorbed by the idempotent merge (M1's anti-join, M2's logout guard,
     * M3's strict recency guard) — Structured Streaming's exactly-once
@@ -124,15 +120,16 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    val regUsers = spark.readStream
-      .schema(Schemas.registeredUsersCsv.add("load_time", "timestamp").add("source_file", "string"))
-      .parquet(bronzeDir("registered_users"))
+    // a Bronze table's schema: its landing schema + the lineage columns
+    def lineage(landing: StructType) =
+      landing.add("load_time", "timestamp").add("source_file", "string")
+    def bronze(name: String, schema: StructType) =
+      spark.readStream.format("graft-logtable").schema(schema).load(bronzeDir(name))
+    val regUsers = bronze("registered_users", lineage(Schemas.registeredUsersCsv))
     run("users", Silver.usersTransform(regUsers),
       Seq("user_id", "device_id"))(Silver.upsertInsertOnly(usersTable, Seq("user_id")))
 
-    val gymBz = spark.readStream
-      .schema(Schemas.gymLoginsCsv.add("load_time", "timestamp").add("source_file", "string"))
-      .parquet(bronzeDir("gym_logins"))
+    val gymBz = bronze("gym_logins", lineage(Schemas.gymLoginsCsv))
     // dedup on the FULL row (not the reference's (mac,gym,login) key,
     // 05-silver.py:126-127): a key-only dedup would keep an arbitrary one of
     // a batch's login row and its logout-extension re-delivery. Exact-
@@ -141,10 +138,9 @@ final class Medallion(spark: SparkSession, landingDir: String, tablesDir: String
     run("gym_logs", Silver.gymLogsTransform(gymBz),
       Seq("mac_address", "gym", "login", "logout"))(Silver.upsertGymLogs(gymLogsTable))
 
-    def multiplexStream = spark.readStream
-      .schema(Schemas.kafkaMultiplexJson
-        .add("load_time", "timestamp").add("source_file", "string").add("week_part", "string"))
-      .parquet(bronzeDir("multiplex"))
+    // week_part comes after the lineage: Bronze.enrichWeekPart joins it on
+    def multiplexStream =
+      bronze("multiplex", lineage(Schemas.kafkaMultiplexJson).add("week_part", "string"))
     run("user_profile", Silver.userProfileTransform(multiplexStream),
       Seq("user_id", "updated"))(Silver.upsertUserProfile(userProfileTable))
     run("workouts", Silver.workoutsTransform(multiplexStream),

@@ -24,11 +24,13 @@ import graft.ops.Relational
   * keys are new ([[LogTable.insertMissing]]): a re-delivered batch cuts no
   * version, and no M1 commit rewrites a file.
   *
-  * Streaming wiring: bronze tables are append-only parquet directories, so
-  * the silver sources are plain file streams over them — the OSS equivalent
-  * of the reference's append-only Delta stream (`05-silver.py:71-76`; its
-  * `ignoreDeletes`/`startingVersion` options have no file-source counterpart
-  * and are no-ops in an append-only layout). Silver→silver hops (user_bins,
+  * Streaming wiring: bronze tables are append-only [[LogTable]]s, so the
+  * silver sources stream their logs by version through the
+  * `graft-logtable` source — the reference's append-only Delta stream
+  * (`05-silver.py:71-76`; its `ignoreDeletes` is a no-op on a log that only
+  * ever appends, and `startingVersion` is the checkpointed offset). The
+  * three multiplex jobs each read every multiplex row and demux on `topic`
+  * (no partition layout prunes it). Silver→silver hops (user_bins,
   * completed_workouts, workout_bpm) consume the upstream table's *current*
   * content per wave — batch recompute, matching the reference's
   * wave-awaited orchestration (`05-silver.py:486-503`).

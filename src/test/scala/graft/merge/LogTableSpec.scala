@@ -314,6 +314,26 @@ class LogTableSpec extends SparkSpec {
     assert(!t.appendOnce(Seq((97L, "dup")).toDF("k", "v"), "sink", 1L))
   }
 
+  test("appendOnce of an empty batch cuts no version, leaves no file and " +
+      "keeps the watermark, so a later batchId still commits") {
+    val root = tmp("log-txn-empty-")
+    val t = new LogTable(spark, root, s2)
+    def dataFiles() = {
+      val dir = java.nio.file.Paths.get(root, "files")
+      if (!Files.exists(dir)) Seq.empty
+      else Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    }
+    // three write partitions, none with a row
+    val empty = Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(3).filter($"k" < 0)
+    assert(!t.appendOnce(empty, "sink", 0L))
+    assert(t.history().isEmpty && t.lastTxn("sink") == -1L)
+    assert(dataFiles().isEmpty, s"0-row files left behind: ${dataFiles()}")
+    assert(t.appendOnce(Seq((1L, "a")).toDF("k", "v").repartition(3), "sink", 1L)) // v1
+    assert(t.history() == Seq(1L) && t.lastTxn("sink") == 1L)
+    assert(rows(t.read()) == Seq((1L, "a")))
+    assert(dataFiles() == t.liveFileNames(), "only the one non-empty file is kept")
+  }
+
   test("vacuum drops old versions' manifests and unreferenced files; " +
       "retained versions intact; crashed-write leftovers collected") {
     val root = tmp("log-vac-")

@@ -94,14 +94,14 @@ class MedallionInterpretedSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30000000000L
       while (progress.size < 8 && System.nanoTime() < deadline) Thread.sleep(10)
       // one batch per Bronze stream and per wave-1 stream; the landing set
-      // has 2 registered users, 1 gym login and 14 multiplex lines, which
-      // Silver reads by their Bronze `topic` partition (2 user_info,
-      // 2 workout, 10 bpm)
+      // has 2 registered users, 1 gym login and 14 multiplex lines, and
+      // each of the three multiplex Silver streams reads all 14 and keeps
+      // its own `topic` (2 user_info, 2 workout, 10 bpm)
       assert(progress.asScala.toSeq.sorted == Seq(
         "bronze_gym_logins" -> 1L, "bronze_multiplex" -> 14L,
         "bronze_registered_users" -> 2L, "silver_gym_logs" -> 1L,
-        "silver_heart_rate" -> 10L, "silver_user_profile" -> 2L,
-        "silver_users" -> 2L, "silver_workouts" -> 2L))
+        "silver_heart_rate" -> 14L, "silver_user_profile" -> 14L,
+        "silver_users" -> 2L, "silver_workouts" -> 14L))
     } finally spark.streams.removeListener(listener)
   }
 }

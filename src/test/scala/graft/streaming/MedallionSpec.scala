@@ -116,4 +116,30 @@ class MedallionSpec extends SparkSpec {
     m.runAll(dateLookup)
     assert(content() == afterRun2)
   }
+
+  test("Bronze tables are commit logs: no file-sink metadata, and a drain " +
+      "with no new landing file cuts no Bronze version") {
+    val root = Files.createTempDirectory("medallion-bronze-")
+    val landing = root.resolve("landing")
+    val m = new Medallion(spark, landing.toString, s"$root/tables", s"$root/ckpt",
+      lit("2024-01-15").cast("date"))
+    set1(landing)
+    m.runAll(dateLookup)
+    val bronze = Files.list(root.resolve("tables")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("bronze_")).toSeq
+      .sortBy(_.getFileName.toString)
+    assert(bronze.map(_.getFileName.toString) ==
+      Seq("bronze_gym_logins", "bronze_multiplex", "bronze_registered_users"))
+    bronze.foreach { d =>
+      assert(Files.isDirectory(d.resolve("_log")), d)
+      assert(!Files.exists(d.resolve("_spark_metadata")), d)
+    }
+    def versions() = bronze.map { d =>
+      new graft.merge.LogTable(spark, d.toString,
+        graft.merge.LogTable.readSchema(d.toString).get).currentVersion
+    }
+    assert(versions() == Seq(1L, 1L, 1L))
+    m.runBronze(dateLookup)
+    assert(versions() == Seq(1L, 1L, 1L))
+  }
 }
